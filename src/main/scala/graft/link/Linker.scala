@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextNorm
-import graft.ops.Hashing
+import graft.ops.{BucketPairs, Hashing}
 import graft.schema.{CanonicalTriple, Triple}
 
 /** Entity linking + canonicalization (J8, SURVEY.md §2.4): resolve mention
@@ -14,12 +14,12 @@ import graft.schema.{CanonicalTriple, Triple}
   *
   * Scale design:
   *  - width-normalization (processSent) collapses trivial variants BEFORE
-  *    hashing, so the LSH self-join only carries genuinely distinct surfaces
+  *    hashing, so LSH pairing only carries genuinely distinct surfaces
   *    (entity vocabulary ≪ corpus size);
   *  - band fan-out is `bands` rows per surface — shuffle O(surfaces × bands);
-  *  - the self-join is keyed by (band, bucket); hot buckets are bounded by a
-  *    per-bucket pair cap (skew guard) and AQE skew-join splitting handles
-  *    residual imbalance;
+  *  - candidate pairs come from [[graft.ops.BucketPairs]]: grouped all-pairs
+  *    inside buckets up to `bucketCap`, bounded sorted-neighborhood pairing
+  *    inside hotter ones;
   *  - canonical id = min id in component (deterministic under any
   *    partitioning).
   */
@@ -39,7 +39,7 @@ object Linker {
   }
 
   /** LSH band keys of a normalized surface — the ONE definition shared by
-    * the batch self-join and the incremental stream attach
+    * the batch pairing and the incremental stream attach
     * ([[graft.streaming.StreamLink]]): `bands` keys, each a splitmix-
     * finalized fold over its k/bands minhash lanes. */
   def bandKeysOf(norm: String, k: Int = 8, bands: Int = 4,
@@ -55,14 +55,13 @@ object Linker {
   /** Candidate same-entity edges via minhash/LSH over char 2-gram shingles
     * of the normalized surface, verified by true Jaccard >= threshold.
     *
-    * Hot-key handling (north_rule): a bucket with more than `bucketCap`
-    * members would produce O(n²) pairs in the self-join. Instead of dropping
-    * it, oversized buckets switch to SORTED-NEIGHBORHOOD pairing: members
-    * are ordered by normalized surface and each pairs only with its next
-    * `neighborWindow` neighbors — near-identical surfaces sort adjacently,
-    * so recall stays high while pair count is bounded to O(n·W). Small
-    * buckets keep the exact all-pairs join; AQE skew-join splitting covers
-    * residual imbalance.
+    * Hot-key handling (north_rule): pairs come from
+    * [[graft.ops.BucketPairs]] — all pairs inside buckets of at most
+    * `bucketCap` members; larger buckets are not dropped but switch to
+    * SORTED-NEIGHBORHOOD pairing ordered by normalized surface, each member
+    * pairing only with its next `neighborWindow` neighbors — near-identical
+    * surfaces sort adjacently, so recall stays high while the pair count is
+    * bounded to O(n·W).
     */
   def candidateEdges(surf: Dataset[SurfaceKey], k: Int = 8, bands: Int = 4,
       shingleN: Int = 2, threshold: Double = 0.6, bucketCap: Int = 1000,
@@ -96,52 +95,10 @@ object Linker {
       bandKeysOf(sk.norm, k, bands, shingleN).map(key => (key, sk.id, sk.norm))
     }.toDF("bucket", "id", "norm").persist()
 
-    // HOT bucket list as a BOUNDED driver collect (the Dedup.splitHotBuckets
-    // discipline): the small/hot split becomes a broadcast filter instead of
-    // a size-attach join over the whole fan-out, and the hot-path probe is a
-    // driver-side emptiness check instead of an executeTake job
-    val hotLimit = 2000000
-    val hot = banded.groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > bucketCap).select("bucket")
-      .limit(hotLimit + 1).as[Long].collect()
-    require(hot.length <= hotLimit,
-      s"over $hotLimit hot band values (cap $bucketCap) — pathological " +
-        "banding; raise bucketCap or re-key")
-    val hotDf = spark.createDataset(hot.toSeq).toDF("bucket")
-    val small =
-      if (hot.isEmpty) banded
-      else banded.join(broadcast(hotDf), Seq("bucket"), "left_anti")
-
-    // small-bucket pairs via ONE grouped aggregation (member lists bounded
-    // by bucketCap) instead of the size-attach join + sort-merge self-join;
-    // pair multiset identical to the a.id < b.id join
-    val smallPairs = small
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("norm"))).as("ms"))
-      .select(col("ms")).as[Seq[(Long, String)]]
-      .flatMap { ms =>
-        val a = ms.toArray.sortBy(_._1)
-        for {
-          i <- (0 until a.length - 1).iterator
-          j <- (i + 1 until a.length).iterator
-          if a(i)._1 != a(j)._1 // equal-id copies never self-pair
-        } yield (a(i)._1, a(j)._1, a(i)._2, a(j)._2)
-      }.toDF("src", "dst", "norm_a", "norm_b")
-
-    // sorted-neighborhood inside hot buckets: rank by (norm, id), pair with
-    // the next `neighborWindow` ranks only. The rank itself is computed with
-    // the two-pass bounded scheme in [[graft.ops.Neighborhood]] — a naive
-    // per-bucket window would place the entire oversized bucket on ONE task
-    // (e.g. a billion empty-string norms sorting on one core)
-    val bigPairs =
-      if (hot.isEmpty) smallPairs.limit(0) // driver-side probe; no rank jobs
-      else graft.ops.Neighborhood.sortedNeighborhoodPairs(
-          banded.join(broadcast(hotDf), Seq("bucket"), "left_semi")
-            .select(col("bucket"), col("id"), col("norm").as("sort")), neighborWindow)
-        .select(col("src"), col("dst"),
-          col("sort_a").as("norm_a"), col("sort_b").as("norm_b"))
-
-    val edges = smallPairs.unionByName(bigPairs)
+    // hot buckets rank by normalized surface
+    val edges = BucketPairs(banded, Seq("bucket"), bucketCap, neighborWindow,
+        _.withColumn("sort", col("norm")))
+      .select(col("id_a").as("src"), col("id_b").as("dst"), col("norm_a"), col("norm_b"))
       .distinct()
       .as[(Long, Long, String, String)]
       .flatMap { case (src, dst, na, nb) =>

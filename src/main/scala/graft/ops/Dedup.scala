@@ -11,14 +11,17 @@ import graft.link.ConnectedComponents
   * Scale design notes (100 TB):
   *  - exact dedup is ONE hash-aggregate on a 64-bit fingerprint (partial +
   *    final, map-side combine) — never a sort, never a window over all rows;
-  *  - near-dup methods (minhash/LSH, simhash) fan out to (docId, bucketKey)
-  *    pairs and self-join on the bucket key, so shuffle volume is
-  *    O(docs × bands), not O(docs²); candidate pairs are then verified;
+  *  - near-dup methods (minhash/LSH, embedding LSH, simhash) fan out to
+  *    (docId, bucketKey) rows and pair within buckets through
+  *    [[BucketPairs]], so shuffle volume is O(docs × bands), not O(docs²);
+  *    candidate pairs are then verified;
   *  - duplicate CLUSTERS (not just pairs) are resolved with the same
   *    large-star/small-star connected-components used by entity linking, so
   *    keeper selection is transitive-closure-correct.
   */
 object Dedup {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
 
   /** Measured run geometry + volumes of one [[embeddingCosinePairsLsh]]
     * invocation: the scale-bench evidence that candidate volume grows
@@ -148,47 +151,6 @@ object Dedup {
   final case class MinhashStats(docs: Long, buckets: Long, hotBuckets: Long,
       hotRows: Long, candidates: Long, verified: Long)
 
-  /** The shared small/hot bucket split of the banded LSH family
-    * ([[minhashLsh]], [[embeddingCosinePairsLsh]], [[simhashPairs]]):
-    * aggregate per-(band, key) bucket sizes, collect the HOT-bucket list to
-    * the driver (bounded: at most fanoutRows/bucketCap buckets can exceed
-    * the cap — e.g. ≤ 41k at 500k vectors × 165 bands, cap 2000), and split
-    * the fan-out with BROADCAST anti/semi joins. The fan-out is never
-    * re-shuffled just to learn its own bucket sizes (the previous
-    * size-attach join moved 82M rows at 500k vectors), and the hot-path
-    * probe is a driver-side emptiness check instead of a Spark job.
-    * `sizes` is persisted only when a stats hook will re-aggregate it;
-    * callers release it via `releaseSizes()` after the stats read. */
-  private[graft] final case class BucketSplit(small: DataFrame,
-      hotSubset: DataFrame, hotEmpty: Boolean, sizes: DataFrame,
-      releaseSizes: () => Unit)
-
-  private[graft] def splitHotBuckets(banded: DataFrame, bandCol: String,
-      keyCol: String, bucketCap: Int, persistSizes: Boolean): BucketSplit = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    val sizes = banded.groupBy(bandCol, keyCol).agg(count(lit(1)).as("bucket_n"))
-    val sizesM = if (persistSizes) sizes.persist() else sizes
-    // bounded collect (the Neighborhood 2M discipline): the limit caps
-    // driver memory BEFORE anything is fetched, and hitting it fails loudly
-    // instead of broadcasting a multi-GB hot list (worst case without the
-    // guard: O(fanoutRows/bucketCap) entries on a heavily duplicated corpus)
-    val hotLimit = 2000000
-    val hot = sizesM.filter(col("bucket_n") > bucketCap)
-      .select(col(bandCol), col(keyCol))
-      .limit(hotLimit + 1).as[(Int, Long)].collect()
-    require(hot.length <= hotLimit,
-      s"over $hotLimit buckets exceed bucketCap=$bucketCap — pathological " +
-        "banding (near-constant keys?); raise bucketCap or re-key the fan-out")
-    val hotDf = spark.createDataset(hot.toSeq).toDF(bandCol, keyCol)
-    val small =
-      if (hot.isEmpty) banded
-      else banded.join(broadcast(hotDf), Seq(bandCol, keyCol), "left_anti")
-    val hotSubset = banded.join(broadcast(hotDf), Seq(bandCol, keyCol), "left_semi")
-    BucketSplit(small, hotSubset, hot.isEmpty, sizesM,
-      () => if (persistSizes) { sizesM.unpersist(); () } else ())
-  }
-
   /** Exact dedup: keep the smallest id per fingerprint group.
     * Returns (idCol, keeper, groupSize). */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -267,17 +229,16 @@ object Dedup {
   }
 
   /** MinHash+LSH near-dup clustering: shingle → k minhash lanes → `bands`
-    * banded keys → bucket self-join → jaccard-verified edges → connected
-    * components. Returns (docId, keeper).
+    * banded keys → bucket pairs ([[BucketPairs]]) → jaccard-verified edges →
+    * connected components. Returns (docId, keeper).
     *
-    * Hot-bucket guard (same discipline as `graft.link.Linker.candidateEdges`):
-    * a boilerplate-heavy bucket of n docs would emit O(n²) pairs in the
-    * self-join. Buckets above `bucketCap` switch to sorted-neighborhood
-    * pairing over the full minhash signature ([[Neighborhood]] — bounded
-    * two-pass rank, block join): near-identical docs have near-identical
-    * signatures and sort adjacently, so recall stays high at O(n·W) pairs.
-    * False candidates from either path are removed by exact-jaccard
-    * verification, so the cap changes cost, not correctness of emitted edges.
+    * Hot-bucket guard: a boilerplate-heavy bucket of n docs would emit O(n²)
+    * pairs. Buckets above `bucketCap` switch to sorted-neighborhood pairing
+    * over the full minhash signature: near-identical docs have
+    * near-identical signatures and sort adjacently, so recall stays high at
+    * O(n·W) pairs. False candidates from either path are removed by
+    * exact-jaccard verification, so the cap changes cost, not correctness of
+    * emitted edges.
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 5, k: Int = 16, bands: Int = 4,
@@ -307,45 +268,20 @@ object Dedup {
     // for hot-bucket sorted-neighborhood is joined back from the persisted
     // sigs for the (usually empty) oversized subset only — it would
     // otherwise be the dominating column on every fan-out row through the
-    // size aggregation and self-join exchanges
+    // size aggregation and pairing exchanges
     val banded = sigs.select(col("doc_id"),
         posexplode(array(
           (0 until bands).map(b => xxhash64(concat(lit(s"band$b"),
             slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")))): _*)))
-      .toDF("doc_id", "band", "bucket")
+      .toDF("id", "band", "bucket")
 
-    val split = splitHotBuckets(banded, "band", "bucket", bucketCap,
+    val split = BucketPairs.split(banded, Seq("band", "bucket"), bucketCap,
       persistSizes = onStats.isDefined)
-
-    // small-bucket pairs via ONE grouped aggregation instead of a sort-merge
-    // self-join (same rewrite as the embedding path): the fan-out shuffles
-    // once, each bucket's member list is bounded by bucketCap by
-    // construction, and the pair multiset is identical to the
-    // a.doc_id < b.doc_id join
-    val smallPairs = split.small
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .select(col("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val a = ids.toArray
-        java.util.Arrays.sort(a)
-        for {
-          i <- (0 until a.length - 1).iterator
-          j <- (i + 1 until a.length).iterator
-        } yield (a(i), a(j))
-      }.toDF("src", "dst")
-
-    val bigPairs =
-      if (split.hotEmpty) smallPairs.limit(0) // driver-side probe; no rank jobs
-      else graft.ops.Neighborhood.sortedNeighborhoodPairs(
-          split.hotSubset
-            .join(sigs.select(col("doc_id"),
-              concat_ws(",", col("sig").cast("array<string>")).as("sort_key")), "doc_id")
-            .select(xxhash64(col("band"), col("bucket")).as("bucket"),
-              col("doc_id").as("id"), col("sort_key").as("sort")), neighborWindow)
-        .select(col("src"), col("dst"))
-
-    val cand = smallPairs.unionByName(bigPairs).distinct().persist()
+    val cand = BucketPairs.pairs(split, neighborWindow,
+        _.join(sigs.select(col("doc_id").as("id"),
+          concat_ws(",", col("sig").cast("array<string>")).as("sort")), "id"))
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+      .distinct().persist()
 
     // verify candidates with true jaccard (re-shingle both sides); restrict
     // the text table to candidate members first so the full corpus text is
@@ -446,8 +382,8 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs via random-hyperplane LSH banding — the
     * 10^7+-vector scale path: O(vectors × bands) band fan-out, bucket
-    * equi-join (hot buckets capped via [[Neighborhood]] sorted-neighborhood
-    * on the signature's binary string, which is Hamming-local on high bits),
+    * pairing via [[BucketPairs]] (hot buckets capped by sorted-neighborhood
+    * on the signature bits, which are Hamming-local on high bits),
     * exact-cosine verification of candidates only. Nothing is ever collected
     * to the driver.
     *
@@ -560,8 +496,8 @@ object Dedup {
       val nSat = (math.pow(2.0, maxBits) * 32.0 /
         (nBands * dispersionInflation(maxBits, expectedDim))).toLong
       if (bandBits >= maxBits && n > nSat)
-        System.err.println(
-          f"[graft.Dedup] embedding LSH past saturation: n=$n > n_sat≈$nSat " +
+        log.warn(
+          f"embedding LSH past saturation: n=$n > n_sat≈$nSat " +
             f"at dim=$expectedDim (caps $maxBits bits × $maxBands bands). " +
             f"Expected occupancy inflates ~${n.toDouble / nSat}%.1fx; " +
             "candidates stay exact-verified but grow linearly in n/n_sat " +
@@ -614,53 +550,19 @@ object Dedup {
     // the fan-out carries ONLY (id, band, key): the hot-bucket fallback's
     // full-signature sort string is derived from the persisted `keys` for
     // that (usually empty) subset instead of riding every banded row
-    // through the size aggregation and self-join exchanges
+    // through the size aggregation and pairing exchanges
     val banded = sigs.select(col("id"), posexplode(col("keys")))
       .toDF("id", "band", "key")
 
-    // persistSizes=false: LshStats carries no bucket counters, so nothing
-    // re-reads the sizes frame after the split's own hot-list collect
-    val split = splitHotBuckets(banded, "band", "key", bucketCap,
-      persistSizes = false)
-
-    // small-bucket pairs via ONE grouped aggregation instead of a self-join:
-    // a sort-merge self-join sorts the bands·n fan-out twice (its shuffle is
-    // reused, the sorts are not), and a shuffle-hash build side was MEASURED
-    // to exhaust execution memory (a build side is a whole ~4M-row
-    // partition). Grouping on the bucket key shuffles the fan-out once and
-    // streams each bucket's pairs from an in-memory id list that is BOUNDED
-    // BY CONSTRUCTION: split.small holds only buckets ≤ bucketCap members
-    // (≤ 2000 longs = 16 KB), the hot rest goes to the sorted-neighborhood
-    // fallback below. Pair multiset identical to the a.id < b.id self-join.
-    val smallPairs = split.small
-      .groupBy(col("band"), col("key"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val a = ids.toArray
-        java.util.Arrays.sort(a)
-        for {
-          i <- (0 until a.length - 1).iterator
-          j <- (i + 1 until a.length).iterator
-        } yield (a(i), a(j))
-      }.toDF("id_a", "id_b")
-    val bigPairs =
-      if (split.hotEmpty) smallPairs.limit(0) // driver-side probe; no rank jobs
-      else Neighborhood.sortedNeighborhoodPairs(
-          split.hotSubset
-            .join(sigs, "id")
-            // the keys array ITSELF is the sort key: fixed-length,
-            // MSB-first-filled, nonnegative longs compare element-wise
-            // exactly like the signature's bit string in band order (the
-            // Hamming-local order the fallback needs), with no per-row
-            // string materialization — ~3× fewer bytes through the rank
-            // exchange than a rebuilt binary string
-            .select(xxhash64(col("band"), col("key")).as("bucket"), col("id"),
-              col("keys").as("sort")),
-          neighborWindow)
-        .select(col("src").as("id_a"), col("dst").as("id_b"))
-    // persisted: candIds' union reads cand twice and the verify join once
-    val cand = smallPairs.unionByName(bigPairs).distinct().persist()
+    // hot buckets rank by the keys array ITSELF: fixed-length, MSB-first-
+    // filled, nonnegative longs compare element-wise exactly like the
+    // signature's bit string in band order (the Hamming-local order the
+    // fallback needs), with no per-row string materialization — ~3× fewer
+    // bytes through the rank exchange than a rebuilt binary string.
+    // Persisted: candIds' union reads cand twice and the verify join once
+    val cand = BucketPairs(banded, Seq("band", "key"), bucketCap, neighborWindow,
+        _.join(sigs.select(col("id"), col("keys").as("sort")), "id"))
+      .distinct().persist()
 
     // exact-cosine verification of candidates only (primitive loops,
     // ascending-index accumulation like the exact path)
@@ -717,7 +619,6 @@ object Dedup {
     onStats.foreach(f =>
       f(LshStats(n, bandBits, nBands, cand.count(), verified.count(),
         designRecall(bandBits, nBands))))
-    split.releaseSizes()
     cand.unpersist(); sigs.unpersist(); vecs.unpersist()
     verified.select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -788,18 +689,20 @@ object Dedup {
     * whole-document and minhash similarity both miss at low overall overlap.
     *
     * Scale shape: explode to (doc, fp) — density ≈ 2/(w+1) of chars, far
-    * sparser than shingle joins — then one self-equi-join on fp + a pair
-    * count. Fingerprints appearing in more than the effective cap are
-    * dropped before the join (boilerplate k-grams carry no overlap signal
-    * and are exactly the hot keys that would blow up the join — the
-    * stop-shingle discipline); `onStats` reports how much the cap dropped.
+    * sparser than shingle joins — then all doc pairs per fp
+    * ([[BucketPairs.allPairs]]) + a pair count. Fingerprints appearing in
+    * more than the effective cap are dropped before pairing (boilerplate
+    * k-grams carry no overlap signal and are exactly the hot keys that
+    * would blow up the pairs — the stop-shingle discipline); `onStats`
+    * reports how much the cap dropped.
     *
     * The effective cap is `maxDocFreq`, or — when `pairBudgetPerDoc` > 0 —
     * [[solveDocFreqCap]] applied to the measured df histogram with budget
     * `pairBudgetPerDoc · docs`, whichever is SMALLER. The budget form is the
-    * corpus-scale path: it bounds the self-join's output rows (and therefore
-    * its shuffle) linearly in corpus size by construction, where any fixed
-    * cap is quadratic-in-waiting (each k-gram's df grows with the corpus).
+    * corpus-scale path: it bounds the pair emitter's output rows (and
+    * therefore its shuffle) linearly in corpus size by construction, where
+    * any fixed cap is quadratic-in-waiting (each k-gram's df grows with the
+    * corpus).
     * The histogram is a bounded driver collect: d distinct df values imply
     * Σ df ≥ d(d+1)/2 ≤ total (doc, fp) rows R, so d ≤ √(2R) — ~14k values
     * at 10^8 fingerprint rows. */
@@ -809,7 +712,7 @@ object Dedup {
       onStats: Option[WinnowStats => Unit] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // persisted: the frequency filter and both self-join sides reuse one
+    // persisted: the frequency filter and the pairing reuse one
     // winnowing pass; eager checkpoint lets the cache release deterministically
     val fps = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
@@ -836,33 +739,19 @@ object Dedup {
       }
     val rare = freq.filter(col("df_") <= cap).select("fp")
     val kept = fps.join(rare, Seq("fp"), "left_semi")
-    // per-fingerprint pairs via ONE grouped aggregation instead of a
-    // sort-merge self-join (the same rewrite as the banded near-dup paths):
-    // each fingerprint's doc list is bounded by the EFFECTIVE df cap — the
-    // budget-solved value (e.g. 10 at 1M docs) or maxDocFreq — so the
-    // collected list is small by construction; with both caps disabled the
-    // pair volume is the caller's explicit exactness choice and blows up
-    // in output rows either way (the join had the same shape). Pair
-    // multiset identical to the a.doc_id < b.doc_id join.
-    // MEMORY BOUND of the aggregation buffer: one list of ≤ cap longs, i.e.
-    // 8·min(cap, maxDocFreq) bytes per in-flight fingerprint. A caller who
+    // per-fingerprint pairs via the grouped all-pairs emitter of
+    // [[BucketPairs]] (no hot split): each fingerprint's doc list is bounded
+    // by the EFFECTIVE df cap — the budget-solved value (e.g. 10 at 1M docs)
+    // or maxDocFreq — so the collected list is small by construction; with
+    // both caps disabled the pair volume is the caller's explicit exactness
+    // choice and blows up in output rows either way.
+    // MEMORY BOUND of the aggregation buffer: one list of ≤ cap members,
+    // i.e. O(min(cap, maxDocFreq)) per in-flight fingerprint. A caller who
     // disables the budget (pairBudgetPerDoc = 0) AND raises maxDocFreq to
-    // df ≈ 10^7 puts ~80 MB in ONE buffer where the old join formulation
-    // would have spilled — that configuration is the explicit exactness
-    // opt-in documented above; the solved default keeps buffers at tens of
-    // bytes.
-    val out = kept
-      .groupBy(col("fp"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .select(col("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val a = ids.toArray
-        java.util.Arrays.sort(a)
-        for {
-          i <- (0 until a.length - 1).iterator
-          j <- (i + 1 until a.length).iterator
-        } yield (a(i), a(j))
-      }.toDF("id_a", "id_b")
+    // df ≈ 10^7 puts ~80 MB in ONE buffer where a self-join would have
+    // spilled — that configuration is the explicit exactness opt-in
+    // documented above; the solved default keeps buffers at tens of bytes.
+    val out = BucketPairs.allPairs(kept.select(col("fp"), col("doc_id").as("id")), Seq("fp"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
@@ -947,7 +836,7 @@ object Dedup {
     *
     * Hot-bucket guard (same discipline as [[minhashLsh]] /
     * [[embeddingCosinePairsLsh]]): table buckets above `bucketCap` switch
-    * to bounded sorted-neighborhood pairing ([[Neighborhood]]) over the
+    * to bounded sorted-neighborhood pairing ([[BucketPairs]]) over the
     * signature's 64-char binary string (Hamming-local on high bits: docs
     * within the radius differ in few bits and sort adjacently), at
     * O(rows·window) pairs. Recall trade: the pigeonhole guarantee holds
@@ -965,11 +854,12 @@ object Dedup {
       "blocks must exceed maxHamming (pigeonhole) and fit 64 bits")
     val spark = df.sparkSession
     import spark.implicits._
-    // persisted: the self-join below would otherwise re-tokenize and
-    // re-simhash the corpus once per side. Blank/empty docs carry no content
-    // signature (simhashFeatures is empty) and are EXCLUDED from banding —
-    // an unguarded degenerate signature-0 band over all of them would be an
-    // O(n²) self-join of contentless rows; exact dedup owns those docs.
+    // persisted: the geometry solver's count and the band fan-out would
+    // otherwise re-tokenize and re-simhash the corpus. Blank/empty docs carry
+    // no content signature (simhashFeatures is empty) and are EXCLUDED from
+    // banding — an unguarded degenerate signature-0 band over all of them
+    // would be an O(n²) pairing of contentless rows; exact dedup owns those
+    // docs.
     val sigs = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .as[(Long, String)]
@@ -1000,46 +890,20 @@ object Dedup {
     val keyCols = subsets.zipWithIndex.map { case (s, i) =>
       xxhash64((lit(i) +: s.map(blockCol)): _*)
     }
-    val banded = sigs.select(col("doc_id"), col("sim"), posexplode(array(keyCols.toIndexedSeq: _*)))
-      .toDF("doc_id", "sim", "band", "key")
-    val split = splitHotBuckets(banded, "band", "key", bucketCap,
+    val banded = sigs.select(col("doc_id").as("id"), col("sim"),
+        posexplode(array(keyCols.toIndexedSeq: _*)))
+      .toDF("id", "sim", "band", "key")
+    val split = BucketPairs.split(banded, Seq("band", "key"), bucketCap,
       persistSizes = onStats.isDefined)
-    // the small (normal) path: ONE grouped aggregation instead of a
-    // sort-merge self-join (same rewrite as the embedding/minhash paths) —
-    // each bucket's (doc_id, sim) members are bounded by bucketCap by
-    // construction, the Hamming distance is a Long.bitCount in the pair
-    // loop, and the gate still runs BEFORE the distinct() shuffle
-    val smallCand = split.small
-      .groupBy(col("band"), col("key"))
-      .agg(collect_list(struct(col("doc_id").as("_1"), col("sim").as("_2")))
-        .as("members"))
-      .select(col("members")).as[Seq[(Long, Long)]]
-      .flatMap { members =>
-        val a = members.toArray.sortBy(_._1)
-        for {
-          i <- (0 until a.length - 1).iterator
-          j <- (i + 1 until a.length).iterator
-        } yield (a(i)._1, a(j)._1,
-          java.lang.Long.bitCount(a(i)._2 ^ a(j)._2)) // Int, like bit_count
-      }.toDF("id_a", "id_b", "hamming")
-    // hot buckets: sorted-neighborhood over the full signature as a binary
-    // string (bin() of a negative long is its 64-bit two's-complement form,
-    // so lexicographic order IS unsigned-integer order); the signatures are
-    // joined back from the persisted sigs for this (usually empty) subset
-    val bigCand =
-      if (split.hotEmpty) smallCand.limit(0) // driver-side probe; no rank jobs
-      else Neighborhood.sortedNeighborhoodPairs(
-          split.hotSubset
-            .select(xxhash64(col("band"), col("key")).as("bucket"),
-              col("doc_id").as("id"), lpad(bin(col("sim")), 64, "0").as("sort")),
-          neighborWindow)
-        .select(col("src").as("id_a"), col("dst").as("id_b"))
-        .join(sigs.select(col("doc_id").as("id_a"), col("sim").as("sim_a")), "id_a")
-        .join(sigs.select(col("doc_id").as("id_b"), col("sim").as("sim_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
-    val cand = smallCand.unionByName(bigCand)
-    val out = cand.filter(col("hamming") <= maxHamming)
+    // hot buckets rank by the full signature as a binary string (bin() of a
+    // negative long is its 64-bit two's-complement form, so lexicographic
+    // order IS unsigned-integer order); the Hamming gate runs BEFORE the
+    // distinct() shuffle
+    val out = BucketPairs.pairs(split, neighborWindow,
+        _.withColumn("sort", lpad(bin(col("sim")), 64, "0")))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
       .distinct()
       .localCheckpoint() // eager: lets the caches release deterministically
     onStats.foreach { f =>

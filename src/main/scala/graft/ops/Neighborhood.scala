@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale-safe sorted-neighborhood pairing inside oversized ("hot") LSH
-  * buckets — shared by entity linking (graft.link.Linker) and near-dup
-  * clustering (graft.ops.Dedup).
+  * buckets — the hot-bucket fallback of [[BucketPairs]].
   *
   * The naive formulation (`row_number().over(Window.partitionBy("bucket"))`)
   * places an ENTIRE bucket on one task to rank it: bounded output, unbounded
@@ -33,23 +32,14 @@ import org.apache.spark.sql.functions._
   */
 object Neighborhood {
 
-  /** Exact sorted-neighborhood candidate pairs for the given bucketed rows.
-    *
-    * @param big DataFrame with columns (bucket: long, id: long, sort: any
-    *            orderable) — typically only the oversized buckets
-    * @param window each row pairs with its next `window` rows in
-    *               (sort, id) order within its bucket
-    * @return (src, dst, sort_a, sort_b) with src < dst (ids normalized);
-    *         each qualifying pair appears exactly once
-    */
   /** Pass 1+2: exact global rank per (bucket, sort, id) with every task
     * bounded by one range-partition slice. Exposed for plan/partition-size
-    * assertions in tests; columns (bucket, id, sort, pid, rn). */
+    * assertions in tests; columns: those of `big` plus pid and rn. */
   private[graft] def rankedWithinBuckets(big: DataFrame): DataFrame = {
     val spark = big.sparkSession
     import spark.implicits._
     val parts = math.max(spark.sparkContext.defaultParallelism, 2)
-    val ranged = big.select(col("bucket"), col("id"), col("sort"))
+    val ranged = big
       .repartitionByRange(parts, col("bucket"), col("sort"), col("id"))
       .sortWithinPartitions(col("bucket"), col("sort"), col("id"))
       .withColumn("pid", spark_partition_id())
@@ -77,30 +67,40 @@ object Neighborhood {
       .withColumn("rn", row_number().over(wLocal) + col("off"))
   }
 
+  /** Exact sorted-neighborhood candidate pairs for the given bucketed rows.
+    *
+    * @param big DataFrame with columns (bucket: long, id: long, sort: any
+    *            orderable, payload…) — typically only the oversized buckets
+    * @param window each row pairs with its next `window` rows in
+    *               (sort, id) order within its bucket
+    * @return (src, dst) with src < dst (ids normalized), plus every column
+    *         `c` of `big` but bucket and id as `c_a` (src's row) and `c_b`
+    *         (dst's row); each qualifying pair appears exactly once
+    */
   def sortedNeighborhoodPairs(big: DataFrame, window: Int): DataFrame = {
     require(window >= 1, "neighbor window must be >= 1")
     val ranked = rankedWithinBuckets(big)
+    val carried = big.columns.toSeq.filterNot(Set("bucket", "id"))
+    def side(sfx: String) = col("id").as(s"id$sfx") +: col("rn").as(s"rn$sfx") +:
+      carried.map(c => col(c).as(c + sfx))
 
-    val a = ranked.select(col("bucket"), col("id").as("id_a"),
-      col("sort").as("sort_a"), col("rn").as("rn_a"),
+    val a = ranked.select((col("bucket") +: side("_a") :+
       explode(array(floor(col("rn") / window),
-        floor(col("rn") / window) + 1)).as("blk"))
-    val b = ranked.select(col("bucket"), col("id").as("id_b"),
-      col("sort").as("sort_b"), col("rn").as("rn_b"),
-      floor((col("rn") - 1) / window).as("blk"))
+        floor(col("rn") / window) + 1)).as("blk")): _*)
+    val b = ranked.select((col("bucket") +: side("_b") :+
+      floor((col("rn") - 1) / window).as("blk")): _*)
 
-    // normalize (src,dst) ascending and keep sort_a/sort_b ALIGNED with the
-    // swap, so sort_a is always src's key (and a pair emitted by both this
-    // path and an all-pairs path dedupes instead of surviving distinct()
-    // with swapped carries)
+    // normalize (src,dst) ascending and keep the carried columns ALIGNED
+    // with the swap, so c_a is always src's value (and a pair emitted by
+    // both this path and an all-pairs path dedupes instead of surviving
+    // distinct() with swapped carries)
     val aFirst = col("id_a") <= col("id_b")
+    def pick(x: String, y: String) = when(aFirst, col(x)).otherwise(col(y))
     a.join(b, Seq("bucket", "blk"))
       .filter(col("rn_b") > col("rn_a") && col("rn_b") <= col("rn_a") + window)
-      .select(
-        when(aFirst, col("id_a")).otherwise(col("id_b")).as("src"),
-        when(aFirst, col("id_b")).otherwise(col("id_a")).as("dst"),
-        when(aFirst, col("sort_a")).otherwise(col("sort_b")).as("sort_a"),
-        when(aFirst, col("sort_b")).otherwise(col("sort_a")).as("sort_b"))
+      .select((pick("id_a", "id_b").as("src") +: pick("id_b", "id_a").as("dst") +:
+        carried.flatMap(c => Seq(pick(c + "_a", c + "_b").as(c + "_a"),
+          pick(c + "_b", c + "_a").as(c + "_b")))): _*)
       .filter(col("src") =!= col("dst"))
   }
 }

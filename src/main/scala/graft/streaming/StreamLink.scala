@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.link.{ConnectedComponents, Linker}
-import graft.ops.Hashing
+import graft.ops.{BucketPairs, Hashing}
 import graft.schema.Triple
 
 /** Incremental entity linking — the streaming twin of
@@ -209,8 +209,8 @@ object StreamLink {
       .join(exSurf.select("surface"), Seq("surface"), "left_anti")
       .localCheckpoint() // two band fan-outs + the assignment reuse it
     // persisted (lazily — no dedicated job): the band fan-out is read by
-    // the candidate semi-join and the tagged size-agg + size-attach join,
-    // which would otherwise re-minhash every new surface once per consumer
+    // the candidate semi-join and the tagged union, which would otherwise
+    // re-minhash every new surface once per consumer
     val newBands = newSurf
       .select(col("id"), col("norm"))
       .as[(Long, String)]
@@ -219,14 +219,12 @@ object StreamLink {
       }.toDF("bucket", "id", "norm").persist()
     val exBands = bandState(spark, stateDir, batchId, pBuckets)
 
-    // ---- candidate pairs under the hot-band guard (same discipline as
-    // Dedup.splitHotBuckets + grouped pairing, the r6 rewrite of the batch
-    // dedup family): the (bucket-pruned) state side is semi-joined to the
-    // batch's exact band values — candidates only — then band values whose
-    // combined new ∪ candidate-existing membership exceeds `bucketCap`
-    // switch from grouped all-pairs to bounded sorted-neighborhood pairing
-    // over the norm — one templated surface family in the state must not
-    // make every later micro-batch quadratic
+    // ---- candidate pairs under the hot-band guard ([[BucketPairs]]): the
+    // (bucket-pruned) state side is semi-joined to the batch's exact band
+    // values — candidates only — then band values whose combined new ∪
+    // candidate-existing membership exceeds `bucketCap` pair by bounded
+    // sorted neighborhood over the norm — one templated surface family in
+    // the state must not make every later micro-batch quadratic
     val bucketCap = 1000
     val exCand = exBands.join(newBands.select("bucket").distinct(), Seq("bucket"), "left_semi")
     // persisted: the hot-bucket size probe and the pairing both read it; the
@@ -238,77 +236,22 @@ object StreamLink {
         lit(false).as("is_new"), col("canonical_id").as("cid"),
         col("canonical_surface").as("rep")))
       .persist()
-    // HOT bucket list as a BOUNDED driver collect (≤ fanout/bucketCap rows;
-    // the limit caps driver memory and over-limit fails loudly): the
-    // small/hot split becomes a broadcast filter instead of a size-attach
-    // join, and the hot-path probe is a driver-side emptiness check instead
-    // of an executeTake job over the whole candidate plan
-    val hotLimit = 2000000
-    val hot = tagged.groupBy("bucket").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > bucketCap).select("bucket")
-      .limit(hotLimit + 1).as[Long].collect()
-    require(hot.length <= hotLimit,
-      s"over $hotLimit hot band values in one micro-batch (cap $bucketCap) — " +
-        "pathological banding; raise bucketCap or split the batch")
-    val hotDf = spark.createDataset(hot.toSeq).toDF("bucket")
-    val small =
-      if (hot.isEmpty) tagged
-      else tagged.join(broadcast(hotDf), Seq("bucket"), "left_anti")
-    // small-bucket pairs via ONE grouped aggregation (member lists bounded
-    // by bucketCap by construction) instead of the sizes-attach join + sort-
-    // merge self-join — the pair multiset is identical: every pair anchors
-    // on a NEW surface; new-new pairs once (id order), new-existing pairs
-    // regardless of id order
-    val smallPairs = small
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("norm"), col("is_new"),
-        col("cid"), col("rep"))).as("ms"))
-      .select(col("ms"))
-      .as[Seq[(Long, String, Boolean, Option[Long], Option[String])]]
-      .flatMap { ms =>
-        val news = ms.filter(_._3).sortBy(_._1).toArray
-        val olds = ms.filterNot(_._3).toArray
-        val nn = for {
-          i <- (0 until news.length).iterator
-          j <- (i + 1 until news.length).iterator
-          if news(i)._1 != news(j)._1 // equal-id copies never self-pair
-        } yield (news(i)._1, news(i)._2, news(j)._1, news(j)._2,
-          true, None: Option[Long], None: Option[String])
-        val ne = for {
-          n <- news.iterator
-          e <- olds.iterator
-        } yield (n._1, n._2, e._1, e._2, false, e._4, e._5)
-        nn ++ ne
-      }.toDF("nid", "na", "oid", "nb", "other_new", "ex_cid", "ex_rep")
-    val bigPairs =
-      if (hot.isEmpty) smallPairs.limit(0) // driver-side probe; no rank jobs
-      else {
-        val big = tagged.join(broadcast(hotDf), Seq("bucket"), "left_semi")
-        val meta2 = tagged.select("id", "norm", "is_new", "cid", "rep").distinct()
-        def side(pfx: String) = meta2.select(col("id").as(pfx),
-          col("norm").as(s"${pfx}_norm"), col("is_new").as(s"${pfx}_new"),
-          col("cid").as(s"${pfx}_cid"), col("rep").as(s"${pfx}_rep"))
-        val sn = graft.ops.Neighborhood.sortedNeighborhoodPairs(
-            big.select(xxhash64(col("bucket")).as("bucket"), col("id"),
-              col("norm").as("sort")), 8)
-          .select("src", "dst").join(side("src"), "src").join(side("dst"), "dst")
-        sn.filter(col("src_new"))
-          .select(col("src").as("nid"), col("src_norm").as("na"),
-            col("dst").as("oid"), col("dst_norm").as("nb"),
-            col("dst_new").as("other_new"), col("dst_cid").as("ex_cid"),
-            col("dst_rep").as("ex_rep"))
-          .unionByName(sn.filter(col("dst_new") && !col("src_new"))
-            .select(col("dst").as("nid"), col("dst_norm").as("na"),
-              col("src").as("oid"), col("src_norm").as("nb"),
-              lit(false).as("other_new"), col("src_cid").as("ex_cid"),
-              col("src_rep").as("ex_rep")))
-      }
-    // ONE distinct over the union (a pair can meet in several bands) instead
-    // of one per branch: for other_new rows the extra columns are constant
-    // nulls, so this is exactly the old nn-side dedup; the ne side may keep
-    // same-norm same-canonical duplicates (different oid) — verified
-    // identically and collapsed by ne's post-verify distinct, as before
-    val cand = smallPairs.unionByName(bigPairs).distinct()
+    // the pair rule (BucketPairs' incremental mode): every pair anchors on
+    // a NEW surface — existing–existing pairs are never emitted — and is
+    // oriented new side first here. ONE distinct over the result (a pair
+    // can meet in several bands): for other_new rows the extra columns are
+    // constant nulls; the ne side may keep same-norm same-canonical
+    // duplicates (different oid) — verified identically and collapsed by
+    // ne's post-verify distinct
+    val aNew = col("is_new_a")
+    def pick(n: String, e: String) = when(aNew, col(n)).otherwise(col(e))
+    val cand = BucketPairs(tagged, Seq("bucket"), bucketCap, window = 8,
+        _.withColumn("sort", col("norm")), newCol = Some("is_new"))
+      .select(pick("id_a", "id_b").as("nid"), pick("norm_a", "norm_b").as("na"),
+        pick("id_b", "id_a").as("oid"), pick("norm_b", "norm_a").as("nb"),
+        (aNew && col("is_new_b")).as("other_new"),
+        pick("cid_b", "cid_a").as("ex_cid"), pick("rep_b", "rep_a").as("ex_rep"))
+      .distinct()
 
     // Jaccard-verified edges among the batch's new surfaces (direction is
     // irrelevant — ConnectedComponents canonicalizes edges)
@@ -421,15 +364,17 @@ object StreamLink {
     tagged.unpersist(); newBands.unpersist(); ne.unpersist()
   }
 
-  /** Run independent Spark actions concurrently and propagate the FIRST
-    * failure after all complete or fail — used for the per-batch state
-    * writes, whose jobs otherwise serialize their scheduler tails. */
-  private def concurrently(fs: (() => Unit)*): Unit = {
+  /** Run independent Spark actions concurrently, wait until EVERY one has
+    * completed or failed, then rethrow the first failure in argument order —
+    * so no sibling write is still running when this throws. Used for the
+    * per-batch state writes, whose jobs otherwise serialize their scheduler
+    * tails. */
+  private[streaming] def concurrently(fs: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = writePool
-    Await.result(
-      Future.sequence(fs.map(f => Future(f()))), Duration.Inf): Unit
+    Await.result(Future.sequence(fs.map(f => Future(scala.util.Try(f())))),
+      Duration.Inf).foreach(_.get)
   }
 
   /** Small daemon pool for [[concurrently]] — 4 writes in flight is the most

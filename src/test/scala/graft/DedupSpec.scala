@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Hashing}
+import graft.ops.{BucketPairs, Dedup, Hashing}
 
 /** Dedup operator suite over crafted corpora with known duplicates. */
 class DedupSpec extends SparkSpec {
@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
     val banded = ((0L until 300L).map(i => (i, 0, 7L)) ++
         (300L until 320L).map(i => (i, 0, i)))
       .toDF("doc_id", "band", "key")
-    val split = Dedup.splitHotBuckets(banded, "band", "key",
+    val split = BucketPairs.split(banded, Seq("band", "key"),
       bucketCap = 50, persistSizes = false)
     assert(!split.hotEmpty)
     // the fan-out side must be filtered by BROADCAST joins against the

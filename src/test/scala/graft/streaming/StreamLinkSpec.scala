@@ -5,9 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.TextNorm
 import graft.link.Linker
 import graft.ops.Hashing
 import graft.schema.Triple
+import graft.synth.LinkCorpus
+import graft.tools.ClusterProbe
 
 /** Incremental entity linking: stable canonical ids across a checkpointed
   * restart, the documented bridge conflict rule, and replay idempotency. */
@@ -174,5 +177,63 @@ class StreamLinkSpec extends SparkSpec {
       .groupBy("surface").count().filter(col("count") > 1).count()
     assert(dup === 0, "an already-published surface must not be re-added")
     assert(res.contains("completely fresh object zzz"))
+  }
+
+  test("hot band buckets (over bucketCap=1000 members) link through the sorted-neighborhood path") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-streamlink-hot").toString
+    // a templated surface family: one long shared header + a 4-digit tail,
+    // so most members share the header's minhash lanes and land in ONE band
+    // bucket; objects are LinkCorpus reversed bases (singleton components),
+    // and LinkCorpus v1/v2 → v0 families add bridges on the small path
+    def template(i: Int) = f"hot band templated surface family with a long shared header $i%04d"
+    def rows(idx: Range, tag: String) = idx.map(i =>
+      Triple(s"$tag/$i", "Mass", template(i), "Location", "Location",
+        LinkCorpus.objSurface(i.toLong)))
+    def family(f: Long, v: Int) = Triple(s"lc/v$v/$f", "Mass",
+      LinkCorpus.surface(f, v), "Location", "Location", LinkCorpus.objSurface(f))
+    val fams = 9000L until 9030L
+    val batch0 = rows(0 until 1200, "b0") ++ fams.flatMap(f => Seq(family(f, 1), family(f, 2)))
+    // batch 1: a fresh slice of the template family, re-mentions of published
+    // template surfaces, and the bridging v0 surfaces
+    val batch1 = rows(1200 until 2400, "b1") ++ rows(0 until 50, "b1-again") ++
+      fams.map(family(_, 0))
+
+    // precondition: the hot path really engages — in each batch more than
+    // bucketCap template surfaces share one band key
+    def maxBucket(idx: Range) = idx
+      .flatMap(i => Linker.bandKeysOf(TextNorm.processSentStr(template(i))))
+      .groupBy(identity).values.map(_.size).max
+    assert(maxBucket(0 until 1200) > 1000 && maxBucket(1200 until 2400) > 1000)
+
+    StreamLink.processBatch(batch0.toDF(), state, batchId = 0)
+    StreamLink.processBatch(batch1.toDF(), state, batchId = 1)
+
+    val surf = spark.read.parquet(s"$state/surfaces")
+    val templ = surf.filter(col("surface").startsWith("hot band templated"))
+    // every template surface chains into ONE component, and batch 1's new
+    // members adopt the id published in batch 0 (new→existing hot pairs)
+    assert(templ.count() === 2400L)
+    assert(templ.select("canonical_id", "canonical_surface").distinct().count() === 1L)
+    // (row count, order-independent checksum) pins of the whole state
+    val cols = Seq("surface", "id", "canonical_id", "canonical_surface")
+    assert(ClusterProbe.checksumOf(surf, cols) === ((4920L, 3692943640303364102L)))
+    val bridges = StreamLink.readBridges(spark, state)
+    assert(ClusterProbe.checksumOf(bridges, Seq("kept_id", "bridged_id")) ===
+      ((29L, 3551733364098015811L)))
+    val canon = StreamLink.readCanonicalTriples(spark, state)
+    assert(ClusterProbe.checksumOf(canon, canon.columns.toSeq) ===
+      ((2460L, -7942468156471257490L)))
+  }
+
+  test("concurrently settles every sibling before rethrowing the first failure") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      StreamLink.concurrently(
+        () => throw new IllegalStateException("write failed"),
+        () => { Thread.sleep(500); siblingDone.set(true) })
+    }
+    assert(e.getMessage === "write failed")
+    assert(siblingDone.get, "a sibling write was still running when the failure surfaced")
   }
 }
