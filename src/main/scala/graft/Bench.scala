@@ -429,6 +429,13 @@ object Bench {
         }
         val totalBandFiles = bandFiles("")
         val touched = Seq(3L, 17L)
+        for (b <- touched)
+          require(java.nio.file.Files.isDirectory(
+              java.nio.file.Paths.get(out, "bands", "batch=-1", s"pbucket=$b")),
+            s"compaction fixture too small: $fam families (SPARK_GRAFT_COMPACT_FAMILIES) " +
+              s"left band bucket $b of ${StreamLink.readMeta(spark, out).get.nStateBuckets} " +
+              "empty in the snapshot; the pruned-read check needs buckets " +
+              touched.mkString(" and "))
         val expectedFiles = touched.map(b => bandFiles(s"batch=-1/pbucket=$b")).sum
         val pruned = StreamLink.bandState(spark, out, batchId = 0, touched)
         pruned.collect()

@@ -15,81 +15,84 @@ import graft.streaming.StreamLink
   * What it computes, from the state dir alone (no re-crawl, no re-banding,
   * no re-verification — every edge it closes over was Jaccard-verified when
   * it was ledgered):
-  *  1. connected components over the bridge edges (the SAME
-  *     [[ConnectedComponents]] the linkers use) merge published components
-  *     that later batches proved equal;
-  *  2. each merged component is re-canonicalized by the BATCH rules —
-  *     canonical id = min surface id over ALL member surfaces, canonical
-  *     surface = min (length, lexicographic) member — so the compacted
-  *     state is exactly what [[Linker.canonicalTriples]] would publish on
-  *     the union corpus (spec-proven), with none of the from-scratch
-  *     re-run's cost and, unlike a re-run, WITH a migration map;
-  *  3. the migration map covers EVERY published canonical id (ledgered ids
+  *  1. [[Linker.canonicalize]] over the published canonical ids with the
+  *     bridge edges: components later batches proved equal merge, and each
+  *     merged component takes the batch rule's canonical id and
+  *     representative over ALL its member surfaces — so the compacted state
+  *     is exactly what [[Linker.canonicalTriples]] would publish on the union
+  *     corpus (spec-proven), with none of the from-scratch re-run's cost and,
+  *     unlike a re-run, WITH a migration map;
+  *  2. the migration map covers EVERY published canonical id (ledgered ids
   *     are a subset: a component that merely GREW — a later batch attached
   *     a surface whose id undercuts the published minimum, no bridge
   *     involved — also re-canonicalizes; restricting the map to ledgered
   *     ids would strand consumers of those). `changed=false` rows are
   *     included so "id x is up to date" is an answer the map itself gives.
   *
-  * Scale shape: two hash-aggregations over the surface state (group by
-  * closed component), one CC run over the ledger (edges = bridges, a set
+  * Scale shape: one window aggregation over the surface state (partitioned
+  * by merged component), one CC run over the ledger (edges = bridges, a set
   * that compaction itself resets to empty — it never grows past one
   * compaction cycle), and joins keyed by canonical id. Nothing is collected
   * to the driver beyond CC's bounded small-graph switch.
   */
 object Compaction {
 
+  /** Every published surface re-canonicalized: its state columns with the
+    * published canonical id as `old_id`, plus the merged `component` and
+    * the new `canonical_id` / `canonical_surface`. */
+  private def recanonicalized(spark: SparkSession, stateDir: String): DataFrame =
+    Linker.canonicalize(
+      StreamLink.readSurfaces(spark, stateDir)
+        .select(col("surface"), col("norm"), col("id"), col("canonical_id").as("old_id")),
+      StreamLink.readBridges(spark, stateDir)
+        .select(col("kept_id").as("src"), col("bridged_id").as("dst")),
+      key = "old_id")
+
+  private def migrationOf(surfaces: DataFrame): DataFrame =
+    surfaces.select(col("old_id"), col("canonical_id").as("new_id"),
+        col("canonical_surface").as("new_surface"),
+        (col("old_id") =!= col("canonical_id")).as("changed"))
+      .distinct()
+
   /** old_id → (new_id, new_surface, changed) for EVERY published canonical
     * id in the state (see class doc for why this is a superset of the
     * ledgered ids). */
-  def migration(spark: SparkSession, stateDir: String): DataFrame = {
-    val surfaces = StreamLink.readSurfaces(spark, stateDir)
-    val bridges = StreamLink.readBridges(spark, stateDir)
-      .select(col("kept_id").as("src"), col("bridged_id").as("dst"))
-    val closure = ConnectedComponents.run(bridges)
-      .withColumnRenamed("id", "canonical_id").withColumnRenamed("component", "root")
-    // root of each published id under the bridge closure (self if unbridged)
-    val rooted = surfaces
-      .join(closure, Seq("canonical_id"), "left")
-      .withColumn("root", coalesce(col("root"), col("canonical_id")))
-    // batch-rule re-canonicalization per merged component
-    val newIds = rooted.groupBy("root")
-      .agg(min(col("id")).as("new_id"),
-        min(struct(length(col("surface")).as("l"), col("surface").as("s"))).as("r"))
-      .select(col("root"), col("new_id"), col("r.s").as("new_surface"))
-    rooted.select("canonical_id", "root").distinct()
-      .join(newIds, "root")
-      .select(col("canonical_id").as("old_id"), col("new_id"), col("new_surface"),
-        (col("canonical_id") =!= col("new_id")).as("changed"))
-  }
+  def migration(spark: SparkSession, stateDir: String): DataFrame =
+    migrationOf(recanonicalized(spark, stateDir))
 
   /** Compact `stateDir` into a fresh `outDir`: migrated surfaces + bands,
     * an EMPTY bridge ledger, and re-resolved url-grain triple provenance —
     * the state layout [[StreamLink.processBatch]] reads, so the stream
     * continues against `outDir` with no special casing. Returns the
     * migration map (eagerly materialized — it is also the write's input,
-    * and the caller persists it for consumers). */
+    * and the caller persists it for consumers).
+    *
+    * `outDir` must hold no state: a snapshot written beside another state's
+    * batch partitions (`stateDir` itself, say) would publish every surface
+    * twice and keep the old ledger. */
   def compact(spark: SparkSession, stateDir: String, outDir: String): DataFrame = {
     val meta = StreamLink.readMeta(spark, stateDir).getOrElse(
       throw new IllegalStateException(
         s"$stateDir has no _meta.json — not a StreamLink state dir"))
-    val mig = migration(spark, stateDir).localCheckpoint()
-    val surfaces = StreamLink.readSurfaces(spark, stateDir)
-      .join(mig.select(col("old_id").as("canonical_id"), col("new_id"),
-        col("new_surface")), "canonical_id")
-      .select(col("surface"), col("norm"), col("id"),
-        col("new_id").as("canonical_id"), col("new_surface").as("canonical_surface"))
-    val byNew = mig.select("old_id", "new_id", "new_surface").distinct()
+    val held = StreamLink.stateArtifact(spark, outDir)
+    require(held.isEmpty,
+      s"compaction target $outDir already holds ${held.getOrElse("")} — writing " +
+        "the snapshot beside existing state would publish every surface twice " +
+        "and keep the old bridge ledger; refusing (compact into a fresh dir)")
+    val surfaces = recanonicalized(spark, stateDir).localCheckpoint()
+    val mig = migrationOf(surfaces).localCheckpoint()
     val triples = StreamLink.readTripleProvenance(spark, stateDir)
-      .join(byNew.select(col("old_id").as("subjectId"),
+      .join(mig.select(col("old_id").as("subjectId"),
         col("new_id").as("s_id"), col("new_surface").as("s_surf")), "subjectId")
-      .join(byNew.select(col("old_id").as("objectId"),
+      .join(mig.select(col("old_id").as("objectId"),
         col("new_id").as("o_id"), col("new_surface").as("o_surf")), "objectId")
       .select(col("s_id").as("subjectId"), col("s_surf").as("subject"),
         col("subjectType"), col("relation"),
         col("o_id").as("objectId"), col("o_surf").as("obj"),
         col("objectType"), col("url"))
-    StreamLink.writeStateSnapshot(spark, outDir, surfaces, triples, meta)
+    StreamLink.writeStateSnapshot(spark, outDir,
+      surfaces.select("surface", "norm", "id", "canonical_id", "canonical_surface"),
+      triples, meta)
     mig
   }
 }

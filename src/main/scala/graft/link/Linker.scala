@@ -1,6 +1,7 @@
 package graft.link
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextNorm
@@ -12,16 +13,20 @@ import graft.schema.{CanonicalTriple, Triple}
   * surfaces, candidate-edge verification, and connected components — then
   * materialize deduplicated canonical triples.
   *
-  * Scale design:
-  *  - width-normalization (processSent) collapses trivial variants BEFORE
-  *    hashing, so LSH pairing only carries genuinely distinct surfaces
-  *    (entity vocabulary ≪ corpus size);
-  *  - band fan-out is `bands` rows per surface — shuffle O(surfaces × bands);
-  *  - candidate pairs come from [[graft.ops.BucketPairs]]: grouped all-pairs
-  *    inside buckets up to `bucketCap`, bounded sorted-neighborhood pairing
-  *    inside hotter ones;
-  *  - canonical id = min id in component (deterministic under any
-  *    partitioning).
+  * This object owns the linking rules; the incremental linker
+  * ([[graft.streaming.StreamLink]]) and the offline compaction
+  * ([[Compaction]]) call them rather than restating them:
+  *  - surface key: width-normalized surface (processSent) and its 64-bit
+  *    hash as id — trivial variants collapse BEFORE hashing, so LSH pairing
+  *    only carries genuinely distinct surfaces ([[surfaces]]);
+  *  - band keys and the band fan-out, `bands` rows per surface — shuffle
+  *    O(surfaces × bands) ([[bandKeysOf]], [[bandRows]]);
+  *  - pair verification: true Jaccard of char shingles ([[jaccardOk]]);
+  *  - canonical id = min member id of a connected component, canonical
+  *    surface = min (length, lexicographic) member — deterministic under any
+  *    partitioning ([[canonicalize]]);
+  *  - triple resolution and support = distinct urls ([[resolveTriples]],
+  *    [[support]]).
   */
 object Linker {
 
@@ -38,9 +43,7 @@ object Linker {
       }
   }
 
-  /** LSH band keys of a normalized surface — the ONE definition shared by
-    * the batch pairing and the incremental stream attach
-    * ([[graft.streaming.StreamLink]]): `bands` keys, each a splitmix-
+  /** LSH band keys of a normalized surface: `bands` keys, each a splitmix-
     * finalized fold over its k/bands minhash lanes. */
   def bandKeysOf(norm: String, k: Int = 8, bands: Int = 4,
       shingleN: Int = 2): Seq[Long] = {
@@ -51,6 +54,21 @@ object Linker {
         (b * rows until (b + 1) * rows).foldLeft(b.toLong)((acc, j) => acc * 31 + mh(j)))
     }
   }
+
+  /** The band fan-out of `df`: one row per band key of its `norm` column,
+    * `bucket` first, then every column of `df`. */
+  private[graft] def bandRows(df: DataFrame, shingleN: Int, k: Int = 8,
+      bands: Int = 4): DataFrame = {
+    val keys = udf((norm: String) => bandKeysOf(norm, k, bands, shingleN))
+    df.select(explode(keys(col("norm"))).as("bucket") +: df.columns.toSeq.map(col): _*)
+  }
+
+  /** Whether two normalized surfaces are the same entity: true Jaccard of
+    * their char shingles at or above `threshold`. */
+  private[graft] def jaccardOk(na: String, nb: String, shingleN: Int,
+      threshold: Double): Boolean =
+    Hashing.jaccard(Hashing.charShingles(na, shingleN),
+      Hashing.charShingles(nb, shingleN)) >= threshold
 
   /** Candidate same-entity edges via minhash/LSH over char 2-gram shingles
     * of the normalized surface, verified by true Jaccard >= threshold.
@@ -80,9 +98,9 @@ object Linker {
     * [[resolution]] uses so ConnectedComponents' own checkpoint is the ONLY
     * materialization of the edge set (a second caller-side checkpoint would
     * store it twice). */
-  private def candidateEdgesLazy(surf: Dataset[SurfaceKey], k: Int = 8,
-      bands: Int = 4, shingleN: Int = 2, threshold: Double = 0.6,
-      bucketCap: Int = 1000, neighborWindow: Int = 8): (DataFrame, () => Unit) = {
+  private def candidateEdgesLazy(surf: Dataset[SurfaceKey], k: Int, bands: Int,
+      shingleN: Int, threshold: Double, bucketCap: Int,
+      neighborWindow: Int): (DataFrame, () => Unit) = {
     val spark = surf.sparkSession
     import spark.implicits._
     require(bands >= 1 && k % bands == 0,
@@ -91,9 +109,7 @@ object Linker {
     // persisted: the bucket-size probe and the pairing both read the
     // fan-out, which would otherwise re-shingle + re-minhash every surface
     // per consumer (the same fix as the Dedup LSH signature tables)
-    val banded = surf.flatMap { sk =>
-      bandKeysOf(sk.norm, k, bands, shingleN).map(key => (key, sk.id, sk.norm))
-    }.toDF("bucket", "id", "norm").persist()
+    val banded = bandRows(surf.toDF().select("id", "norm"), shingleN, k, bands).persist()
 
     // hot buckets rank by normalized surface
     val edges = BucketPairs(banded, Seq("bucket"), bucketCap, neighborWindow,
@@ -102,52 +118,69 @@ object Linker {
       .distinct()
       .as[(Long, Long, String, String)]
       .flatMap { case (src, dst, na, nb) =>
-        val j = Hashing.jaccard(
-          Hashing.charShingles(na, shingleN), Hashing.charShingles(nb, shingleN))
-        if (j >= threshold) Some((src, dst)) else None
+        if (jaccardOk(na, nb, shingleN, threshold)) Some((src, dst)) else None
       }.toDF("src", "dst")
     (edges, () => { banded.unpersist(): Unit })
   }
 
-  /** surface → (canonical id, canonical surface). Canonical surface is the
-    * representative with min (length, lexicographic) in the component. */
+  /** Surfaces grouped into the connected components of `edges` over their
+    * `key` column (a key on no edge is its own component), each component
+    * canonicalized: `canonical_id` = min member `id`, `canonical_surface` =
+    * min (length, lexicographic) member `surface`. Returns every column of
+    * `surf` plus `component`, `canonical_id` and `canonical_surface`. Runs
+    * [[ConnectedComponents]] eagerly; the rest stays lazy. Window
+    * aggregates, not a group-by joined back: a caller that reads only
+    * `id` and `component` pays no shuffle for the canonical columns. */
+  private[graft] def canonicalize(surf: DataFrame, edges: DataFrame,
+      key: String): DataFrame = {
+    val comp = ConnectedComponents.run(edges)
+      .select(col("id").as("cc_key"), col("component").as("cc"))
+    val component = Window.partitionBy("component")
+    surf.join(comp, col(key) === col("cc_key"), "left")
+      .select(surf.columns.toSeq.map(col) :+
+        coalesce(col("cc"), col(key)).as("component"): _*)
+      .withColumn("canonical_id", min(col("id")).over(component))
+      .withColumn("canonical_surface", min(struct(length(col("surface")).as("l"),
+        col("surface").as("s"))).over(component).getField("s"))
+  }
+
+  /** surface → (canonical id, canonical surface), by [[canonicalize]] over
+    * the verified candidate edges. */
   def resolution(surf: Dataset[SurfaceKey]): DataFrame = {
-    val spark = surf.sparkSession
     // lazy edges: ConnectedComponents canonicalizes + checkpoints them as
     // its first step — the single materialization of the verify plan
-    val (edges, release) = candidateEdgesLazy(surf)
-    val comp = ConnectedComponents.run(edges)
+    val (edges, release) = candidateEdgesLazy(surf, k = 8, bands = 4, shingleN = 2,
+      threshold = 0.6, bucketCap = 1000, neighborWindow = 8)
+    val res = canonicalize(surf.toDF(), edges, "id")
     release()
-    val withComp = surf.toDF()
-      .join(comp, surf("id") === comp("id"), "left")
-      .select(col("surface"), col("norm"), surf("id").as("id"),
-        coalesce(col("component"), surf("id")).as("canonical_id"))
-    val reps = withComp
-      .groupBy("canonical_id")
-      .agg(min(struct(length(col("surface")).as("l"), col("surface").as("s"))).as("rep"))
-      .select(col("canonical_id"), col("rep.s").as("canonical_surface"))
-    withComp.join(reps, "canonical_id")
-      .select("surface", "canonical_id", "canonical_surface")
+    res.select("surface", "canonical_id", "canonical_surface")
   }
+
+  /** Url-grain canonical triples: each triple's subject and object mapped
+    * through `res` (surface, canonical_id, canonical_surface). */
+  private[graft] def resolveTriples(triples: DataFrame, res: DataFrame): DataFrame = {
+    val subjRes = res.select(col("surface").as("subject"),
+      col("canonical_id").as("subjectId"), col("canonical_surface").as("subjectCanon"))
+    val objRes = res.select(col("surface").as("obj"),
+      col("canonical_id").as("objectId"), col("canonical_surface").as("objectCanon"))
+    triples.join(subjRes, "subject").join(objRes, "obj")
+      .select(col("subjectId"), col("subjectCanon").as("subject"), col("subjectType"),
+        col("relation"), col("objectId"), col("objectCanon").as("obj"),
+        col("objectType"), col("url"))
+  }
+
+  /** Canonical triples with support counts from url-grain rows: distinct
+    * urls, so a url seen twice counts once. */
+  private[graft] def support(resolved: DataFrame): DataFrame =
+    resolved.groupBy("subjectId", "subject", "subjectType", "relation",
+        "objectId", "obj", "objectType")
+      .agg(countDistinct("url").as("urls"))
 
   /** Deduplicated canonical triples with support counts. */
   def canonicalTriples(triples: Dataset[Triple]): Dataset[CanonicalTriple] = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val res = resolution(surfaces(triples))
-    val subjRes = res.select(col("surface").as("subject"),
-      col("canonical_id").as("subjectId"), col("canonical_surface").as("subjectCanon"))
-    val objRes = res.select(col("surface").as("obj"),
-      col("canonical_id").as("objectId"), col("canonical_surface").as("objectCanon"))
-    triples.toDF()
-      .join(subjRes, "subject")
-      .join(objRes, "obj")
-      .groupBy("subjectId", "subjectCanon", "subjectType", "relation",
-        "objectId", "objectCanon", "objectType")
-      .agg(countDistinct("url").as("urls"))
-      .select(col("subjectId"), col("subjectCanon").as("subject"), col("subjectType"),
-        col("relation"), col("objectId"), col("objectCanon").as("obj"),
-        col("objectType"), col("urls"))
+    support(resolveTriples(triples.toDF(), resolution(surfaces(triples))))
       .as[CanonicalTriple]
   }
 }

@@ -5,46 +5,42 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.link.{ConnectedComponents, Linker}
-import graft.ops.{BucketPairs, Hashing}
+import graft.link.Linker
+import graft.ops.BucketPairs
 import graft.schema.Triple
 
-/** Incremental entity linking — the streaming twin of
-  * [[Linker.canonicalTriples]]: each micro-batch's NEW mention surfaces are
-  * LSH-banded and candidate-joined against the persisted canonical table,
-  * verified (true Jaccard), clustered among themselves, and appended to the
-  * state. Per-batch cost: the candidate JOIN is O(batch × candidates), and
-  * the state SCANS feeding it are pruned to the hash buckets the batch
-  * touches (`sbucket`/`pbucket` partition columns, below) — a batch that
-  * touches k of the N buckets reads ~k/N of the state, so month-of-drops
-  * state growth is paid only by the buckets a batch actually lands in (a
-  * batch large enough to touch every bucket reads the full state once —
-  * that is the floor any correct candidate join has).
+/** Incremental entity linking: [[Linker]]'s rules (surface keys, band
+  * keys, Jaccard verification, canonicalization, triple resolution and
+  * support) applied one micro-batch at a time. Each batch's NEW mention
+  * surfaces are LSH-banded and candidate-joined against the persisted
+  * canonical table, verified, clustered among themselves, and appended to
+  * the state. Per-batch cost: the candidate JOIN is O(batch × candidates),
+  * and the state SCANS feeding it are pruned to the hash buckets the batch
+  * touches (`sbucket`/`pbucket` partition columns, see [[writeState]]) — a
+  * batch that touches k of the N buckets reads ~k/N of the state, so
+  * month-of-drops state growth is paid only by the buckets a batch actually
+  * lands in (a batch large enough to touch every bucket reads the full
+  * state once — that is the floor any correct candidate join has).
   *
   * **Stability contract (the documented conflict rule):** a published
   * canonical id is NEVER rewritten. A surface keeps the canonical id and
   * representative it was first assigned, forever. When a batch BRIDGES two
   * existing components (one new-surface cluster verifies against canonical
-  * ids A and B, A < B), the new surfaces adopt the minimum id A, existing
-  * B-surfaces keep B, and the bridge `(kept=A, bridged=B)` is recorded in
-  * the `bridges` state table — the input for the OFFLINE compaction
-  * ([[graft.link.Compaction]]), which owns merging published components and
-  * emits the old→new migration map. In-stream rewriting would mean a
+  * ids A and B, A < B), the new surfaces adopt the minimum id A and its
+  * representative, existing B-surfaces keep B, and the bridge
+  * `(kept=A, bridged=B)` is recorded in the `bridges` state table — the
+  * input for the OFFLINE compaction ([[graft.link.Compaction]]), which owns
+  * merging published components and emits the old→new migration map. A
+  * new-surface cluster that attaches to nothing publishes its own batch-rule
+  * canonical id and representative. In-stream rewriting would mean a
   * consumer that joined against yesterday's ids silently disagrees with
   * today's table — at 10^12-doc scale that is a correctness bug, not a
   * convenience.
   *
-  * State tables under `stateDir`, all partitioned by `batch=<id>` and
-  * written with overwrite — a replayed micro-batch (foreachBatch gives
-  * at-least-once) overwrites its OWN partition and reads only state from
-  * batches strictly before it, so replays are idempotent:
-  *  - `surfaces/`: surface → (norm, id, canonical_id, canonical_surface),
-  *    sub-partitioned by `sbucket = pmod(xxhash64(surface), N)`
-  *  - `bands/`:    LSH band key → (id, norm, canonical_id, canonical_surface),
-  *    sub-partitioned by `pbucket = pmod(xxhash64(bucket), N)`
-  *  - `bridges/`:  (kept_id, bridged_id)
-  *  - `triples/`:  url-grain canonical-triple provenance rows (readers
-  *    aggregate countDistinct(url), exact under any delivery guarantee)
+  * Every batch writes its own `batch=<id>` partition of the state tables
+  * with overwrite ([[writeState]]) and reads only state from batches
+  * strictly before it — a replayed micro-batch (foreachBatch gives
+  * at-least-once) overwrites its OWN partition, so replays are idempotent.
   *
   * The bucket count N and the shingle width are pinned in `_meta.json` on
   * the first batch and ADOPTED by every later one (the nStateBuckets param
@@ -62,6 +58,11 @@ object StreamLink {
     StructField("bucket", LongType), StructField("id", LongType),
     StructField("norm", StringType), StructField("canonical_id", LongType),
     StructField("canonical_surface", StringType)))
+  private val bridgeSchema = StructType(Seq(
+    StructField("kept_id", LongType), StructField("bridged_id", LongType)))
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Pinned per-state-dir parameters (see class doc). */
   final case class StateMeta(nStateBuckets: Int, shingleN: Int)
@@ -96,6 +97,14 @@ object StreamLink {
     finally out.close()
   }
 
+  /** The first state artifact — `_meta.json` or a state table — under
+    * `dir`, if any. */
+  private[graft] def stateArtifact(spark: SparkSession, dir: String): Option[String] = {
+    val (hfs, root) = fs(spark, dir)
+    Seq("_meta.json", "surfaces", "bands", "triples", "bridges")
+      .find(t => hfs.exists(new org.apache.hadoop.fs.Path(root, t)))
+  }
+
   /** Read `_meta.json`, or write it from the params on first contact. The
     * write is create-overwrite with constant content, so a replayed batch 0
     * re-writing it is a no-op in effect. */
@@ -114,13 +123,12 @@ object StreamLink {
         // as fresh would prune every read against partitions that don't
         // carry the bucket columns — state silently reads as EMPTY and
         // every published surface gets re-published. Refuse loudly.
-        val (hfs, root) = fs(spark, stateDir)
-        for (t <- Seq("surfaces", "bands", "triples", "bridges"))
-          require(!hfs.exists(new org.apache.hadoop.fs.Path(root, t)),
-            s"$stateDir contains a $t/ state table but no _meta.json — " +
-              "not a state dir this layout wrote; refusing to adopt it " +
-              "(relink from scratch, or compact the old state with the " +
-              "version that wrote it)")
+        val held = stateArtifact(spark, stateDir)
+        require(held.isEmpty,
+          s"$stateDir contains a ${held.getOrElse("")}/ state table but no _meta.json — " +
+            "not a state dir this layout wrote; refusing to adopt it " +
+            "(relink from scratch, or compact the old state with the " +
+            "version that wrote it)")
         val meta = StateMeta(nStateBuckets, shingleN)
         writeMeta(spark, stateDir, meta)
         meta
@@ -139,10 +147,8 @@ object StreamLink {
     * an empty read that re-publishes every surface. */
   private def readState(spark: SparkSession, path: String, schema: StructType,
       batchId: Long, prune: Option[(String, Column)] = None): DataFrame = {
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val (hfs, p) = fs(spark, path)
-    if (!hfs.exists(p)) empty
+    if (!hfs.exists(p)) emptyFrame(spark, schema)
     else {
       val full = StructType(schema.fields :+ StructField("batch", LongType) :+
         StructField(prune.fold("__unused")(_._1), LongType))
@@ -169,10 +175,6 @@ object StreamLink {
     readState(spark, s"$stateDir/surfaces", surfSchema, batchId,
       Some(("sbucket", col("sbucket").isin(touched: _*))))
 
-  private def jaccardOk(na: String, nb: String, shingleN: Int, threshold: Double): Boolean =
-    Hashing.jaccard(Hashing.charShingles(na, shingleN),
-      Hashing.charShingles(nb, shingleN)) >= threshold
-
   /** Link one micro-batch of triples against (and into) the state. Public
     * for direct testing; [[run]] wires it into foreachBatch. */
   def processBatch(batchDf: DataFrame, stateDir: String, batchId: Long,
@@ -197,8 +199,7 @@ object StreamLink {
     // surfaces' bands, so the pruned band read can only see MORE state than
     // the candidate join needs, never less
     val probes = batchSurf.select(bucketOf(col("surface"), nB).as("b"), lit("s").as("k"))
-      .unionByName(batchSurf.select(col("norm")).as[String]
-        .flatMap(n => Linker.bandKeysOf(n, shingleN = shingleN)).toDF("bucket")
+      .unionByName(Linker.bandRows(batchSurf.select("norm"), shingleN)
         .select(bucketOf(col("bucket"), nB).as("b"), lit("p").as("k")))
       .distinct().as[(Long, String)].collect()
     val sBuckets = probes.collect { case (b, "s") => b }.toSeq
@@ -211,12 +212,7 @@ object StreamLink {
     // persisted (lazily — no dedicated job): the band fan-out is read by
     // the candidate semi-join and the tagged union, which would otherwise
     // re-minhash every new surface once per consumer
-    val newBands = newSurf
-      .select(col("id"), col("norm"))
-      .as[(Long, String)]
-      .flatMap { case (id, norm) =>
-        Linker.bandKeysOf(norm, shingleN = shingleN).map(b => (b, id, norm))
-      }.toDF("bucket", "id", "norm").persist()
+    val newBands = Linker.bandRows(newSurf.select("id", "norm"), shingleN).persist()
     val exBands = bandState(spark, stateDir, batchId, pBuckets)
 
     // ---- candidate pairs under the hot-band guard ([[BucketPairs]]): the
@@ -259,7 +255,7 @@ object StreamLink {
       .select(col("nid").as("src"), col("oid").as("dst"), col("na"), col("nb"))
       .as[(Long, Long, String, String)]
       .flatMap { case (s, d, na, nb) =>
-        if (jaccardOk(na, nb, shingleN, threshold)) Some((s, d)) else None
+        if (Linker.jaccardOk(na, nb, shingleN, threshold)) Some((s, d)) else None
       }.toDF("src", "dst")
 
     // verified attachments: new surface → existing canonical component (the
@@ -271,18 +267,15 @@ object StreamLink {
       .select(col("nid"), col("na"), col("nb"), col("ex_cid"), col("ex_rep"))
       .as[(Long, String, String, Long, String)]
       .flatMap { case (nid, na, nb, cid, rep) =>
-        if (jaccardOk(na, nb, shingleN, threshold)) Some((nid, cid, rep)) else None
+        if (Linker.jaccardOk(na, nb, shingleN, threshold)) Some((nid, cid, rep)) else None
       }.toDF("nid", "ex_cid", "ex_rep").distinct().persist()
 
-    val comp = ConnectedComponents.run(nn)
-    val withComp = newSurf
-      .join(comp.withColumnRenamed("id", "cc_id"), col("id") === col("cc_id"), "left")
-      .select(col("surface"), col("norm"), col("id"),
-        coalesce(col("component"), col("id")).as("component"))
+    // the new surfaces' own components, canonicalized by the batch rule
+    val fresh = Linker.canonicalize(newSurf, nn, "id")
 
     // conflict rule: a component adopting ≥2 existing canonical ids takes
     // the MINIMUM; the others are recorded as bridges, never rewritten
-    val neComp = ne.join(withComp.select(col("id").as("nid"), col("component")), "nid")
+    val neComp = ne.join(fresh.select(col("id").as("nid"), col("component")), "nid")
     // one aggregation carries BOTH the adopted minimum and the full distinct
     // cid set per component (collect_set is bounded by the number of
     // existing components one batch-component bridges), so the bridge
@@ -297,32 +290,13 @@ object StreamLink {
       .filter(col("bridged_id") =!= col("kept_id"))
       .distinct()
 
-    // fresh components: representative = min (length, lexicographic), the
-    // batch path's rule
-    val newReps = withComp.groupBy("component")
-      .agg(min(struct(length(col("surface")).as("l"), col("surface").as("s"))).as("r"))
-      .select(col("component"), col("r.s").as("new_rep"))
-    val assigned = withComp
+    val assigned = fresh
       .join(adopt, Seq("component"), "left")
-      .join(newReps, Seq("component"))
       .select(col("surface"), col("norm"), col("id"),
-        coalesce(col("adopt_cid"), col("component")).as("canonical_id"),
-        coalesce(col("adopt_rep"), col("new_rep")).as("canonical_surface"))
+        coalesce(col("adopt_cid"), col("canonical_id")).as("canonical_id"),
+        coalesce(col("adopt_rep"), col("canonical_surface")).as("canonical_surface"))
       .localCheckpoint() // consumed by three writes + the batch resolution
 
-    // bucketed tables repartition BY the bucket column first: every bucket's
-    // rows land in one task, so each pbucket/sbucket dir gets ONE file
-    // instead of (shuffle partitions × buckets) fragments — at month-of-
-    // drops scale the state stays one file per (batch, bucket), and the
-    // pruned reads open exactly as many files as buckets touched
-    def overwrite(df: DataFrame, table: String, bucket: Option[(String, Column)] = None): Unit =
-      bucket match {
-        case Some((name, c)) => df.withColumn(name, c)
-          .repartition(col(name)).write.mode("overwrite")
-          .partitionBy(name).parquet(s"$stateDir/$table/batch=$batchId")
-        case None =>
-          df.write.mode("overwrite").parquet(s"$stateDir/$table/batch=$batchId")
-      }
     // this batch's canonical (triple, url) provenance rows under the batch's
     // OWN resolution — the existing-state side is the bucket-pruned exSurf
     // semi-joined to the batch's surfaces (every subject/obj of this batch
@@ -330,38 +304,57 @@ object StreamLink {
     // full history). Url-grain, NOT pre-aggregated: summing per-batch counts
     // would double-count a url re-delivered in a later batch (re-crawl
     // appended to the drop dir, a non-file source), so the reader aggregates
-    // countDistinct over the provenance instead
+    // [[Linker.support]] over the provenance instead
     val res = exSurf
       .join(batchSurf.select("surface"), Seq("surface"), "left_semi")
       .select("surface", "canonical_id", "canonical_surface")
       .unionByName(assigned.select("surface", "canonical_id", "canonical_surface"))
-    val subjRes = res.select(col("surface").as("subject"),
-      col("canonical_id").as("subjectId"), col("canonical_surface").as("subjectCanon"))
-    val objRes = res.select(col("surface").as("obj"),
-      col("canonical_id").as("objectId"), col("canonical_surface").as("objectCanon"))
-    val provenance = triples.toDF()
-      .join(subjRes, "subject").join(objRes, "obj")
-      .select(col("subjectId"), col("subjectCanon").as("subject"), col("subjectType"),
-        col("relation"), col("objectId"), col("objectCanon").as("obj"),
-        col("objectType"), col("url"))
-      .distinct()
-    // the four state writes are mutually independent (each reads only the
-    // `assigned` checkpoint / cached ne / pruned state), so they run
-    // CONCURRENTLY: one write's straggler tail back-fills with the next
-    // write's tasks instead of leaving the scheduler idle (guide-§2.6 shape;
-    // job-description thread-locality keeps each labelled correctly)
+    writeState(stateDir, batchId, assigned, bridges,
+      Linker.resolveTriples(triples.toDF(), res), meta)
+    tagged.unpersist(); newBands.unpersist(); ne.unpersist()
+  }
+
+  /** The ONE writer of the state layout: the four tables of batch
+    * `batchId` under `dir`, each written with overwrite to its own
+    * `batch=<batchId>` partition —
+    *  - `surfaces/`: `surfaces` as given — (surface, norm, id, canonical_id,
+    *    canonical_surface) — sub-partitioned by
+    *    `sbucket = pmod(xxhash64(surface), N)`;
+    *  - `bands/`: the [[Linker.bandRows]] fan-out of `surfaces` — (bucket,
+    *    id, norm, canonical_id, canonical_surface) — sub-partitioned by
+    *    `pbucket = pmod(xxhash64(bucket), N)`;
+    *  - `bridges/`: (kept_id, bridged_id);
+    *  - `triples/`: the distinct url-grain provenance rows of `triples`.
+    * N is `meta.nStateBuckets`. A bucketed table is repartitioned BY its
+    * bucket column first, so every bucket's rows land in one task and each
+    * `sbucket=`/`pbucket=` dir holds ONE file instead of (shuffle partitions
+    * × buckets) fragments: the state stays one file per (batch, bucket) at
+    * any size, and a pruned read opens exactly as many files as buckets
+    * touched. `surfaces` should be materialized — the surface write and the
+    * band fan-out both read it.
+    *
+    * The four writes are mutually independent, so they run
+    * [[concurrently]]: one write's straggler tail back-fills with the next
+    * write's tasks instead of leaving the scheduler idle (job-description
+    * thread-locality keeps each labelled correctly). */
+  private def writeState(dir: String, batchId: Long, surfaces: DataFrame,
+      bridges: DataFrame, triples: DataFrame, meta: StateMeta): Unit = {
+    val nB = meta.nStateBuckets
+    def overwrite(df: DataFrame, table: String, bucket: Option[(String, Column)] = None): Unit =
+      bucket match {
+        case Some((name, c)) => df.withColumn(name, c)
+          .repartition(col(name)).write.mode("overwrite")
+          .partitionBy(name).parquet(s"$dir/$table/batch=$batchId")
+        case None =>
+          df.write.mode("overwrite").parquet(s"$dir/$table/batch=$batchId")
+      }
     concurrently(
-      () => overwrite(assigned, "surfaces",
-        Some(("sbucket", bucketOf(col("surface"), nB)))),
-      () => overwrite(assigned.select("id", "norm", "canonical_id", "canonical_surface")
-        .as[(Long, String, Long, String)]
-        .flatMap { case (id, norm, cid, rep) =>
-          Linker.bandKeysOf(norm, shingleN = shingleN).map(b => (b, id, norm, cid, rep))
-        }.toDF("bucket", "id", "norm", "canonical_id", "canonical_surface"),
+      () => overwrite(surfaces, "surfaces", Some(("sbucket", bucketOf(col("surface"), nB)))),
+      () => overwrite(Linker.bandRows(
+          surfaces.select("id", "norm", "canonical_id", "canonical_surface"), meta.shingleN),
         "bands", Some(("pbucket", bucketOf(col("bucket"), nB)))),
       () => overwrite(bridges, "bridges"),
-      () => overwrite(provenance, "triples"))
-    tagged.unpersist(); newBands.unpersist(); ne.unpersist()
+      () => overwrite(triples.distinct(), "triples"))
   }
 
   /** Run independent Spark actions concurrently, wait until EVERY one has
@@ -413,15 +406,11 @@ object StreamLink {
       .select("subjectId", "subject", "subjectType", "relation",
         "objectId", "obj", "objectType", "url")
 
-  /** Aggregated canonical triples across batches. Support counts are
-    * countDistinct over the url-grain provenance rows, so a url
-    * re-delivered in a later batch counts ONCE — exact regardless of the
-    * source's delivery guarantees. */
+  /** Aggregated canonical triples across batches: [[Linker.support]] over
+    * the url-grain provenance rows, so a url re-delivered in a later batch
+    * counts ONCE — exact regardless of the source's delivery guarantees. */
   def readCanonicalTriples(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/triples")
-      .groupBy("subjectId", "subject", "subjectType", "relation",
-        "objectId", "obj", "objectType")
-      .agg(countDistinct("url").as("urls"))
+    Linker.support(readTripleProvenance(spark, stateDir))
 
   /** Bridge ledger: components published separately that later batches
     * proved equal — the offline compaction work list. */
@@ -429,10 +418,9 @@ object StreamLink {
     spark.read.parquet(s"$stateDir/bridges").select("kept_id", "bridged_id").distinct()
 
   /** Write a FULL canonical state as `batch=-1` of a fresh `outDir` — the
-    * sink [[graft.link.Compaction]] targets. The layout (bucket partition
-    * columns, `_meta.json` pinning) is identical to what [[processBatch]]
-    * writes, so a stream resumed against `outDir` links incrementally
-    * against the compacted state with no special casing.
+    * sink [[graft.link.Compaction]] targets: `_meta.json` pinning plus
+    * [[writeState]], so a stream resumed against `outDir` links
+    * incrementally against the compacted state with no special casing.
     *
     * The RESERVED batch id −1 is what makes that unconditional: every
     * `processBatch(batchId ≥ 0)` read includes `batch < batchId` state, so
@@ -442,44 +430,12 @@ object StreamLink {
     * state AND destroy the snapshot partition with their own overwrite:
     * silent re-publication plus state loss.
     *
-    * `surfacesDf`: (surface, norm, id, canonical_id, canonical_surface);
-    * `triplesDf`: url-grain provenance rows. The bridge ledger is written
-    * EMPTY — compaction consumed it. */
+    * `surfacesDf`: materialized (surface, norm, id, canonical_id,
+    * canonical_surface); `triplesDf`: url-grain provenance rows. The bridge
+    * ledger is written EMPTY — compaction consumed it. */
   private[graft] def writeStateSnapshot(spark: SparkSession, outDir: String,
       surfacesDf: DataFrame, triplesDf: DataFrame, meta: StateMeta): Unit = {
-    import spark.implicits._
     writeMeta(spark, outDir, meta)
-    val nB = meta.nStateBuckets
-    val sh = meta.shingleN
-    val surf = surfacesDf
-      .select("surface", "norm", "id", "canonical_id", "canonical_surface")
-      .localCheckpoint() // surface write + band fan-out read it
-    // same one-file-per-bucket layout as processBatch's overwrite; the four
-    // snapshot writes are independent (all off the surf checkpoint / the
-    // caller's triples frame) and run concurrently like the per-batch writes
-    concurrently(
-      () => surf.withColumn("sbucket", bucketOf(col("surface"), nB))
-        .repartition(col("sbucket"))
-        .write.mode("overwrite").partitionBy("sbucket")
-        .parquet(s"$outDir/surfaces/batch=-1"),
-      () => surf.select("id", "norm", "canonical_id", "canonical_surface")
-        .as[(Long, String, Long, String)]
-        .flatMap { case (id, norm, cid, rep) =>
-          Linker.bandKeysOf(norm, shingleN = sh).map(b => (b, id, norm, cid, rep))
-        }.toDF("bucket", "id", "norm", "canonical_id", "canonical_surface")
-        .withColumn("pbucket", bucketOf(col("bucket"), nB))
-        .repartition(col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket")
-        .parquet(s"$outDir/bands/batch=-1"),
-      () => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("kept_id", LongType),
-            StructField("bridged_id", LongType))))
-        .write.mode("overwrite").parquet(s"$outDir/bridges/batch=-1"),
-      () => triplesDf
-        .select("subjectId", "subject", "subjectType", "relation",
-          "objectId", "obj", "objectType", "url")
-        .distinct()
-        .write.mode("overwrite").parquet(s"$outDir/triples/batch=-1"))
+    writeState(outDir, -1, surfacesDf, emptyFrame(spark, bridgeSchema), triplesDf, meta)
   }
 }

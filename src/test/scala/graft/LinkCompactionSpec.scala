@@ -203,4 +203,75 @@ class LinkCompactionSpec extends SparkSpec {
     assert(res.count() === 4 * F + 2 * 50,
       "50 fresh families add one v0 subject + one object surface each")
   }
+
+  test("the band table is the band fan-out of the surface table, one file per bucket dir") {
+    import graft.synth.LinkCorpus
+    val root = Files.createTempDirectory("graft-compact-bands").toString
+    val state = s"$root/state"; val out = s"$root/compacted"
+    val F = 200L
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 1)
+      .unionByName(LinkCorpus.triples(spark, 0, F, 2)), state, batchId = 0)
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 0), state, batchId = 1)
+    Compaction.compact(spark, state, out).count()
+
+    def multiset[T](xs: Seq[T]): Map[T, Int] = xs.groupBy(identity).map { case (k, v) => k -> v.size }
+    for (dir <- Seq(state, out)) {
+      val surf = spark.read.parquet(s"$dir/surfaces")
+        .select("id", "norm", "canonical_id", "canonical_surface").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
+      val want = surf.flatMap { case (id, norm, cid, rep) =>
+        Linker.bandKeysOf(norm).map(b => (b, id, norm, cid, rep))
+      }
+      val got = spark.read.parquet(s"$dir/bands")
+        .select("bucket", "id", "norm", "canonical_id", "canonical_surface").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3), r.getString(4)))
+        .toSeq
+      assert(surf.nonEmpty && got.size === want.size, s"$dir band rows")
+      assert(multiset(got) === multiset(want),
+        s"$dir: bands must be the band fan-out of surfaces")
+
+      // one parquet file in every sbucket=/pbucket= directory
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      val bucketDirs = try {
+        val b = Seq.newBuilder[java.nio.file.Path]
+        s.iterator().forEachRemaining { p =>
+          val n = p.getFileName.toString
+          if (n.startsWith("sbucket=") || n.startsWith("pbucket=")) b += p
+        }
+        b.result()
+      } finally s.close()
+      assert(bucketDirs.nonEmpty)
+      for (d <- bucketDirs) {
+        val l = Files.list(d)
+        val n = try l.filter(_.getFileName.toString.endsWith(".parquet")).count() finally l.close()
+        assert(n === 1L, s"$d holds $n parquet files")
+      }
+    }
+  }
+
+  test("compaction refuses an outDir that already holds state") {
+    import graft.synth.LinkCorpus
+    val root = Files.createTempDirectory("graft-compact-guard").toString
+    val state = s"$root/state"; val other = s"$root/other"
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, 20, 1), state, batchId = 0)
+    StreamLink.processBatch(LinkCorpus.triples(spark, 20, 40, 1), other, batchId = 0)
+
+    // into itself: the snapshot would land beside the state's own batches
+    val self = intercept[IllegalArgumentException](Compaction.compact(spark, state, state))
+    assert(self.getMessage.contains(state) && self.getMessage.contains("_meta.json"),
+      self.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(state, "surfaces", "batch=-1")),
+      "a refused compaction must write nothing")
+    // into another state dir, and into a dir holding only a state table
+    val intoOther = intercept[IllegalArgumentException](Compaction.compact(spark, state, other))
+    assert(intoOther.getMessage.contains(other), intoOther.getMessage)
+    val tableOnly = s"$root/table-only"
+    Files.createDirectories(java.nio.file.Paths.get(tableOnly, "bridges"))
+    val intoTable = intercept[IllegalArgumentException](Compaction.compact(spark, state, tableOnly))
+    assert(intoTable.getMessage.contains(tableOnly) && intoTable.getMessage.contains("bridges"),
+      intoTable.getMessage)
+
+    // a fresh dir is accepted
+    assert(Compaction.compact(spark, state, s"$root/fresh").count() > 0)
+  }
 }

@@ -236,4 +236,19 @@ class StreamLinkSpec extends SparkSpec {
     assert(e.getMessage === "write failed")
     assert(siblingDone.get, "a sibling write was still running when the failure surfaced")
   }
+
+  test("one batch into a fresh state publishes what the batch linker publishes") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-streamlink-fresh").toString
+    val triples = LinkCorpus.triples(spark, 0, 300, 0)
+      .unionByName(graft.synth.Corpus.gold(spark, 60, seed = 7).toDF()
+        .select("url", "subjectType", "subject", "relation", "objectType", "obj"))
+      .localCheckpoint()
+    StreamLink.processBatch(triples, state, batchId = 0)
+    val cols = Seq("subjectId", "subject", "subjectType", "relation",
+      "objectId", "obj", "objectType", "urls")
+    val want = ClusterProbe.checksumOf(Linker.canonicalTriples(triples.as[Triple]).toDF(), cols)
+    assert(want._1 > 300L)
+    assert(ClusterProbe.checksumOf(StreamLink.readCanonicalTriples(spark, state), cols) === want)
+  }
 }
