@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Candidate pairs from a banded fan-out — the ONE pairing primitive behind
@@ -45,30 +45,32 @@ private[graft] object BucketPairs {
   /** Most hot buckets one split may collect to the driver. */
   private val hotLimit = 2000000
 
-  /** The small/hot split of a banded fan-out on its `buckets` columns.
-    * `sizes` holds (bucket columns, `bucket_n`); it is persisted only when
-    * asked for, for a stats read, and released by `releaseSizes()`. */
+  /** The small/hot split of a banded fan-out on its `buckets` columns,
+    * with its bucket counts. Each comes from the hot-list collect the split
+    * runs anyway: `hotBuckets`/`hotRows` from the collected `bucket_n`s, and
+    * `bucketCount` from a row count observed ([[Observed]]) on the size
+    * aggregation that collect evaluates whole — no job of their own. */
   final case class Split(buckets: Seq[String], small: DataFrame,
-      hotSubset: DataFrame, hotEmpty: Boolean, sizes: DataFrame,
-      releaseSizes: () => Unit)
+      hotSubset: DataFrame, hotBuckets: Long, hotRows: Long,
+      private val sizesSeen: Observation) {
+    def hotEmpty: Boolean = hotBuckets == 0
+    def bucketCount: Long = Observed.observedCount(sizesSeen)
+  }
 
-  def split(members: DataFrame, buckets: Seq[String], bucketCap: Int,
-      persistSizes: Boolean): Split = {
+  def split(members: DataFrame, buckets: Seq[String], bucketCap: Int): Split = {
     val spark = members.sparkSession
-    val keys = buckets.map(col)
-    val sizes = members.groupBy(keys: _*).agg(count(lit(1)).as("bucket_n"))
-    val sizesM = if (persistSizes) sizes.persist() else sizes
-    val hotKeys = sizesM.filter(col("bucket_n") > bucketCap).select(keys: _*)
-    val hot = hotKeys.limit(hotLimit + 1).collect()
+    val (sizes, sizesSeen) = Observed.counted(
+      members.groupBy(buckets.map(col): _*).agg(count(lit(1)).as("bucket_n")))
+    val hot = sizes.filter(col("bucket_n") > bucketCap).limit(hotLimit + 1).collect()
     require(hot.length <= hotLimit,
       s"over $hotLimit buckets exceed bucketCap=$bucketCap — pathological " +
         "banding (near-constant keys?); raise bucketCap or re-key the fan-out")
     val hotDf = broadcast(
-      spark.createDataFrame(java.util.Arrays.asList(hot: _*), hotKeys.schema))
+      spark.createDataFrame(java.util.Arrays.asList(hot: _*), sizes.schema))
     Split(buckets,
       if (hot.isEmpty) members else members.join(hotDf, buckets, "left_anti"),
-      members.join(hotDf, buckets, "left_semi"), hot.isEmpty, sizesM,
-      () => if (persistSizes) { sizesM.unpersist(); () } else ())
+      members.join(hotDf, buckets, "left_semi"), hot.length,
+      hot.map(_.getAs[Long]("bucket_n")).sum, sizesSeen)
   }
 
   /** Candidate pairs of `members` (see the object doc). `withSort` adds the
@@ -77,10 +79,9 @@ private[graft] object BucketPairs {
   def apply(members: DataFrame, buckets: Seq[String], bucketCap: Int,
       window: Int, withSort: DataFrame => DataFrame,
       newCol: Option[String] = None): DataFrame =
-    pairs(split(members, buckets, bucketCap, persistSizes = false), window,
-      withSort, newCol)
+    pairs(split(members, buckets, bucketCap), window, withSort, newCol)
 
-  /** [[apply]] over an existing [[split]] (callers that read its sizes). */
+  /** [[apply]] over an existing [[split]] (callers that read its counts). */
   def pairs(s: Split, window: Int, withSort: DataFrame => DataFrame,
       newCol: Option[String] = None): DataFrame = {
     val small = allPairs(s.small, s.buckets, newCol)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.link.ConnectedComponents
+import graft.ops.Observed.observedCount
 
 /** Deduplication operators for a web-scale training-data pipeline.
   *
@@ -18,6 +19,14 @@ import graft.link.ConnectedComponents
   *  - duplicate CLUSTERS (not just pairs) are resolved with the same
   *    large-star/small-star connected-components used by entity linking, so
   *    keeper selection is transitive-closure-correct.
+  *
+  * Stats (`onStats`): every field of a near-dup operator's stats record is a
+  * value the driver already holds (solved geometry, the hot-list collect,
+  * the doc-frequency cap) or a counter [[Observed]] on a frame the
+  * operator's own eager action evaluates — `ConnectedComponents.run` for
+  * minhash, the final `localCheckpoint` for simhash, embedding LSH and
+  * winnow. The plan, and the jobs it runs, are the same with or without the
+  * hook; the hook only reads the counters afterwards.
   */
 object Dedup {
 
@@ -252,9 +261,11 @@ object Dedup {
 
     // poison-pill guard: null id/text rows are excluded from clustering
     // (the final left join still emits every non-null-id doc, keeper = self)
-    val docs = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-      .as[(Long, String)].persist()
+    val (docsSeen, docsObs) = Observed.counted(
+      df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+        .as[(Long, String)])
+    val docs = docsSeen.persist()
     // minhash signature per doc — computed in one pass, no shuffle.
     // Persisted: the bucket-size aggregation and the small/hot split joins
     // all read the band fan-out, which would otherwise re-shingle +
@@ -275,13 +286,13 @@ object Dedup {
             slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")))): _*)))
       .toDF("id", "band", "bucket")
 
-    val split = BucketPairs.split(banded, Seq("band", "bucket"), bucketCap,
-      persistSizes = onStats.isDefined)
-    val cand = BucketPairs.pairs(split, neighborWindow,
+    val split = BucketPairs.split(banded, Seq("band", "bucket"), bucketCap)
+    val (candSeen, candObs) = Observed.counted(BucketPairs.pairs(split, neighborWindow,
         _.join(sigs.select(col("doc_id").as("id"),
           concat_ws(",", col("sig").cast("array<string>")).as("sort")), "id"))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .distinct().persist()
+      .distinct())
+    val cand = candSeen.persist()
 
     // verify candidates with true jaccard (re-shingle both sides); restrict
     // the text table to candidate members first so the full corpus text is
@@ -301,29 +312,14 @@ object Dedup {
         if (j >= threshold) Some((src, dst)) else None
       }.toDF("src", "dst")
     // no checkpoint here: ConnectedComponents.run canonicalizes + checkpoints
-    // its input as its FIRST step, so the verify plan is evaluated exactly
-    // once inside it — a caller-side checkpoint would store the edges twice.
-    // Unpersist after: CC.run returns only once the edges are materialized.
-    // With a stats hook the verify plan is PERSISTED (not checkpointed —
-    // that would double block-manager storage against CC's own checkpoint
-    // for the whole CC run, evictable cache doesn't): the count below
-    // materializes the cache once, CC's checkpoint reads it, and the cache
-    // is dropped right after CC returns.
-    val edges = if (onStats.isDefined) verified.persist() else verified
-    onStats.foreach { f =>
-      // one aggregation over the persisted bucket-size frame; cand and edges
-      // are persisted, so those counts run the verify join exactly once
-      val b = split.sizes.agg(
-        count(lit(1)),
-        count(when(col("bucket_n") > bucketCap, lit(1))),
-        coalesce(sum(when(col("bucket_n") > bucketCap, col("bucket_n"))),
-          lit(0L))).head()
-      f(MinhashStats(docs.count(), b.getLong(0), b.getLong(1), b.getLong(2),
-        cand.count(), edges.count()))
-    }
+    // its input as its FIRST step, so the verify plan (and the cand cache
+    // under it) is evaluated exactly once inside it — a caller-side
+    // checkpoint would store the edges twice. Unpersist after: CC.run
+    // returns only once the edges are materialized.
+    val (edges, edgesObs) = Observed.counted(verified)
     val comp = ConnectedComponents.run(edges)
-    if (onStats.isDefined) edges.unpersist()
-    split.releaseSizes()
+    onStats.foreach(f => f(MinhashStats(observedCount(docsObs), split.bucketCount,
+      split.hotBuckets, split.hotRows, observedCount(candObs), observedCount(edgesObs))))
     cand.unpersist(); sigs.unpersist(); docs.unpersist()
     df.filter(col(idCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"))
@@ -437,8 +433,8 @@ object Dedup {
     *
     * `onStats` (when provided) receives the solved geometry plus measured
     * candidate/verified-pair counts — the harness hook that lets a scale
-    * bench PROVE the linear-candidate claim instead of narrating it. The
-    * counts cost two extra actions over already-materialized frames. */
+    * bench PROVE the linear-candidate claim instead of narrating it. Both
+    * counts are observed during the final checkpoint (see the object doc). */
   def embeddingCosinePairsLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bits: Int = -1, bands: Int = -1,
       bucketCap: Int = 2000, neighborWindow: Int = 8,
@@ -560,9 +556,11 @@ object Dedup {
     // fallback needs), with no per-row string materialization — ~3× fewer
     // bytes through the rank exchange than a rebuilt binary string.
     // Persisted: candIds' union reads cand twice and the verify join once
-    val cand = BucketPairs(banded, Seq("band", "key"), bucketCap, neighborWindow,
-        _.join(sigs.select(col("id"), col("keys").as("sort")), "id"))
-      .distinct().persist()
+    val (candSeen, candObs) = Observed.counted(
+      BucketPairs(banded, Seq("band", "key"), bucketCap, neighborWindow,
+          _.join(sigs.select(col("id"), col("keys").as("sort")), "id"))
+        .distinct())
+    val cand = candSeen.persist()
 
     // exact-cosine verification of candidates only (primitive loops,
     // ascending-index accumulation like the exact path)
@@ -604,7 +602,7 @@ object Dedup {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       if (c >= threshold) Some((idA, idB, c)) else None
     }
-    val verified = (if (floatInput)
+    val (verifiedSeen, verifiedObs) = Observed.counted((if (floatInput)
         joinedCand.as[(Long, Long, Array[Float], Array[Float])]
           .mapPartitions(it => verifyPartition(it.map { case (b, a, va, vb) =>
             (b, a, upcast(va), upcast(vb))
@@ -612,13 +610,12 @@ object Dedup {
       else
         joinedCand.as[(Long, Long, Array[Double], Array[Double])]
           .mapPartitions(verifyPartition(_)))
-      .toDF("id_a", "id_b", "cosine")
-      .localCheckpoint() // eager: lets the caches release deterministically
-    // both counts are over materialized frames (cand is persisted and
-    // already consumed; verified is checkpointed) — metadata-cheap actions
-    onStats.foreach(f =>
-      f(LshStats(n, bandBits, nBands, cand.count(), verified.count(),
-        designRecall(bandBits, nBands))))
+      .toDF("id_a", "id_b", "cosine"))
+    // eager: lets the caches release deterministically, and evaluates both
+    // observed frames
+    val verified = verifiedSeen.localCheckpoint()
+    onStats.foreach(f => f(LshStats(n, bandBits, nBands, observedCount(candObs),
+      observedCount(verifiedObs), designRecall(bandBits, nBands))))
     cand.unpersist(); sigs.unpersist(); vecs.unpersist()
     verified.select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -668,7 +665,7 @@ object Dedup {
     * ever-greater numbers — measured as a disk-filling join at 1M docs with
     * cap 1000.) Never solves below 2: df-2 fingerprints are the minimum
     * overlap evidence, and a corpus whose df-2 tier alone exceeds the budget
-    * keeps it — the overrun is visible through the stats hook's analytic
+    * keeps it — the overrun is visible through the stats hook's drop
     * counters rather than silently returning nothing. `hist` is the
     * (df value → fingerprint count) histogram in any order. */
   private[graft] def solveDocFreqCap(hist: Array[(Long, Long)],
@@ -713,31 +710,38 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     // persisted: the frequency filter and the pairing reuse one
-    // winnowing pass; eager checkpoint lets the cache release deterministically
-    val fps = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        TextStats.winnowFingerprints(t, k, w).iterator.map(fp => (id, fp))
-      }.toDF("doc_id", "fp").persist()
+    // winnowing pass; eager checkpoint lets the cache release deterministically.
+    // Docs are counted on the per-doc fingerprint arrays, before the explode
+    // (an observed metric cannot be a DISTINCT count of the exploded rows).
+    val (fpLists, docsObs) = Observed(
+      df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+        .as[(Long, String)]
+        .map { case (id, t) => (id, TextStats.winnowFingerprints(t, k, w)) }
+        .toDF("doc_id", "fps"),
+      count(when(size(col("fps")) > 0, lit(1))).as("rows"))
+    val fps = fpLists.select(col("doc_id"), explode(col("fps")).as("fp")).persist()
     val freq = fps.groupBy("fp").agg(count(lit(1)).as("df_"))
-    // (df value → fingerprint count) histogram: the cap solver's and the
-    // stats hook's shared input — one extra aggregation over the persisted
-    // fingerprints, skipped entirely when neither consumer is active
-    val hist: Array[(Long, Long)] =
-      if (pairBudgetPerDoc <= 0 && onStats.isEmpty) Array.empty
-      else freq.groupBy(col("df_")).agg(count(lit(1)).as("nfp"))
-        .as[(Long, Long)].collect().sortBy(_._1)
     val cap: Long =
       if (pairBudgetPerDoc <= 0) maxDocFreq.toLong
       else {
+        // (df value → fingerprint count) histogram, the solver's input; the
         // budget scales with the INPUT doc count (one cheap pruned scan; docs
         // too short to fingerprint still widen the budget — intended: the
         // budget prices the corpus, the histogram prices the join)
+        val hist = freq.groupBy(col("df_")).agg(count(lit(1)).as("nfp"))
+          .as[(Long, Long)].collect()
         val nDocs = df.filter(col(idCol).isNotNull && col(textCol).isNotNull).count()
         solveDocFreqCap(hist, pairBudgetPerDoc.toDouble * nDocs, maxDocFreq)
       }
-    val rare = freq.filter(col("df_") <= cap).select("fp")
+    // the cap's drop counters ride the pairing's own pass over `freq`; this
+    // observed frame is built after the histogram job, so that job cannot
+    // complete it before `cap` is known
+    val dropped = col("df_") > cap
+    val (freqSeen, freqObs) = Observed(freq, count(lit(1)).as("fps"),
+      count(when(dropped, lit(1))).as("dropped_fps"),
+      coalesce(sum(when(dropped, col("df_"))), lit(0L)).as("dropped_rows"))
+    val rare = freqSeen.filter(!dropped).select("fp")
     val kept = fps.join(rare, Seq("fp"), "left_semi")
     // per-fingerprint pairs via the grouped all-pairs emitter of
     // [[BucketPairs]] (no hot split): each fingerprint's doc list is bounded
@@ -751,20 +755,15 @@ object Dedup {
     // df ≈ 10^7 puts ~80 MB in ONE buffer where a self-join would have
     // spilled — that configuration is the explicit exactness opt-in
     // documented above; the solved default keeps buffers at tens of bytes.
-    val out = BucketPairs.allPairs(kept.select(col("fp"), col("doc_id").as("id")), Seq("fp"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .localCheckpoint()
-    onStats.foreach { f =>
-      // dropped volumes are ANALYTIC in the collected histogram; the only
-      // cluster-side stats costs are the doc count and the output count
-      val dropped = hist.filter(_._1 > cap)
-      f(WinnowStats(fps.select("doc_id").distinct().count(),
-        hist.map(_._2).sum, cap,
-        dropped.map(_._2).sum, dropped.map { case (v, n) => v * n }.sum,
-        out.count()))
-    }
+    val (outSeen, outObs) = Observed.counted(
+      BucketPairs.allPairs(kept.select(col("fp"), col("doc_id").as("id")), Seq("fp"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared))
+    val out = outSeen.localCheckpoint()
+    onStats.foreach(f => f(WinnowStats(observedCount(docsObs),
+      observedCount(freqObs, "fps"), cap, observedCount(freqObs, "dropped_fps"),
+      observedCount(freqObs, "dropped_rows"), observedCount(outObs))))
     fps.unpersist()
     out
   }
@@ -772,9 +771,9 @@ object Dedup {
   /** Measured volumes of one [[simhashPairs]] invocation — the solved block
     * count (`blocks`: the combinatorial-blocking geometry) and table count,
     * the hot-bucket cap engagement counters (`hotBuckets`/`hotRows`), plus
-    * raw candidate volume (banded-join output rows before the Hamming gate),
-    * so both the geometry choice and the capped-bucket recall trade are
-    * measured, not silent. */
+    * raw candidate volume (pair rows as emitted, before the Hamming gate and
+    * the `distinct`), so both the geometry choice and the capped-bucket
+    * recall trade are measured, not silent. */
   final case class SimhashStats(docs: Long, blocks: Int, tables: Long,
       buckets: Long, hotBuckets: Long, hotRows: Long, candidates: Long,
       pairs: Long)
@@ -844,7 +843,8 @@ object Dedup {
     * `neighborWindow` positions apart in signature order are missed (every
     * emitted pair is still Hamming-verified, so precision is unaffected).
     * `onStats` carries the solved geometry and hot-bucket counters so the
-    * choice — and where the guarantee was traded — is measured per run. */
+    * choice — and where the guarantee was traded — is measured per run, at
+    * no job of its own (see the object doc). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bucketCap: Int = 1000, neighborWindow: Int = 8,
       blocks: Int = -1, candBudgetPerDoc: Int = 16,
@@ -860,14 +860,16 @@ object Dedup {
     // banding — an unguarded degenerate signature-0 band over all of them
     // would be an O(n²) pairing of contentless rows; exact dedup owns those
     // docs.
-    val sigs = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val f = Hashing.simhashFeatures(text)
-        if (f.isEmpty) None else Some((id, Hashing.simhash(f)))
-      }
-      .toDF("doc_id", "sim").persist()
+    val (sigsSeen, sigsObs) = Observed.counted(
+      df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+        .as[(Long, String)]
+        .flatMap { case (id, text) =>
+          val f = Hashing.simhashFeatures(text)
+          if (f.isEmpty) None else Some((id, Hashing.simhash(f)))
+        }
+        .toDF("doc_id", "sim"))
+    val sigs = sigsSeen.persist()
     // solved (or pinned) block geometry; the solver's n is one cached pass
     // over the persisted signatures
     val m = if (blocks > 0) blocks
@@ -893,40 +895,22 @@ object Dedup {
     val banded = sigs.select(col("doc_id").as("id"), col("sim"),
         posexplode(array(keyCols.toIndexedSeq: _*)))
       .toDF("id", "sim", "band", "key")
-    val split = BucketPairs.split(banded, Seq("band", "key"), bucketCap,
-      persistSizes = onStats.isDefined)
+    val split = BucketPairs.split(banded, Seq("band", "key"), bucketCap)
     // hot buckets rank by the full signature as a binary string (bin() of a
     // negative long is its 64-bit two's-complement form, so lexicographic
-    // order IS unsigned-integer order); the Hamming gate runs BEFORE the
-    // distinct() shuffle
-    val out = BucketPairs.pairs(split, neighborWindow,
-        _.withColumn("sort", lpad(bin(col("sim")), 64, "0")))
+    // order IS unsigned-integer order); candidates are counted as emitted,
+    // and the Hamming gate runs BEFORE the distinct() shuffle
+    val (cand, candObs) = Observed.counted(BucketPairs.pairs(split, neighborWindow,
+        _.withColumn("sort", lpad(bin(col("sim")), 64, "0"))))
+    val (outSeen, outObs) = Observed.counted(cand
       .select(col("id_a"), col("id_b"),
         bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .localCheckpoint() // eager: lets the caches release deterministically
-    onStats.foreach { f =>
-      // candidate volume is ANALYTIC in the bucket sizes (exact — ids are
-      // unique within a (band, key) bucket): the all-pairs path emits
-      // C(n,2) per bucket, sorted-neighborhood Σ_{j=1..W} (n−j) = W·n −
-      // W(W+1)/2 for n > cap > W. One tiny aggregation over the per-bucket
-      // counts instead of persisting + counting the candidate frame itself,
-      // so the stats hook costs the timed run almost nothing.
-      val w = neighborWindow.toLong
-      val b = split.sizes.agg(
-        count(lit(1)),
-        count(when(col("bucket_n") > bucketCap, lit(1))),
-        coalesce(sum(when(col("bucket_n") > bucketCap, col("bucket_n"))),
-          lit(0L)),
-        coalesce(sum(when(col("bucket_n") > bucketCap && col("bucket_n") > w,
-            lit(w) * col("bucket_n") - lit(w * (w + 1) / 2))
-          .otherwise(floor(col("bucket_n") * (col("bucket_n") - 1) / 2))),
-          lit(0L))).head()
-      f(SimhashStats(sigs.count(), m, subsets.length.toLong, b.getLong(0),
-        b.getLong(1), b.getLong(2), b.getLong(3), out.count()))
-    }
-    split.releaseSizes()
+      .distinct())
+    val out = outSeen.localCheckpoint() // eager: lets the caches release deterministically
+    onStats.foreach(f => f(SimhashStats(observedCount(sigsObs), m,
+      subsets.length.toLong, split.bucketCount, split.hotBuckets, split.hotRows,
+      observedCount(candObs), observedCount(outObs))))
     sigs.unpersist()
     out
   }

@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.io.TableIO
 import graft.link.Linker
+import graft.ops.Observed
+import graft.ops.Observed.observedCount
 import graft.schema.Triple
 
 /** End-to-end KG materialization with per-partition lineage + resume
@@ -43,21 +44,11 @@ object Pipeline {
     * watches, complementing the persisted TableIO lineage manifests. */
   final case class StageRun(newBuckets: Int, metrics: Map[String, Long])
 
-  private def observedCount(obs: Observation): Long =
-    obs.get.get("rows").collect { case l: Long => l }.getOrElse(0L)
-
   /** Runs (or resumes) the extract stage. Returns buckets newly committed
     * plus the observed rows entering the inference barrier and triples out —
     * collected via `df.observe()` during the ONE evaluation the stage
-    * performs (no extra jobs).
-    *
-    * Placement note (100 TB): a CollectMetrics node is a predicate-pushdown
-    * BARRIER (verified on Spark 4.1 — filters above it reach the scan as
-    * `PushedFilters: []`). Observing PRE-filter row counts would therefore
-    * force the scan to read every row, defeating partition/row-group pruning
-    * of the prepare filters. Both observation points sit ABOVE all
-    * pushdown-eligible filters, so the scan plan is byte-identical to the
-    * un-instrumented one. */
+    * performs (no extra jobs). Both observation points sit ABOVE the prepare
+    * filters, so partition/row-group pruning is intact ([[Observed]]). */
   def runExtract(pages: DataFrame, cfg: Config): StageRun = {
     // fully-committed resume: return BEFORE wiring observations —
     // writeStage would no-op without ever executing the observed plan, and
@@ -65,14 +56,11 @@ object Pipeline {
     val committed = TableIO.committedBuckets(pages.sparkSession, triplesDir(cfg),
       "extract", cfg.nBuckets, cfg.inputSnapshot)
     if (committed.size == cfg.nBuckets) return StageRun(0, Map.empty)
-    val obsPrep = Observation()
-    val obsOut = Observation()
     val pending = TableIO.pendingInput(pages, "url", triplesDir(cfg), "extract",
       cfg.nBuckets, cfg.inputSnapshot)
-    val prepared = Extract.prepare(pending, cfg.extractor)
-      .observe(obsPrep, count(lit(1)).as("rows"))
-    val triples = Extract.triplesFromPrepared(prepared, cfg.extractor).toDF()
-      .observe(obsOut, count(lit(1)).as("rows"))
+    val (prepared, obsPrep) = Observed.counted(Extract.prepare(pending, cfg.extractor))
+    val (triples, obsOut) = Observed.counted(
+      Extract.triplesFromPrepared(prepared, cfg.extractor).toDF())
     // cfg.completeInput: a pending url-bucket yielding ZERO triples (all
     // pages filtered, or no mentions) is then committed as genuinely done —
     // without the (0,0) commit it would re-run the kernel over those pages
@@ -100,12 +88,10 @@ object Pipeline {
     val committed = TableIO.committedBuckets(spark, encodedDir(cfg), "encode",
       cfg.nBuckets, cfg.inputSnapshot)
     if (committed.size == cfg.nBuckets) return StageRun(0, Map.empty)
-    val obs = Observation()
     val pending = TableIO.pendingInput(pages, "url", encodedDir(cfg), "encode",
       cfg.nBuckets, cfg.inputSnapshot)
     val qa = QaGen.qaSamples(pending, gold, maxSeq = cfg.extractor.maxSeq)
-    val enc = QaGen.encode(qa, cfg.extractor.maxSeq).toDF()
-      .observe(obs, count(lit(1)).as("rows"))
+    val (enc, obs) = Observed.counted(QaGen.encode(qa, cfg.extractor.maxSeq).toDF())
     val n = TableIO.writeStage(enc, encodedDir(cfg), "encode", "url",
       cfg.nBuckets, cfg.inputSnapshot, completeInput = cfg.completeInput)
     StageRun(n, Map("encode_samples_out" -> observedCount(obs)))
@@ -139,14 +125,10 @@ object Pipeline {
         val p = new org.apache.hadoop.fs.Path(canonicalDir(cfg))
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
-      val obsIn = Observation()
-      val obsOut = Observation()
-      val triples = TableIO.readStage(spark, triplesDir(cfg))
-        .select("url", "subjectType", "subject", "relation", "objectType", "obj")
-        .observe(obsIn, count(lit(1)).as("rows"))
-        .as[Triple]
-      val canonical = Linker.canonicalTriples(triples).toDF()
-        .observe(obsOut, count(lit(1)).as("rows"))
+      val (triples, obsIn) = Observed.counted(TableIO.readStage(spark, triplesDir(cfg))
+        .select("url", "subjectType", "subject", "relation", "objectType", "obj"))
+      val (canonical, obsOut) = Observed.counted(
+        Linker.canonicalTriples(triples.as[Triple]).toDF())
       val n = TableIO.writeStage(canonical, canonicalDir(cfg), "canonicalize",
         "subject", math.max(cfg.nBuckets / 8, 1), canonSnapshot,
         completeInput = cfg.completeInput)

@@ -1,8 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{BucketPairs, Dedup, Hashing}
+import graft.synth.WebDocs
 
 /** Dedup operator suite over crafted corpora with known duplicates. */
 class DedupSpec extends SparkSpec {
@@ -134,7 +139,7 @@ class DedupSpec extends SparkSpec {
         (300L until 320L).map(i => (i, 0, i)))
       .toDF("doc_id", "band", "key")
     val split = BucketPairs.split(banded, Seq("band", "key"),
-      bucketCap = 50, persistSizes = false)
+      bucketCap = 50)
     assert(!split.hotEmpty)
     // the fan-out side must be filtered by BROADCAST joins against the
     // collected hot-bucket list — a SortMergeJoin here means the split
@@ -530,6 +535,71 @@ class DedupSpec extends SparkSpec {
     // the cap must genuinely reduce volume vs the unguarded join
     assert(capped.size < uncapped.size / 5,
       s"capped=${capped.size} uncapped=${uncapped.size}")
+  }
+
+  /** Spark jobs `f` submits, counted by a listener on a job group of its
+    * own. A marker job in a second group closes the count: the listener bus
+    * delivers events in order, so once the marker's start arrives every job
+    * `f` started has been seen. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val seen = new AtomicInteger
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.incrementAndGet()
+          case Some(g) if g == group + "-end" => closed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      f
+      sc.setJobGroup(group + "-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(60, TimeUnit.SECONDS), "marker job never reported")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seen.get
+  }
+
+  test("near-dup stats ride the operator's own jobs: pinned fields, no extra job") {
+    val docs = WebDocs.documents(spark, 1000, seed = 11).localCheckpoint()
+    val emb = WebDocs.embeddings(spark, 600, seed = 12).localCheckpoint()
+    // each op runs with stats on (Some) and off (None); the small bucketCaps
+    // engage the hot-bucket path, maxDocFreq = 3 makes winnow drop
+    // fingerprints, and the budgeted winnow exercises the histogram job
+    val ops: Seq[(String, Option[Any => Unit] => Long)] = Seq(
+      "minhash" -> (h => Dedup.minhashLsh(docs, "doc_id", "text", shingleN = 8,
+        k = 16, bands = 4, threshold = 0.2, bucketCap = 1, onStats = h).count()),
+      "simhash" -> (h => Dedup.simhashPairs(docs, "doc_id", "text",
+        maxHamming = 3, bucketCap = 2, onStats = h).count()),
+      "emb" -> (h => Dedup.embeddingCosinePairsLsh(emb, "vec_id", "embedding",
+        threshold = 0.45, onStats = h).count()),
+      "winnow" -> (h => Dedup.winnowedOverlapPairs(docs, "doc_id", "text",
+        minShared = 3, maxDocFreq = 3, onStats = h).count()),
+      "winnow_budget" -> (h => Dedup.winnowedOverlapPairs(docs, "doc_id", "text",
+        minShared = 3, pairBudgetPerDoc = 2, onStats = h).count()))
+    // every field as the operators reported it when each stat was still
+    // taken by a count job of its own
+    val want = Map[String, Any](
+      "minhash" -> Dedup.MinhashStats(1000, 3420, 580, 1160, 150, 150),
+      "simhash" -> Dedup.SimhashStats(1000, 4, 4, 2139, 307, 1832, 6549, 101),
+      "emb" -> Dedup.LshStats(600, 8, 10, 7310, 50, Dedup.designRecall(8, 10)),
+      "winnow" -> Dedup.WinnowStats(1000, 94745, 3, 1247, 7799, 202),
+      "winnow_budget" -> Dedup.WinnowStats(1000, 94745, 2, 2722, 12224, 176))
+    ops.foreach { case (name, run) =>
+      var stats: Option[Any] = None
+      val withStats = jobsOf(run(Some(s => stats = Some(s))))
+      val without = jobsOf(run(None))
+      assert(stats === Some(want(name)), name)
+      assert(withStats === without, s"$name: $withStats jobs with stats, $without without")
+    }
   }
 
   test("hashing primitives are deterministic across calls") {

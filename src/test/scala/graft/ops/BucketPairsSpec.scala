@@ -57,6 +57,28 @@ class BucketPairsSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("split's bucket, hot-bucket and hot-row counts equal a naive groupBy count") {
+    import spark.implicits._
+    // two-column buckets: three planted hot buckets of different sizes in
+    // band 0, one in band 1, beside a cold tail of 1-3 member buckets
+    val hot = Seq((0, 7L, 300), (0, 8L, 120), (0, 9L, 51), (1, 7L, 80))
+    val members = (hot.flatMap { case (b, k, n) => (0 until n).map(i => (i.toLong, b, k)) } ++
+        (0L until 200L).flatMap(i => (0L to i % 3).map(j => (i * 10 + j, 1, 1000 + i))))
+      .toDF("id", "band", "key")
+    def naive(cap: Int) = {
+      val sizes = members.groupBy("band", "key").count()
+      val hotSizes = sizes.filter(col("count") > cap).as[(Int, Long, Long)].collect()
+      (sizes.count(), hotSizes.length.toLong, hotSizes.map(_._3).sum)
+    }
+    val s = BucketPairs.split(members, Seq("band", "key"), bucketCap = 50)
+    assert((s.bucketCount, s.hotBuckets, s.hotRows) === naive(50))
+    assert((s.hotBuckets, s.hotRows) === ((4L, 551L)))
+    // a cap above every bucket: empty hot list, counts 0/0
+    val none = BucketPairs.split(members, Seq("band", "key"), bucketCap = 1000)
+    assert(none.hotEmpty)
+    assert((none.bucketCount, none.hotBuckets, none.hotRows) === ((naive(1000)._1, 0L, 0L)))
+  }
+
   test("an empty hot list runs no rank jobs") {
     import spark.implicits._
     val members = (0L until 200L).map(i => (i % 20, i)).toDF("bucket", "id")
