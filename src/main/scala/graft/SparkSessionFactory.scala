@@ -5,7 +5,24 @@ import org.apache.spark.sql.SparkSession
 /** One place for the engine's recommended session configuration — the same
   * knobs a spark-submit deployment would set (SURVEY.md §4.2/§4.3):
   * AQE with skew-join splitting, sensible shuffle parallelism, native
-  * function registration (GraftExtensions).
+  * function registration (GraftExtensions), and a codegen cache that holds
+  * the engine's working set.
+  *
+  * Codegen cache: `CodeGenerator` keeps compiled classes in an LRU cache of
+  * `spark.sql.codegen.cache.maxEntries` entries, 100 by default. The engine
+  * runs many small plans per build and per micro-batch, and their distinct
+  * generated classes outnumber that: a perfbench `kg_batch` JVM holds 167
+  * after set-up and one build, a `kg_incremental` JVM (2 × `processBatch` +
+  * `compact` per pass) 340. An LRU cycled through a set larger than itself
+  * never hits, so at 100 every `kg_batch` build re-ran Janino 152–156 times
+  * and every incremental pass 374–461 times, for the same classes. At 2000
+  * a repeated pass compiles nothing (`CodegenCacheSpec`); what is left is
+  * the first compile of an AQE plan variant not met before, a handful per
+  * JVM. The bound still caps a long-lived JVM that plans ever-new queries.
+  * It is a static conf, so it must be set before the first codegen, which
+  * building the session here guarantees. Executors inherit it: inside a
+  * task on `local-cluster[1,1,1024]`, in the executor's own JVM,
+  * `SQLConf.get.codegenCacheMaxEntries` reads 2000.
   */
 object SparkSessionFactory {
 
@@ -25,6 +42,8 @@ object SparkSessionFactory {
       .master(master)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // compile each generated class once per JVM (see the object doc)
+      .config("spark.sql.codegen.cache.maxEntries", 2000)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

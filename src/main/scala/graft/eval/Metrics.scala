@@ -39,21 +39,20 @@ object Metrics {
   /** Triple-set precision/recall/F1, keyed by stable url (never positional —
     * J5, SURVEY.md §2.4).
     *
-    * All three counts ride ONE action: `g` is distinct on the FULL key, so a
-    * left join multiplies no `p` row — count(*) over the join is |p| and
-    * count(match marker) is exactly the left-semi hit count (null-keyed rows
-    * match in neither formulation); |g| cross-joins in as a 1-row aggregate.
-    * Three separate counts would re-evaluate the (kernel-bearing) pred plan
-    * per action unless the caller caches it. */
+    * All three counts ride ONE action over ONE read of each side: both sides
+    * are distinct on the FULL key, so a full-outer join on it yields each
+    * key once, marked `_p` if predicted and `_g` if gold — count(_p) is |p|,
+    * count(_g) is |g| and count(_p AND _g) the hit count. Null-keyed rows
+    * match nothing and count only on their own side. Three separate counts
+    * would re-evaluate the (kernel-bearing) pred plan per action unless the
+    * caller caches it. */
   def tripleSetPR(pred: Dataset[Triple], gold: Dataset[GoldTriple]): (Double, Double, Double) = {
-    val p = pred.toDF().select(tripleKey.map(col): _*).distinct()
-    val g = gold.toDF()
-      .select(col("url"), col("subjectType"), col("subject"), col("relation"),
-        col("objectType"), col("obj"))
-      .distinct()
-    val r = p.join(g.withColumn("_g", lit(1)), tripleKey, "left")
-      .agg(count(lit(1)).as("n_pred"), count(col("_g")).as("hit"))
-      .crossJoin(g.agg(count(lit(1)).as("n_gold")))
+    def marked(ds: Dataset[_], marker: String) =
+      ds.toDF().select(tripleKey.map(col): _*).distinct().withColumn(marker, lit(true))
+    val r = marked(pred, "_p").join(marked(gold, "_g"), tripleKey, "full_outer")
+      .agg(count(col("_p")).as("n_pred"),
+        count(when(col("_p") && col("_g"), lit(1))).as("hit"),
+        count(col("_g")).as("n_gold"))
       .head()
     val (nPred, hit, nGold) = (r.getLong(0).toDouble, r.getLong(1).toDouble, r.getLong(2).toDouble)
     val prec = if (nPred > 0) hit / nPred else 0.0

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Iceberg-style table facade: partitioned parquet + a JSON snapshot manifest
   * with per-bucket lineage (row count + order-independent checksum), giving
@@ -197,6 +198,10 @@ object TableIO {
     // committed dir here was produced by THIS (stage, nBuckets, snapshot) —
     // either just now or by an interrupted run whose manifest commit died
     // after the data was durably written (adopting those IS the resume).
+    // The schema is known (the key column as written, the int partition
+    // column), so passing it skips a footer-inference job per stage write.
+    val lineageSchema = StructType(Seq(df.schema(keyCol),
+      StructField("bucket", IntegerType)))
     val newDirs = bucketDirs()
       .flatMap { p => // non-numeric partition dirs (e.g. hive default) are skipped
         scala.util.Try(p.getName.stripPrefix("bucket=").toInt).toOption
@@ -204,7 +209,8 @@ object TableIO {
       }
     val manifests =
       if (newDirs.isEmpty) Array.empty[BucketManifest]
-      else spark.read.option("basePath", path).parquet(newDirs: _*)
+      else spark.read.schema(lineageSchema).option("basePath", path)
+        .parquet(newDirs: _*)
         .groupBy("bucket")
         .agg(count(lit(1)).as("rowCount"),
           coalesce(bit_xor(xxhash64(col(keyCol))), lit(0L)).as("checksum"))

@@ -124,4 +124,35 @@ class MetricsSpec extends SparkSpec {
     assert(macros("f1") === 0.0588)
     assert(macros("acc") === 1.0)
   }
+
+  test("triple-set P/R with null-keyed and duplicate rows equals a driver-side set computation") {
+    import spark.implicits._
+    import graft.schema.{GoldTriple, Span, Triple}
+    val t1 = Triple("u1", "Size", "mass", "rel", "Val", "3 cm")
+    val t2 = Triple("u1", "Size", "mass", "rel2", "Val", "4 cm") // pred only
+    val t3 = Triple(null, "Size", "x", "rel", "Val", "y")        // null url, both sides
+    val t4 = Triple("u2", "Size", "z", "rel", "Val", null)       // null obj, both sides
+    val t5 = Triple("u2", "Loc", "a", "rel", "Val", "b")
+    val t6 = Triple("u3", "Loc", "c", "rel", "Val", "d")         // gold only
+    val t7 = Triple("u3", "Loc", "e", "rel", "Val", "f")         // gold only
+    def gold(t: Triple) = GoldTriple(t.url, t.subjectType, t.subject, t.relation,
+      t.objectType, t.obj, Span(0, 1), Span(2, 3))
+    val predRows = Seq(t1, t1, t2, t3, t3, t4, t5)
+    val goldRows = Seq(t1, t1, t1, t3, t4, t4, t5, t6, t7)
+
+    // driver side: set semantics on the full key; a key holding a null
+    // matches nothing (SQL equality), but still counts on its own side
+    val pSet = predRows.toSet
+    val gSet = goldRows.toSet
+    def keyed(t: Triple) = t.productIterator.forall(_ != null)
+    val hit = pSet.count(t => keyed(t) && gSet.contains(t)).toDouble
+    val (wantP, wantR) = (hit / pSet.size, hit / gSet.size)
+    assert((pSet.size, gSet.size, hit) === ((5, 6, 2.0)), "fixture shape")
+
+    val (p, r, f1) = Metrics.tripleSetPR(spark.createDataset(predRows),
+      spark.createDataset(goldRows.map(gold)))
+    assert(p === wantP)
+    assert(r === wantR)
+    assert(f1 === 2 * wantP * wantR / (wantP + wantR))
+  }
 }

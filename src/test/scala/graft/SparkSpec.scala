@@ -4,16 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkSpec {
+  /** The engine's own session configuration (extensions, AQE, discovery
+    * threshold, codegen cache), so specs test what callers run; only the
+    * warehouse dir, app name and log level are the suite's own. */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkSessionFactory.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         SparkSessionFactory.scratchDir("graft-test-warehouse"))
-      .config("spark.ui.enabled", false)
-      .config("spark.driver.host", "localhost")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
