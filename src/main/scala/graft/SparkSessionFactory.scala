@@ -23,6 +23,20 @@ import org.apache.spark.sql.SparkSession
   * building the session here guarantees. Executors inherit it: inside a
   * task on `local-cluster[1,1,1024]`, in the executor's own JVM,
   * `SQLConf.get.codegenCacheMaxEntries` reads 2000.
+  *
+  * Local filesystem: `file:` paths go through [[graft.io.NioLocalFileSystem]].
+  * Without the native Hadoop library (not shipped with Spark's jars), the
+  * stock `RawLocalFileSystem.setPermission` forks `chmod` for every file,
+  * `.crc` file and directory a write creates, most of them for the
+  * 64-bucket state tables of each micro-batch. A JFR recording of a
+  * perfbench `kg_incremental` run counted 1,263 `chmod` starts per pass
+  * (424 and 416 for its two `processBatch` calls, 423 for `compact`); with
+  * the NIO filesystem it counts 0, and every file keeps the mode it had
+  * (`NioLocalFileSystemSpec`). Hadoop caches one filesystem per scheme per
+  * JVM, whichever conf made it first, so the setting holds in a JVM whose
+  * first `file:` access comes through a session built here. HDFS, S3 and
+  * other schemes are untouched; so are streaming checkpoints, which go
+  * through `FileContext` (`fs.AbstractFileSystem.file.impl`).
   */
 object SparkSessionFactory {
 
@@ -44,6 +58,8 @@ object SparkSessionFactory {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // compile each generated class once per JVM (see the object doc)
       .config("spark.sql.codegen.cache.maxEntries", 2000)
+      // set file: permissions in-process, not by forking chmod (object doc)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

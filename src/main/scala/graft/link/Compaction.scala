@@ -71,28 +71,31 @@ object Compaction {
     * batch partitions (`stateDir` itself, say) would publish every surface
     * twice and keep the old ledger. */
   def compact(spark: SparkSession, stateDir: String, outDir: String): DataFrame = {
-    val meta = StreamLink.readMeta(spark, stateDir).getOrElse(
-      throw new IllegalStateException(
-        s"$stateDir has no _meta.json — not a StreamLink state dir"))
-    val held = StreamLink.stateArtifact(spark, outDir)
-    require(held.isEmpty,
-      s"compaction target $outDir already holds ${held.getOrElse("")} — writing " +
-        "the snapshot beside existing state would publish every surface twice " +
-        "and keep the old bridge ledger; refusing (compact into a fresh dir)")
-    val surfaces = recanonicalized(spark, stateDir).localCheckpoint()
-    val mig = migrationOf(surfaces).localCheckpoint()
-    val triples = StreamLink.readTripleProvenance(spark, stateDir)
-      .join(mig.select(col("old_id").as("subjectId"),
-        col("new_id").as("s_id"), col("new_surface").as("s_surf")), "subjectId")
-      .join(mig.select(col("old_id").as("objectId"),
-        col("new_id").as("o_id"), col("new_surface").as("o_surf")), "objectId")
-      .select(col("s_id").as("subjectId"), col("s_surf").as("subject"),
-        col("subjectType"), col("relation"),
-        col("o_id").as("objectId"), col("o_surf").as("obj"),
-        col("objectType"), col("url"))
-    StreamLink.writeStateSnapshot(spark, outDir,
-      surfaces.select("surface", "norm", "id", "canonical_id", "canonical_surface"),
-      triples, meta)
-    mig
+    def label(phase: String) = s"Compaction $stateDir: $phase"
+    StreamLink.described(spark, label("compact")) {
+      val meta = StreamLink.readMeta(spark, stateDir).getOrElse(
+        throw new IllegalStateException(
+          s"$stateDir has no _meta.json — not a StreamLink state dir"))
+      val held = StreamLink.stateArtifact(spark, outDir)
+      require(held.isEmpty,
+        s"compaction target $outDir already holds ${held.getOrElse("")} — writing " +
+          "the snapshot beside existing state would publish every surface twice " +
+          "and keep the old bridge ledger; refusing (compact into a fresh dir)")
+      val surfaces = recanonicalized(spark, stateDir).localCheckpoint()
+      val mig = migrationOf(surfaces).localCheckpoint()
+      val triples = StreamLink.readTripleProvenance(spark, stateDir)
+        .join(mig.select(col("old_id").as("subjectId"),
+          col("new_id").as("s_id"), col("new_surface").as("s_surf")), "subjectId")
+        .join(mig.select(col("old_id").as("objectId"),
+          col("new_id").as("o_id"), col("new_surface").as("o_surf")), "objectId")
+        .select(col("s_id").as("subjectId"), col("s_surf").as("subject"),
+          col("subjectType"), col("relation"),
+          col("o_id").as("objectId"), col("o_surf").as("obj"),
+          col("objectType"), col("url"))
+      StreamLink.writeStateSnapshot(spark, outDir,
+        surfaces.select("surface", "norm", "id", "canonical_id", "canonical_surface"),
+        triples, meta, label)
+      mig
+    }
   }
 }

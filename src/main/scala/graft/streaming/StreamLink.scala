@@ -179,9 +179,16 @@ object StreamLink {
     * for direct testing; [[run]] wires it into foreachBatch. */
   def processBatch(batchDf: DataFrame, stateDir: String, batchId: Long,
       shingleN: Int = 2, threshold: Double = 0.6,
-      nStateBuckets: Int = 64): Unit = {
+      nStateBuckets: Int = 64): Unit =
+    described(batchDf.sparkSession, jobLabel(batchId, "probe"))(
+      linkBatch(batchDf, stateDir, batchId, shingleN, threshold, nStateBuckets))
+
+  /** [[processBatch]]'s body; it relabels its jobs as each phase begins. */
+  private def linkBatch(batchDf: DataFrame, stateDir: String, batchId: Long,
+      shingleN: Int, threshold: Double, nStateBuckets: Int): Unit = {
     val spark = batchDf.sparkSession
     import spark.implicits._
+    def phase(name: String): Unit = spark.sparkContext.setJobDescription(jobLabel(batchId, name))
     // ONE evaluation of the caller's batch plan, no matter how expensive:
     // isEmpty, the surface derivation and the provenance join below all read
     // this checkpoint (a foreachBatch frame is cheap to rescan, but a caller
@@ -204,6 +211,8 @@ object StreamLink {
       .distinct().as[(Long, String)].collect()
     val sBuckets = probes.collect { case (b, "s") => b }.toSeq
     val pBuckets = probes.collect { case (b, "p") => b }.toSeq
+
+    phase("candidates")
     val exSurf = surfaceState(spark, stateDir, batchId, sBuckets)
 
     val newSurf = batchSurf
@@ -271,10 +280,12 @@ object StreamLink {
       }.toDF("nid", "ex_cid", "ex_rep").distinct().persist()
 
     // the new surfaces' own components, canonicalized by the batch rule
+    phase("components")
     val fresh = Linker.canonicalize(newSurf, nn, "id")
 
     // conflict rule: a component adopting ≥2 existing canonical ids takes
     // the MINIMUM; the others are recorded as bridges, never rewritten
+    phase("assign")
     val neComp = ne.join(fresh.select(col("id").as("nid"), col("component")), "nid")
     // one aggregation carries BOTH the adopted minimum and the full distinct
     // cid set per component (collect_set is bounded by the number of
@@ -310,7 +321,7 @@ object StreamLink {
       .select("surface", "canonical_id", "canonical_surface")
       .unionByName(assigned.select("surface", "canonical_id", "canonical_surface"))
     writeState(stateDir, batchId, assigned, bridges,
-      Linker.resolveTriples(triples.toDF(), res), meta)
+      Linker.resolveTriples(triples.toDF(), res), meta, jobLabel(batchId, _))
     tagged.unpersist(); newBands.unpersist(); ne.unpersist()
   }
 
@@ -335,19 +346,20 @@ object StreamLink {
     *
     * The four writes are mutually independent, so they run
     * [[concurrently]]: one write's straggler tail back-fills with the next
-    * write's tasks instead of leaving the scheduler idle (job-description
-    * thread-locality keeps each labelled correctly). */
+    * write's tasks instead of leaving the scheduler idle. Each write's jobs
+    * are described as `label("write <table>")`. */
   private def writeState(dir: String, batchId: Long, surfaces: DataFrame,
-      bridges: DataFrame, triples: DataFrame, meta: StateMeta): Unit = {
+      bridges: DataFrame, triples: DataFrame, meta: StateMeta,
+      label: String => String): Unit = {
     val nB = meta.nStateBuckets
     def overwrite(df: DataFrame, table: String, bucket: Option[(String, Column)] = None): Unit =
-      bucket match {
+      described(df.sparkSession, label(s"write $table"))(bucket match {
         case Some((name, c)) => df.withColumn(name, c)
           .repartition(col(name)).write.mode("overwrite")
           .partitionBy(name).parquet(s"$dir/$table/batch=$batchId")
         case None =>
           df.write.mode("overwrite").parquet(s"$dir/$table/batch=$batchId")
-      }
+      })
     concurrently(
       () => overwrite(surfaces, "surfaces", Some(("sbucket", bucketOf(col("surface"), nB)))),
       () => overwrite(Linker.bandRows(
@@ -357,29 +369,41 @@ object StreamLink {
       () => overwrite(triples.distinct(), "triples"))
   }
 
+  /** The job description of one phase of batch `batchId`. */
+  private[graft] def jobLabel(batchId: Long, phase: String): String =
+    s"StreamLink batch $batchId: $phase"
+
+  /** Run `body` with Spark's job description set to `label`, then restore
+    * the caller's — so the Spark UI and any `SparkListener` can attribute
+    * the jobs of each phase without a tracer of their own. */
+  private[graft] def described[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(caller)
+  }
+
   /** Run independent Spark actions concurrently, wait until EVERY one has
     * completed or failed, then rethrow the first failure in argument order —
     * so no sibling write is still running when this throws. Used for the
     * per-batch state writes, whose jobs otherwise serialize their scheduler
-    * tails. */
+    * tails. Each action runs on a thread started by this call: Spark's local
+    * properties (job group, description) are inheritable thread-locals,
+    * copied when a thread is created, so a fresh thread submits its jobs
+    * under the caller's CURRENT group — `cancelJobGroup` reaches them. A
+    * pooled thread would keep the properties of whichever call created it. */
   private[streaming] def concurrently(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = writePool
-    Await.result(Future.sequence(fs.map(f => Future(scala.util.Try(f())))),
-      Duration.Inf).foreach(_.get)
+    val failures = new Array[Throwable](fs.size)
+    val threads = fs.zipWithIndex.map { case (f, i) =>
+      val t = new Thread(() => try f() catch { case e: Throwable => failures(i) = e },
+        "streamlink-state-write")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
   }
-
-  /** Small daemon pool for [[concurrently]] — 4 writes in flight is the most
-    * one batch submits. */
-  private lazy val writePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        (r: Runnable) => {
-          val t = new Thread(r, "streamlink-state-write")
-          t.setDaemon(true)
-          t
-        }))
 
   /** Streaming face: triples stream → per-micro-batch incremental linking. */
   def run(triples: Dataset[Triple], stateDir: String, checkpoint: String,
@@ -432,10 +456,12 @@ object StreamLink {
     *
     * `surfacesDf`: materialized (surface, norm, id, canonical_id,
     * canonical_surface); `triplesDf`: url-grain provenance rows. The bridge
-    * ledger is written EMPTY — compaction consumed it. */
+    * ledger is written EMPTY — compaction consumed it. `label` names the
+    * jobs of each table write, as in [[writeState]]. */
   private[graft] def writeStateSnapshot(spark: SparkSession, outDir: String,
-      surfacesDf: DataFrame, triplesDf: DataFrame, meta: StateMeta): Unit = {
+      surfacesDf: DataFrame, triplesDf: DataFrame, meta: StateMeta,
+      label: String => String): Unit = {
     writeMeta(spark, outDir, meta)
-    writeState(outDir, -1, surfacesDf, emptyFrame(spark, bridgeSchema), triplesDf, meta)
+    writeState(outDir, -1, surfacesDf, emptyFrame(spark, bridgeSchema), triplesDf, meta, label)
   }
 }

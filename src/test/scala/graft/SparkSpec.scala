@@ -18,7 +18,12 @@ object SparkSpec {
   }
 }
 
-/** Base suite with a shared local SparkSession. */
+/** Base suite with a shared local SparkSession, built when the suite is
+  * constructed, before any of its tests runs. Hadoop caches one `file:`
+  * filesystem per JVM, keyed by scheme and not by conf, so the first one
+  * made must come from the session's conf (its `fs.file.impl`): a test that
+  * reads a local file through a default `Configuration` before the session
+  * exists would pin the stock class for every suite after it. */
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSpec.spark
+  val spark: SparkSession = SparkSpec.spark
 }

@@ -251,4 +251,67 @@ class StreamLinkSpec extends SparkSpec {
     assert(want._1 > 300L)
     assert(ClusterProbe.checksumOf(StreamLink.readCanonicalTriples(spark, state), cols) === want)
   }
+
+  test("processBatch and compact label every job by phase, under the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("graft-streamlink-labels").toString
+    val state = s"$root/state"
+    // (job group, description) of every job, in submission order; marker
+    // jobs in group "between" split the calls, one in "end" closes them
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        if (prop("spark.jobGroup.id") == "end") closed.countDown()
+        else jobs.add((prop("spark.jobGroup.id"), prop("spark.job.description")))
+      }
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, null)
+      sc.parallelize(Seq(1), 1).count()
+    }
+    sc.addSparkListener(listener)
+    try {
+      // no description of the caller's own: every label comes from processBatch
+      sc.setJobGroup("g1", null)
+      StreamLink.processBatch(LinkCorpus.triples(spark, 0, 200, 1)
+        .unionByName(LinkCorpus.triples(spark, 0, 200, 2)), state, batchId = 0)
+      marker("between")
+      sc.setJobGroup("g2", null)
+      StreamLink.processBatch(LinkCorpus.triples(spark, 0, 200, 0), state, batchId = 1)
+      marker("between")
+      sc.setJobGroup("g3", null)
+      graft.link.Compaction.compact(spark, state, s"$root/compacted")
+      marker("end")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reported")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val all = jobs.toArray(Array.empty[(String, String)]).toSeq
+    val (first, rest) = all.span(_._1 != "between")
+    val (second, rest2) = rest.drop(1).span(_._1 != "between")
+    val compaction = rest2.drop(1)
+    assert(first.map(_._1).distinct === Seq("g1"))
+    assert(second.map(_._1).distinct === Seq("g2"),
+      s"${second.count(_._1 != "g2")} of ${second.size} jobs of the second call ran outside its group")
+    assert(compaction.map(_._1).distinct === Seq("g3"))
+    // each call restores the caller's (empty) description after it
+    assert(all.filter(_._1 == "between").map(_._2).distinct === Seq(null))
+    val phases = Seq("probe", "candidates", "components", "assign") ++
+      Seq("surfaces", "bands", "bridges", "triples").map("write " + _)
+    for ((call, id) <- Seq((first, 0L), (second, 1L))) {
+      val labels = call.map(_._2)
+      assert(labels.toSet.subsetOf(phases.map(StreamLink.jobLabel(id, _)).toSet),
+        s"unlabelled or foreign jobs in batch $id: ${labels.distinct}")
+      assert(phases.forall(p => labels.contains(StreamLink.jobLabel(id, p))))
+    }
+    val compactLabels = ("compact" +: phases.filter(_.startsWith("write")))
+      .map(p => s"Compaction $state: $p")
+    assert(compaction.map(_._2).toSet === compactLabels.toSet)
+    // the labels add no job: the code before them submitted 36 and 42 here
+    assert((first.size, second.size) === ((36, 42)))
+  }
 }
