@@ -415,28 +415,32 @@ object Bench {
           (r.getLong(0), r.getLong(1))
         }
         // post-snapshot pruned-read evidence at THIS scale: numFiles from
-        // the executed scan itself, required equal to the touched buckets'
-        // on-disk file count (one file per bucket by the snapshot's write
-        // discipline) and strictly below the full state
+        // the executed scan itself, required equal to the on-disk file count
+        // of the dirs the touched buckets map to at the snapshot's level (one
+        // file per dir by the snapshot's write discipline) and strictly
+        // below the full state
         def bandFiles(sub: String): Int = {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "bands", sub))
-          try {
-            var n = 0
-            s.iterator().forEachRemaining(p =>
-              if (p.getFileName.toString.endsWith(".parquet")) n += 1)
-            n
-          } finally s.close()
+          val dir = java.nio.file.Paths.get(out, "bands", sub)
+          if (!java.nio.file.Files.isDirectory(dir)) 0
+          else {
+            val s = java.nio.file.Files.walk(dir)
+            try {
+              var n = 0
+              s.iterator().forEachRemaining(p =>
+                if (p.getFileName.toString.endsWith(".parquet")) n += 1)
+              n
+            } finally s.close()
+          }
         }
         val totalBandFiles = bandFiles("")
         val touched = Seq(3L, 17L)
-        for (b <- touched)
-          require(java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(out, "bands", "batch=-1", s"pbucket=$b")),
-            s"compaction fixture too small: $fam families (SPARK_GRAFT_COMPACT_FAMILIES) " +
-              s"left band bucket $b of ${StreamLink.readMeta(spark, out).get.nStateBuckets} " +
-              "empty in the snapshot; the pruned-read check needs buckets " +
-              touched.mkString(" and "))
-        val expectedFiles = touched.map(b => bandFiles(s"batch=-1/pbucket=$b")).sum
+        val nB = StreamLink.readMeta(spark, out).get.nStateBuckets
+        val expectedFiles = StreamLink.bucketDirs(touched, nB)
+          .map(d => bandFiles(s"batch=-1/pbucket=$d")).sum
+        require(expectedFiles > 0,
+          s"compaction fixture too small: $fam families (SPARK_GRAFT_COMPACT_FAMILIES) " +
+            s"left the dirs of band buckets ${touched.mkString(" and ")} of $nB empty " +
+            "in the snapshot")
         val pruned = StreamLink.bandState(spark, out, batchId = 0, touched)
         pruned.collect()
         val resolved = pruned.queryExecution.executedPlan match {

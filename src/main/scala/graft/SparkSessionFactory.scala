@@ -27,16 +27,24 @@ import org.apache.spark.sql.SparkSession
   * Local filesystem: `file:` paths go through [[graft.io.NioLocalFileSystem]].
   * Without the native Hadoop library (not shipped with Spark's jars), the
   * stock `RawLocalFileSystem.setPermission` forks `chmod` for every file,
-  * `.crc` file and directory a write creates, most of them for the
-  * 64-bucket state tables of each micro-batch. A JFR recording of a
+  * `.crc` file and directory a write creates. A JFR recording of a
   * perfbench `kg_incremental` run counted 1,263 `chmod` starts per pass
-  * (424 and 416 for its two `processBatch` calls, 423 for `compact`); with
-  * the NIO filesystem it counts 0, and every file keeps the mode it had
+  * (424 and 416 for its two `processBatch` calls, 423 for `compact`,
+  * before bucket levels cut the state files); with the NIO filesystem it
+  * counts 0, and every file keeps the mode it had
   * (`NioLocalFileSystemSpec`). Hadoop caches one filesystem per scheme per
   * JVM, whichever conf made it first, so the setting holds in a JVM whose
-  * first `file:` access comes through a session built here. HDFS, S3 and
-  * other schemes are untouched; so are streaming checkpoints, which go
-  * through `FileContext` (`fs.AbstractFileSystem.file.impl`).
+  * first `file:` access comes through a session built here. Streaming
+  * checkpoints (offsets, commits, metadata) and `TableIO`'s atomic renames
+  * go through Hadoop's other filesystem API, `FileContext`, whose `file:`
+  * binding is `fs.AbstractFileSystem.file.impl`; [[graft.io.NioLocalFs]]
+  * puts the same raw filesystem under it. There the stock binding also
+  * forks `readlink` for both paths of every rename, to learn that neither
+  * is a symlink: a one-batch `StreamLink.run` (50 `LinkCorpus` families)
+  * started 45 processes under `FileContext` (13 `chmod`, 32 `readlink`),
+  * and starts 0 with it (`NioLocalFileSystemSpec`). FileContext builds its
+  * filesystem from the conf it is given on every call, so this setting has
+  * no first-access caveat. HDFS, S3 and other schemes are untouched.
   */
 object SparkSessionFactory {
 
@@ -60,6 +68,7 @@ object SparkSessionFactory {
       .config("spark.sql.codegen.cache.maxEntries", 2000)
       // set file: permissions in-process, not by forking chmod (object doc)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Observed
 import graft.streaming.StreamLink
 
 /** Offline compaction for incremental linking — the consumer of
@@ -63,9 +64,12 @@ object Compaction {
   /** Compact `stateDir` into a fresh `outDir`: migrated surfaces + bands,
     * an EMPTY bridge ledger, and re-resolved url-grain triple provenance —
     * the state layout [[StreamLink.processBatch]] reads, so the stream
-    * continues against `outDir` with no special casing. Returns the
-    * migration map (eagerly materialized — it is also the write's input,
-    * and the caller persists it for consumers).
+    * continues against `outDir` with no special casing. The state tables
+    * are read whole, so `stateDir` may be in either bucket layout; the
+    * snapshot is written at the bucket level its own rows fill, in the
+    * level layout, which makes compaction the migration of a flat-layout
+    * dir. Returns the migration map (eagerly materialized — it is also the
+    * write's input, and the caller persists it for consumers).
     *
     * `outDir` must hold no state: a snapshot written beside another state's
     * batch partitions (`stateDir` itself, say) would publish every surface
@@ -81,7 +85,9 @@ object Compaction {
         s"compaction target $outDir already holds ${held.getOrElse("")} — writing " +
           "the snapshot beside existing state would publish every surface twice " +
           "and keep the old bridge ledger; refusing (compact into a fresh dir)")
-      val surfaces = recanonicalized(spark, stateDir).localCheckpoint()
+      // its observed row count sets the snapshot's bucket level
+      val (surfaceRows, surfaceObs) = Observed.counted(recanonicalized(spark, stateDir))
+      val surfaces = surfaceRows.localCheckpoint()
       val mig = migrationOf(surfaces).localCheckpoint()
       val triples = StreamLink.readTripleProvenance(spark, stateDir)
         .join(mig.select(col("old_id").as("subjectId"),
@@ -94,7 +100,7 @@ object Compaction {
           col("objectType"), col("url"))
       StreamLink.writeStateSnapshot(spark, outDir,
         surfaces.select("surface", "norm", "id", "canonical_id", "canonical_surface"),
-        triples, meta, label)
+        Observed.observedCount(surfaceObs), triples, meta, label)
       mig
     }
   }

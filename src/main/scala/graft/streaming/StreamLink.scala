@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.link.Linker
-import graft.ops.BucketPairs
+import graft.ops.{BucketPairs, Observed}
 import graft.schema.Triple
 
 /** Incremental entity linking: [[Linker]]'s rules (surface keys, band
@@ -16,11 +16,25 @@ import graft.schema.Triple
   * canonical table, verified, clustered among themselves, and appended to
   * the state. Per-batch cost: the candidate JOIN is O(batch × candidates),
   * and the state SCANS feeding it are pruned to the hash buckets the batch
-  * touches (`sbucket`/`pbucket` partition columns, see [[writeState]]) — a
-  * batch that touches k of the N buckets reads ~k/N of the state, so
-  * month-of-drops state growth is paid only by the buckets a batch actually
-  * lands in (a batch large enough to touch every bucket reads the full
-  * state once — that is the floor any correct candidate join has).
+  * touches (`sbucket`/`pbucket` partition columns, see [[writeState]]): a
+  * batch touching the set T of the N full-resolution buckets opens, of each
+  * earlier batch b, at most min(|T|, L_b) files, where L_b is the bucket
+  * level b was written at. So month-of-drops state growth is paid only by
+  * the buckets a batch actually lands in (a batch large enough to touch
+  * every bucket reads the full state once — that is the floor any correct
+  * candidate join has).
+  *
+  * **Bucket levels.** Each batch writes its bucketed tables at the level L
+  * its own rows fill: the largest power of two L ≤ N with
+  * `rows × rowBytes / L ≥ spark.sql.files.openCostInBytes` (1 when even one
+  * file holds less), `rowBytes` being the table schema's `defaultSize`. A
+  * file then always holds at least the bytes Spark's cost model charges for
+  * opening one, except the single file of a batch smaller than that, and a
+  * batch big enough writes at L = N. The partition value numbers buckets
+  * like a heap: a row of full-resolution bucket `t = pmod(xxhash64(key), N)`
+  * written at level L lands in dir `L + (t mod L)`; as N and L are powers
+  * of two, `t mod L` is its bucket at level L, so a pruned read lists the
+  * dirs of T at every level ([[bucketDirs]]) and stays exact.
   *
   * **Stability contract (the documented conflict rule):** a published
   * canonical id is NEVER rewritten. A surface keeps the canonical id and
@@ -42,11 +56,14 @@ import graft.schema.Triple
   * strictly before it — a replayed micro-batch (foreachBatch gives
   * at-least-once) overwrites its OWN partition, so replays are idempotent.
   *
-  * The bucket count N and the shingle width are pinned in `_meta.json` on
-  * the first batch and ADOPTED by every later one (the nStateBuckets param
-  * is ignored once pinned; a shingleN mismatch fails loudly) — a silently
-  * changed N would prune reads against partitions written under the old N
-  * and silently lose candidates.
+  * The bucket count N (a power of two), the shingle width and the bucket
+  * layout are pinned in `_meta.json` on the first batch and ADOPTED by every
+  * later one (the nStateBuckets param is ignored once pinned; a shingleN
+  * mismatch fails loudly) — a silently changed N would prune reads against
+  * partitions written under the old N and silently lose candidates. A dir
+  * written by the earlier flat layout (bucket t in dir t, no layout field)
+  * is refused for the same reason; [[graft.link.Compaction]] reads it whole
+  * and writes the level layout, which migrates it.
   */
 object StreamLink {
 
@@ -60,12 +77,22 @@ object StreamLink {
     StructField("canonical_surface", StringType)))
   private val bridgeSchema = StructType(Seq(
     StructField("kept_id", LongType), StructField("bridged_id", LongType)))
+  private val provenanceSchema = StructType(Seq(
+    StructField("subjectId", LongType), StructField("subject", StringType),
+    StructField("subjectType", StringType), StructField("relation", StringType),
+    StructField("objectId", LongType), StructField("obj", StringType),
+    StructField("objectType", StringType), StructField("url", StringType)))
 
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Pinned per-state-dir parameters (see class doc). */
-  final case class StateMeta(nStateBuckets: Int, shingleN: Int)
+  /** Pinned per-state-dir parameters (see class doc). `layout` is
+    * [[LevelLayout]] for every dir this code writes; [[FlatLayout]] marks a
+    * dir of the earlier layout, whose `_meta.json` has no layout field. */
+  final case class StateMeta(nStateBuckets: Int, shingleN: Int, layout: Int = LevelLayout)
+
+  private[graft] val FlatLayout = 1
+  private[graft] val LevelLayout = 2
 
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -82,18 +109,23 @@ object StreamLink {
       val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       def field(k: String) = s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(s"corrupt $metaPath: $txt"))
-      Some(StateMeta(field("nStateBuckets"), field("shingleN")))
+      def required(k: String) =
+        field(k).getOrElse(throw new IllegalStateException(s"corrupt $metaPath: $txt"))
+      Some(StateMeta(required("nStateBuckets"), required("shingleN"),
+        field("layout").getOrElse(FlatLayout)))
     }
   }
 
   private def writeMeta(spark: SparkSession, stateDir: String, meta: StateMeta): Unit = {
+    require(Integer.bitCount(meta.nStateBuckets) == 1,
+      s"nStateBuckets=${meta.nStateBuckets}: a state dir's bucket count must be a power " +
+        "of two, so that a bucket at every coarser level is the full-resolution " +
+        "bucket modulo that level")
     val (hfs, root) = fs(spark, stateDir)
     hfs.mkdirs(root)
     val out = hfs.create(new org.apache.hadoop.fs.Path(root, "_meta.json"), true)
-    try out.write(
-      s"""{"nStateBuckets": ${meta.nStateBuckets}, "shingleN": ${meta.shingleN}}"""
-        .getBytes("UTF-8"))
+    try out.write((s"""{"nStateBuckets": ${meta.nStateBuckets}, """ +
+      s""""shingleN": ${meta.shingleN}, "layout": ${meta.layout}}""").getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -116,6 +148,11 @@ object StreamLink {
           s"state dir $stateDir was built with shingleN=${meta.shingleN}; " +
             s"linking it with shingleN=$shingleN would band the same surface " +
             "under different keys and silently miss candidates")
+        require(meta.layout == LevelLayout,
+          s"state dir $stateDir was written by the flat bucket layout (bucket t in " +
+            "dir t); pruned reads under the bucket-level numbering would miss its " +
+            "candidates. Migrate it first: Compaction.compact it into a fresh dir " +
+            "and continue the stream against that")
         meta
       case None =>
         // a dir that already holds state tables but no _meta.json was
@@ -134,46 +171,74 @@ object StreamLink {
         meta
     }
 
+  /** The schema of a state table as stored: its data columns, then the
+    * `batch` partition column and, for a bucketed table, its bucket
+    * partition column. Every read passes it, so building a state frame runs
+    * no footer-inference job. */
+  private def stored(schema: StructType, bucket: Option[String] = None): StructType =
+    StructType((schema.fields :+ StructField("batch", LongType)) ++
+      bucket.map(StructField(_, LongType)))
+
   /** State read for batch `batchId`: only partitions from EARLIER batches —
-    * a replayed batch must not see its own failed attempt's output — and,
-    * when `prune` is given, only the hash-bucket partitions the batch
-    * touches (partition-directory pruning; the candidate join downstream is
-    * still exact on the full key). The schema (data + partition columns) is
-    * passed explicitly: no footer-based inference job per read, and a state
-    * dir whose only write died before any footer landed (just `_temporary`
-    * debris) lists no data files and reads as EMPTY — the crash window the
-    * replay contract covers. Any other failure (corrupt partition dir
-    * names, unreadable files) throws: state corruption must be loud, not
-    * an empty read that re-publishes every surface. */
-  private def readState(spark: SparkSession, path: String, schema: StructType,
-      batchId: Long, prune: Option[(String, Column)] = None): DataFrame = {
+    * a replayed batch must not see its own failed attempt's output — and
+    * only the rows of the full-resolution buckets `touched` of `key`. The
+    * scan lists just the `bucket` dirs that can hold them, at every level
+    * ([[bucketDirs]]; partition-directory pruning), and a row filter on
+    * the full-resolution bucket drops the other buckets that share a
+    * coarser dir. With the [[stored]] schema, a state dir whose only write
+    * died before any footer landed (just `_temporary` debris) lists no data
+    * files and reads as EMPTY — the crash window the replay contract
+    * covers. Any other failure (corrupt partition dir names, unreadable
+    * files) throws: state corruption must be loud, not an empty read that
+    * re-publishes every surface. */
+  private def readState(spark: SparkSession, stateDir: String, table: String,
+      schema: StructType, bucket: String, key: String, batchId: Long,
+      touched: Seq[Long]): DataFrame = {
+    val path = s"$stateDir/$table"
     val (hfs, p) = fs(spark, path)
     if (!hfs.exists(p)) emptyFrame(spark, schema)
     else {
-      val full = StructType(schema.fields :+ StructField("batch", LongType) :+
-        StructField(prune.fold("__unused")(_._1), LongType))
-      val base = spark.read.schema(
-          if (prune.isDefined) full else StructType(full.dropRight(1)))
-        .parquet(path).filter(col("batch") < batchId)
-      prune.fold(base) { case (_, c) => base.filter(c) }
+      val n = readMeta(spark, stateDir).fold(1)(_.nStateBuckets)
+      spark.read.schema(stored(schema, Some(bucket))).parquet(path)
+        .filter(col("batch") < batchId && col(bucket).isin(bucketDirs(touched, n): _*))
+        .filter(bucketOf(col(key), n).isin(touched: _*))
         .select(schema.fieldNames.map(col).toSeq: _*)
     }
   }
 
   private def bucketOf(c: Column, n: Int): Column = pmod(xxhash64(c), lit(n.toLong))
 
+  /** The bucket dir of `key` at level `level` (see the class doc): the
+    * heap number `level + pmod(xxhash64(key), level)`. */
+  private def bucketDir(key: Column, level: Int): Column =
+    lit(level.toLong) + bucketOf(key, level)
+
+  /** The dirs that can hold a row of full-resolution bucket t ∈ `touched`
+    * of an N = `n` bucket state: `L + (t mod L)` for every level L = 1, 2,
+    * 4, …, N. */
+  private[graft] def bucketDirs(touched: Seq[Long], n: Int): Seq[Long] =
+    Iterator.iterate(1L)(_ * 2).takeWhile(_ <= n)
+      .flatMap(l => touched.map(t => l + t % l)).toSeq.distinct
+
+  /** The bucket level of a table of `rows` rows of `schema` (class doc): the
+    * largest power of two L ≤ `n` with `rows × schema.defaultSize / L ≥
+    * openCost`, 1 when even a single file holds less. */
+  private[streaming] def bucketLevel(rows: Long, schema: StructType, openCost: Long,
+      n: Int): Int = {
+    val fill = rows * schema.defaultSize / math.max(openCost, 1L)
+    if (fill < 1) 1 else math.min(java.lang.Long.highestOneBit(fill), n.toLong).toInt
+  }
+
   /** The pruned band-state read for one batch — package-visible so the spec
     * can assert the scan's file count is bounded by the touched buckets and
     * PlanDump can publish the partition-filter evidence. */
   private[graft] def bandState(spark: SparkSession, stateDir: String,
       batchId: Long, touched: Seq[Long]): DataFrame =
-    readState(spark, s"$stateDir/bands", bandSchema, batchId,
-      Some(("pbucket", col("pbucket").isin(touched: _*))))
+    readState(spark, stateDir, "bands", bandSchema, "pbucket", "bucket", batchId, touched)
 
   private[graft] def surfaceState(spark: SparkSession, stateDir: String,
       batchId: Long, touched: Seq[Long]): DataFrame =
-    readState(spark, s"$stateDir/surfaces", surfSchema, batchId,
-      Some(("sbucket", col("sbucket").isin(touched: _*))))
+    readState(spark, stateDir, "surfaces", surfSchema, "sbucket", "surface", batchId, touched)
 
   /** Link one micro-batch of triples against (and into) the state. Public
     * for direct testing; [[run]] wires it into foreachBatch. */
@@ -190,12 +255,14 @@ object StreamLink {
     import spark.implicits._
     def phase(name: String): Unit = spark.sparkContext.setJobDescription(jobLabel(batchId, name))
     // ONE evaluation of the caller's batch plan, no matter how expensive:
-    // isEmpty, the surface derivation and the provenance join below all read
-    // this checkpoint (a foreachBatch frame is cheap to rescan, but a caller
-    // driving the batch face directly may hand over a kernel-bearing plan)
-    val triples = batchDf.select("url", "subjectType", "subject", "relation",
-      "objectType", "obj").localCheckpoint().as[Triple]
-    if (triples.isEmpty) return
+    // the surface derivation and the provenance join below read this
+    // checkpoint (a foreachBatch frame is cheap to rescan, but a caller
+    // driving the batch face directly may hand over a kernel-bearing plan),
+    // and its row count, observed as it runs, is the emptiness test
+    val (batchRows, batchObs) = Observed.counted(batchDf.select("url", "subjectType",
+      "subject", "relation", "objectType", "obj"))
+    val triples = batchRows.localCheckpoint().as[Triple]
+    if (Observed.observedCount(batchObs) == 0) return
     val meta = readOrInitMeta(spark, stateDir, nStateBuckets, shingleN)
     val nB = meta.nStateBuckets
     val batchSurf = Linker.surfaces(triples).toDF()
@@ -301,12 +368,14 @@ object StreamLink {
       .filter(col("bridged_id") =!= col("kept_id"))
       .distinct()
 
-    val assigned = fresh
+    val (assignedRows, assignedObs) = Observed.counted(fresh
       .join(adopt, Seq("component"), "left")
       .select(col("surface"), col("norm"), col("id"),
         coalesce(col("adopt_cid"), col("canonical_id")).as("canonical_id"),
-        coalesce(col("adopt_rep"), col("canonical_surface")).as("canonical_surface"))
-      .localCheckpoint() // consumed by three writes + the batch resolution
+        coalesce(col("adopt_rep"), col("canonical_surface")).as("canonical_surface")))
+    // consumed by three writes + the batch resolution; its observed row
+    // count sets the bucket level of this batch's state files
+    val assigned = assignedRows.localCheckpoint()
 
     // this batch's canonical (triple, url) provenance rows under the batch's
     // OWN resolution — the existing-state side is the bucket-pruned exSurf
@@ -320,7 +389,7 @@ object StreamLink {
       .join(batchSurf.select("surface"), Seq("surface"), "left_semi")
       .select("surface", "canonical_id", "canonical_surface")
       .unionByName(assigned.select("surface", "canonical_id", "canonical_surface"))
-    writeState(stateDir, batchId, assigned, bridges,
+    writeState(stateDir, batchId, assigned, Observed.observedCount(assignedObs), bridges,
       Linker.resolveTriples(triples.toDF(), res), meta, jobLabel(batchId, _))
     tagged.unpersist(); newBands.unpersist(); ne.unpersist()
   }
@@ -329,29 +398,33 @@ object StreamLink {
     * `batchId` under `dir`, each written with overwrite to its own
     * `batch=<batchId>` partition —
     *  - `surfaces/`: `surfaces` as given — (surface, norm, id, canonical_id,
-    *    canonical_surface) — sub-partitioned by
-    *    `sbucket = pmod(xxhash64(surface), N)`;
+    *    canonical_surface), `surfaceRows` rows — sub-partitioned by
+    *    `sbucket`, the bucket dir of `surface`;
     *  - `bands/`: the [[Linker.bandRows]] fan-out of `surfaces` — (bucket,
-    *    id, norm, canonical_id, canonical_surface) — sub-partitioned by
-    *    `pbucket = pmod(xxhash64(bucket), N)`;
+    *    id, norm, canonical_id, canonical_surface), 4 rows per surface —
+    *    sub-partitioned by `pbucket`, the bucket dir of `bucket`;
     *  - `bridges/`: (kept_id, bridged_id);
     *  - `triples/`: the distinct url-grain provenance rows of `triples`.
-    * N is `meta.nStateBuckets`. A bucketed table is repartitioned BY its
-    * bucket column first, so every bucket's rows land in one task and each
-    * `sbucket=`/`pbucket=` dir holds ONE file instead of (shuffle partitions
-    * × buckets) fragments: the state stays one file per (batch, bucket) at
-    * any size, and a pruned read opens exactly as many files as buckets
-    * touched. `surfaces` should be materialized — the surface write and the
-    * band fan-out both read it.
+    * Each bucketed table is written at the level its own rows fill (class
+    * doc): L = N = `meta.nStateBuckets` for a batch big enough, one dir
+    * for a batch below the session's `spark.sql.files.openCostInBytes`. It
+    * is repartitioned BY its bucket column first, so every bucket's rows
+    * land in one task and each dir holds ONE file instead of (shuffle
+    * partitions × buckets) fragments: the state stays one file per (batch,
+    * bucket dir) at any size, and a pruned read opens of each batch at
+    * most min(touched buckets, L) files. `surfaces` should be materialized
+    * — the surface write and the band fan-out both read it.
     *
     * The four writes are mutually independent, so they run
     * [[concurrently]]: one write's straggler tail back-fills with the next
     * write's tasks instead of leaving the scheduler idle. Each write's jobs
     * are described as `label("write <table>")`. */
   private def writeState(dir: String, batchId: Long, surfaces: DataFrame,
-      bridges: DataFrame, triples: DataFrame, meta: StateMeta,
+      surfaceRows: Long, bridges: DataFrame, triples: DataFrame, meta: StateMeta,
       label: String => String): Unit = {
-    val nB = meta.nStateBuckets
+    val openCost = surfaces.sparkSession.sessionState.conf.filesOpenCostInBytes
+    def level(rows: Long, schema: StructType) =
+      bucketLevel(rows, schema, openCost, meta.nStateBuckets)
     def overwrite(df: DataFrame, table: String, bucket: Option[(String, Column)] = None): Unit =
       described(df.sparkSession, label(s"write $table"))(bucket match {
         case Some((name, c)) => df.withColumn(name, c)
@@ -361,10 +434,11 @@ object StreamLink {
           df.write.mode("overwrite").parquet(s"$dir/$table/batch=$batchId")
       })
     concurrently(
-      () => overwrite(surfaces, "surfaces", Some(("sbucket", bucketOf(col("surface"), nB)))),
+      () => overwrite(surfaces, "surfaces",
+        Some(("sbucket", bucketDir(col("surface"), level(surfaceRows, surfSchema))))),
       () => overwrite(Linker.bandRows(
           surfaces.select("id", "norm", "canonical_id", "canonical_surface"), meta.shingleN),
-        "bands", Some(("pbucket", bucketOf(col("bucket"), nB)))),
+        "bands", Some(("pbucket", bucketDir(col("bucket"), level(4 * surfaceRows, bandSchema))))),
       () => overwrite(bridges, "bridges"),
       () => overwrite(triples.distinct(), "triples"))
   }
@@ -416,19 +490,18 @@ object StreamLink {
 
   /** surface → (canonical_id, canonical_surface), over all committed batches. */
   def readResolution(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/surfaces")
-      .select("surface", "canonical_id", "canonical_surface")
+    readSurfaces(spark, stateDir).select("surface", "canonical_id", "canonical_surface")
 
-  /** Full surface state rows (id, norm included) — the compaction input. */
+  /** Full surface state rows (id, norm included) — the compaction input.
+    * Whole-table reads ignore the bucket dirs, so they read either layout. */
   private[graft] def readSurfaces(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/surfaces")
-      .select("surface", "norm", "id", "canonical_id", "canonical_surface")
+    spark.read.schema(stored(surfSchema, Some("sbucket"))).parquet(s"$stateDir/surfaces")
+      .select(surfSchema.fieldNames.map(col).toSeq: _*)
 
   /** Url-grain canonical-triple provenance rows — the compaction input. */
   private[graft] def readTripleProvenance(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/triples")
-      .select("subjectId", "subject", "subjectType", "relation",
-        "objectId", "obj", "objectType", "url")
+    spark.read.schema(stored(provenanceSchema)).parquet(s"$stateDir/triples")
+      .select(provenanceSchema.fieldNames.map(col).toSeq: _*)
 
   /** Aggregated canonical triples across batches: [[Linker.support]] over
     * the url-grain provenance rows, so a url re-delivered in a later batch
@@ -439,12 +512,15 @@ object StreamLink {
   /** Bridge ledger: components published separately that later batches
     * proved equal — the offline compaction work list. */
   def readBridges(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/bridges").select("kept_id", "bridged_id").distinct()
+    spark.read.schema(stored(bridgeSchema)).parquet(s"$stateDir/bridges")
+      .select("kept_id", "bridged_id").distinct()
 
   /** Write a FULL canonical state as `batch=-1` of a fresh `outDir` — the
     * sink [[graft.link.Compaction]] targets: `_meta.json` pinning plus
     * [[writeState]], so a stream resumed against `outDir` links
     * incrementally against the compacted state with no special casing.
+    * The snapshot is written in the bucket-level layout whatever layout
+    * `meta` was read from, so compacting a flat-layout dir migrates it.
     *
     * The RESERVED batch id −1 is what makes that unconditional: every
     * `processBatch(batchId ≥ 0)` read includes `batch < batchId` state, so
@@ -455,13 +531,16 @@ object StreamLink {
     * silent re-publication plus state loss.
     *
     * `surfacesDf`: materialized (surface, norm, id, canonical_id,
-    * canonical_surface); `triplesDf`: url-grain provenance rows. The bridge
-    * ledger is written EMPTY — compaction consumed it. `label` names the
-    * jobs of each table write, as in [[writeState]]. */
+    * canonical_surface), `surfaceRows` rows; `triplesDf`: url-grain
+    * provenance rows. The bridge ledger is written EMPTY — compaction
+    * consumed it. `label` names the jobs of each table write, as in
+    * [[writeState]]. */
   private[graft] def writeStateSnapshot(spark: SparkSession, outDir: String,
-      surfacesDf: DataFrame, triplesDf: DataFrame, meta: StateMeta,
+      surfacesDf: DataFrame, surfaceRows: Long, triplesDf: DataFrame, meta: StateMeta,
       label: String => String): Unit = {
-    writeMeta(spark, outDir, meta)
-    writeState(outDir, -1, surfacesDf, emptyFrame(spark, bridgeSchema), triplesDf, meta, label)
+    val snapshot = meta.copy(layout = LevelLayout)
+    writeMeta(spark, outDir, snapshot)
+    writeState(outDir, -1, surfacesDf, surfaceRows, emptyFrame(spark, bridgeSchema),
+      triplesDf, snapshot, label)
   }
 }

@@ -56,7 +56,7 @@ object PlanDump {
         fmt(graft.SparkEntry.queries("a5_early_stop")(spark, sfDir)),
       "curation_pipeline (quality gate → script gate → stratified sample → exact dedup → TF-IDF tagging as ONE declarative plan: all three gates fuse into a single scan-side filter before any shuffle)" ->
         fmt(graft.SparkEntry.queries("curation_pipeline")(spark, sfDir)),
-      "StreamLink band-state read (per-micro-batch candidate scan: batch AND pbucket appear in PartitionFilters, so a batch touching k of N hash buckets reads only those partition directories)" -> {
+      "StreamLink band-state read (per-micro-batch candidate scan: batch AND pbucket appear in PartitionFilters, so a batch touching k of N hash buckets reads, of each earlier batch, only the dirs those buckets map to at that batch's bucket level)" -> {
         import org.apache.spark.sql.functions.xxhash64
         import spark.implicits._
         val state = tmpRoot + "/linkstate"

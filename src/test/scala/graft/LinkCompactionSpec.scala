@@ -137,16 +137,21 @@ class LinkCompactionSpec extends SparkSpec {
     val F = 4000L
     val root = Files.createTempDirectory("graft-compact-scale").toString
     val state = s"$root/state"; val out = s"$root/compacted"
-    for ((v, bid) <- Seq((1, 0L), (2, 1L), (0, 2L)))
-      StreamLink.processBatch(
-        LinkCorpus.triples(spark, 0, F, v), state, batchId = bid)
+    // an open cost of 1 byte writes every table, the snapshot's too, at
+    // level L = N = 64, where bucket t lives in dir 64 + t
+    val openCost = "spark.sql.files.openCostInBytes"
+    withConf(openCost, "1") {
+      for ((v, bid) <- Seq((1, 0L), (2, 1L), (0, 2L)))
+        StreamLink.processBatch(
+          LinkCorpus.triples(spark, 0, F, v), state, batchId = bid)
+    }
     assert(StreamLink.readSurfaces(spark, state).count() === 4 * F,
       "3 subject variants + 1 object per family, all distinct")
     val bridges = StreamLink.readBridges(spark, state).count()
     assert(bridges >= (0.8 * F).toLong,
       s"bridge density collapsed: $bridges bridges for $F families")
 
-    Compaction.compact(spark, state, out).count()
+    withConf(openCost, "1")(Compaction.compact(spark, state, out).count())
 
     // snapshot write discipline: ONE parquet file per (batch=-1, pbucket) —
     // the property that makes post-compaction pruned reads open exactly as
@@ -186,7 +191,7 @@ class LinkCompactionSpec extends SparkSpec {
     }
     val touched = Seq(3L, 17L)
     val expected = touched.map(b =>
-      parquetFiles(bandsRoot.resolve("batch=-1").resolve(s"pbucket=$b")).size).sum
+      parquetFiles(bandsRoot.resolve("batch=-1").resolve(s"pbucket=${64 + b}")).size).sum
     assert(expected === touched.size, "fixture must fill the touched buckets")
     val read = scannedFiles(StreamLink.bandState(spark, out, batchId = 0, touched))
     assert(read === expected.toLong && read < totalBandFiles,
@@ -209,10 +214,13 @@ class LinkCompactionSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-compact-bands").toString
     val state = s"$root/state"; val out = s"$root/compacted"
     val F = 200L
-    StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 1)
-      .unionByName(LinkCorpus.triples(spark, 0, F, 2)), state, batchId = 0)
-    StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 0), state, batchId = 1)
-    Compaction.compact(spark, state, out).count()
+    // an open cost of 1 byte writes every table at level L = N = 64
+    withConf("spark.sql.files.openCostInBytes", "1") {
+      StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 1)
+        .unionByName(LinkCorpus.triples(spark, 0, F, 2)), state, batchId = 0)
+      StreamLink.processBatch(LinkCorpus.triples(spark, 0, F, 0), state, batchId = 1)
+      Compaction.compact(spark, state, out).count()
+    }
 
     def multiset[T](xs: Seq[T]): Map[T, Int] = xs.groupBy(identity).map { case (k, v) => k -> v.size }
     for (dir <- Seq(state, out)) {
@@ -247,6 +255,55 @@ class LinkCompactionSpec extends SparkSpec {
         assert(n === 1L, s"$d holds $n parquet files")
       }
     }
+  }
+
+  test("a flat-layout state dir is refused by processBatch and migrated by compaction") {
+    import graft.synth.LinkCorpus
+    val root = Files.createTempDirectory("graft-compact-flat").toString
+    val state = s"$root/state"; val flat = s"$root/flat"
+    val n = 8L
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, 200, 1)
+      .unionByName(LinkCorpus.triples(spark, 0, 200, 2)), state, batchId = 0, nStateBuckets = 8)
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, 200, 0), state, batchId = 1)
+
+    // the same state in the flat layout: full-resolution bucket t in dir t,
+    // and a _meta.json without the layout field
+    for ((table, bucket, key) <- Seq(("surfaces", "sbucket", "surface"), ("bands", "pbucket", "bucket")))
+      spark.read.parquet(s"$state/$table").drop(bucket)
+        .withColumn(bucket, pmod(xxhash64(col(key)), lit(n)))
+        .repartition(col("batch"), col(bucket)).write.partitionBy("batch", bucket)
+        .parquet(s"$flat/$table")
+    for (table <- Seq("bridges", "triples"))
+      spark.read.parquet(s"$state/$table").write.partitionBy("batch").parquet(s"$flat/$table")
+    Files.writeString(java.nio.file.Paths.get(flat, "_meta.json"),
+      """{"nStateBuckets": 8, "shingleN": 2}""")
+    assert(StreamLink.readMeta(spark, flat).get.layout === StreamLink.FlatLayout)
+
+    val next = LinkCorpus.triples(spark, 200, 220, 0)
+    val e = intercept[IllegalArgumentException](
+      StreamLink.processBatch(next, flat, batchId = 2))
+    assert(e.getMessage.contains("flat bucket layout") && e.getMessage.contains("Compaction"),
+      e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(flat, "surfaces", "batch=2")),
+      "a refused batch must write nothing")
+
+    // compacting the flat dir = compacting the level-layout original, and
+    // the snapshot is in the level layout the stream continues against
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val migrated = s"$root/migrated"; val direct = s"$root/direct"
+    assert(rows(Compaction.compact(spark, flat, migrated)) ===
+      rows(Compaction.compact(spark, state, direct)))
+    assert(StreamLink.readMeta(spark, migrated).get ===
+      StreamLink.StateMeta(8, 2, StreamLink.LevelLayout))
+    for (read <- Seq[(org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame](StreamLink.readSurfaces, StreamLink.readCanonicalTriples,
+        (sp, d) => sp.read.parquet(s"$d/bands").drop("pbucket")))
+      assert(rows(read(spark, migrated)) === rows(read(spark, direct)))
+    StreamLink.processBatch(next, migrated, batchId = 0)
+    val res = StreamLink.readResolution(spark, migrated)
+    assert(res.groupBy("surface").count().filter(col("count") > 1).count() === 0)
+    assert(res.count() === 4 * 200 + 2 * 20)
   }
 
   test("compaction refuses an outDir that already holds state") {

@@ -26,4 +26,11 @@ object SparkSpec {
   * exists would pin the stock class for every suite after it. */
 abstract class SparkSpec extends AnyFunSuite {
   val spark: SparkSession = SparkSpec.spark
+
+  /** `body` with the session conf `key` set to `value`, restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -10,11 +10,13 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.schema.Triple
 import graft.streaming.StreamLink
 import graft.synth.LinkCorpus
 
@@ -38,9 +40,10 @@ class NioLocalFileSystemSpec extends SparkSpec {
   private val housekeeping = Seq("org.apache.spark.executor.ProcfsMetricsGetter",
     "org.apache.spark.sql.artifact.ArtifactManager")
 
-  /** The commands of the processes `body` started, read off a JFR recording
-    * that enables only `jdk.ProcessStart`, [[housekeeping]] left out. */
-  private def processesStartedBy(body: => Unit): Seq[String] = {
+  /** The processes `body` started, read off a JFR recording that enables
+    * only `jdk.ProcessStart`, [[housekeeping]] left out: each one's command
+    * and the classes on its stack, innermost first. */
+  private def processesStartedBy(body: => Unit): Seq[(String, Seq[String])] = {
     val rec = new Recording()
     val dump = Files.createTempFile("graft-process-start", ".jfr")
     try {
@@ -53,7 +56,8 @@ class NioLocalFileSystemSpec extends SparkSpec {
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .filterNot(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(f =>
           housekeeping.exists(f.getMethod.getType.getName.startsWith))))
-        .map(_.getString("command"))
+        .map(e => (e.getString("command"), Option(e.getStackTrace).toSeq
+          .flatMap(_.getFrames.asScala.map(_.getMethod.getType.getName))))
     } finally {
       rec.close()
       Files.deleteIfExists(dump)
@@ -77,7 +81,50 @@ class NioLocalFileSystemSpec extends SparkSpec {
       assert(Files.list(Paths.get(s"$root/buckets")).iterator.asScala
         .count(_.getFileName.toString.startsWith("b=")) === 64)
       assert(started.isEmpty,
-        s"${started.size} processes started, e.g. ${started.distinct.take(3).mkString("; ")}")
+        s"${started.size} processes started, e.g. ${started.map(_._1).distinct.take(3).mkString("; ")}")
+    }
+  }
+
+  test("FileContext file: is NioLocalFs; a one-batch StreamLink.run starts no process under it") {
+    import spark.implicits._
+    val fc = FileContext.getFileContext(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fc.getDefaultFileSystem.getClass === classOf[NioLocalFs])
+    withDir("graft-fc-no-spawn") { root =>
+      LinkCorpus.triples(spark, 0, 50, 1).write.parquet(s"$root/in")
+      val schema = spark.read.parquet(s"$root/in").schema
+      val started = processesStartedBy {
+        val q = StreamLink.run(spark.readStream.schema(schema).parquet(s"$root/in").as[Triple],
+          s"$root/state", s"$root/ckpt")
+        try q.awaitTermination() finally q.stop()
+      }
+      assert(StreamLink.readResolution(spark, s"$root/state").count() === 100L)
+      val underFc = started.filter(_._2.contains(classOf[FileContext].getName))
+      assert(underFc.isEmpty, s"${underFc.size} processes started under FileContext, " +
+        s"e.g. ${underFc.map(_._1).distinct.take(3).mkString("; ")}")
+    }
+  }
+
+  test("getFileLinkStatus: plain paths answer without a process, symlinks as stock") {
+    withDir("graft-link-status") { root =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val nio = new NioRawLocalFileSystem
+      val stock = new RawLocalFileSystem
+      Seq(nio, stock).foreach(_.initialize(URI.create("file:///"), conf))
+      Files.createDirectory(Paths.get(s"$root/d"))
+      Files.write(Paths.get(s"$root/f"), Array[Byte](1, 2, 3))
+      Files.createSymbolicLink(Paths.get(s"$root/l"), Paths.get(s"$root/f"))
+      def view(st: FileStatus) = (st.getPath, st.isFile, st.isDirectory, st.isSymlink,
+        st.getLen, if (st.isSymlink) st.getSymlink else null)
+      val plain = Seq("f", "d").map(n => new Path(s"$root/$n"))
+      var got = Seq.empty[FileStatus]
+      val started = processesStartedBy { got = plain.map(nio.getFileLinkStatus) }
+      assert(started.isEmpty, s"processes started: ${started.map(_._1).mkString("; ")}")
+      assert(got.map(view) === plain.map(p => view(stock.getFileLinkStatus(p))))
+      val link = new Path(s"$root/l")
+      assert(view(nio.getFileLinkStatus(link)) === view(stock.getFileLinkStatus(link)))
+      val missing = new Path(s"$root/missing")
+      intercept[java.io.FileNotFoundException](nio.getFileLinkStatus(missing))
+      intercept[java.io.FileNotFoundException](stock.getFileLinkStatus(missing))
     }
   }
 
