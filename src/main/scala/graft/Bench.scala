@@ -5,18 +5,16 @@ import org.apache.spark.sql.SparkSession
 import graft.pipeline.Extract
 import graft.synth.Corpus
 
-/** Benchmark harness. Emits ONE JSON line:
+/** Legacy benchmark harness (performance claims use `perfbench/`). Emits
+  * ONE JSON line:
   *  - per-query wall-clock over SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS]
-  *  - the KG pipeline's throughput at two parallelism levels (cpus/4 and
-  *    cpus) on the SAME synthetic input — the sandbox evidence for the
-  *    north_rule's N→4N executor scaling-efficiency ≥ 0.8 criterion
-  *    (BASELINE.md "target: scaling"): eff = thr(4N) / (4 · thr(N)).
-  *  - "multi_jvm": the SAME extraction — plus the incremental-linking
-  *    pipeline (executor-fed STATE writes + reads) — under
-  *    `local-cluster[2,8,4096]`: two forked executor JVMs, real
-  *    closure/broadcast serialization and per-executor model singletons,
-  *    each checked bit-identical (count + order-independent multiset
-  *    checksum) against this process's local-mode runs.
+  *    (the 69-query battery, min of SPARK_GRAFT_BENCH_REPEATS passes);
+  *  - "kg_scaling": the KG pipeline's throughput at two parallelism levels
+  *    (cpus/8 and cpus/2, plus full width) on the SAME synthetic input — the
+  *    sandbox evidence for the north_rule's N→4N executor scaling-efficiency
+  *    ≥ 0.8 criterion (BASELINE.md "target: scaling"):
+  *    eff = thr(4N) / (4 · thr(N)); every level's triples checksum must
+  *    match;
   *  - "scale10x": the heavy dedup/LSH operators at a base corpus and at
   *    10× ([[graft.synth.WebDocs]]), reporting per-op growth factors —
   *    linear-with-log growth is the pass shape, a quadratic cliff the fail.
@@ -34,15 +32,15 @@ import graft.synth.Corpus
   *    language, with the same counters. The 500k-vector emb point sits past
   *    the old [8,17]×[8,64] LSH caps' ~65k saturation, so the widened
   *    adaptive geometry's large-n regime is measured, not narrated.
-  *  - "compaction": a ≥100k-surface incremental-linking state built from
-  *    [[graft.synth.LinkCorpus]] micro-batches, offline bridge compaction
-  *    timed over it, the post-snapshot pruned read ASSERTED to open exactly
-  *    the touched buckets' files, and a fresh-checkpoint continuation batch
-  *    timed against the snapshot.
   *  - streaming extraction throughput (AvailableNow + exactly-once sink +
   *    checkpoint) on a fresh synthetic drop, as the "streaming" key —
   *    PAIRED with its batch twin (alternating lanes, min-of-2 each, ratio
   *    reported) so host drift cannot fake a sink/checkpoint regression.
+  *
+  * Measured elsewhere: multi-JVM bit-identity is the tier-1
+  * `MultiJvmIdentitySpec` ([[graft.tools.ClusterProbe]]); compaction cost
+  * is perfbench's `link.compact_*`, and its pruned snapshot read is pinned
+  * in `LinkCompactionSpec`.
   *
   * The whole line is also written to `BENCH_battery.json`
   * (SPARK_GRAFT_BENCH_FILE) — the driver's bounded tail capture has twice
@@ -119,8 +117,8 @@ object Bench {
 
     // ---- phase 2: KG extraction throughput, small parallelism first.
     // The timed job is count + order-independent checksum in ONE action, so
-    // bit-identity across parallelism levels (and, below, across process
-    // boundaries) is asserted by the same run that is being timed.
+    // bit-identity across parallelism levels is asserted by the same run
+    // that is being timed.
     def kgRun(s: SparkSession, n: Long): ((Long, Long), Double) = {
       // tiny warmup so JIT/codegen state is comparable across sessions
       Extract.triples(Corpus.pages(s, 200, seed = 5, noisyFrac = 0.0).toDF()).count()
@@ -140,10 +138,6 @@ object Bench {
     // measured back-to-back inside the same window (temporally paired), in
     // three alternating-order rounds below, and the best round is reported.
     final case class Level(triples: Long, checksum: Long, sec: Double, thr: Double)
-    // (cpus, triples, checksum) of the full-width scaling run — the
-    // reference the multi-JVM checksum and the streaming session width read
-    // (None under SPARK_GRAFT_BENCH_MODE=scale, which skips those phases)
-    var lastFull: Option[(Int, Long, Long)] = None
     def level(c: Int): Level = {
       spark.stop()
       spark = session(c)
@@ -163,13 +157,16 @@ object Bench {
       spark.stop()
       return
     }
-    // SPARK_GRAFT_BENCH_MODE=scale: skip the battery, scaling rounds and
-    // multi-JVM; the scale10x/100x + compaction + streaming phases run
+    // SPARK_GRAFT_BENCH_MODE=scale: skip the battery and scaling rounds;
+    // the scale10x/100x + streaming phases run
     // (iteration aid for the heavy-op growth measurements — streaming is
     // kept because its paired lanes are cheap and window-matched numbers
     // alongside the scale anchors have proven useful)
     val scaleOnly = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("scale")
-    // three rounds, alternating run order, so host-load drift during a round
+    // The session left open is always local[cpus]: the last level run is
+    // `cpus` wide (the full-width pair, or round 3's 4N = cpus), and the
+    // scale and streaming phases below run on it.
+    // Three rounds, alternating run order, so host-load drift during a round
     // biases alternate rounds in opposite directions; best round reported,
     // all round efficiencies included in the JSON for transparency
     val kg =
@@ -192,7 +189,6 @@ object Bench {
             Some(if (a.thr >= b.thr) a else b)
           } else None
         val runs = Seq((nSmall, bestSmall), (n4, bestBig)) ++ full.map((cpus, _))
-        lastFull = Some((runs.last._1, runs.last._2.triples, runs.last._2.checksum))
         val runsJson = runs.map { case (c, l) =>
           f"""{"cpus":$c,"triples":${l.triples},"sec":${l.sec}%.2f,"triples_per_sec":${l.thr}%.1f}"""
         }.mkString("[", ",", "]")
@@ -202,32 +198,7 @@ object Bench {
           f""""triples_per_sec_full":${runs.last._2.thr}%.1f}"""
       }
 
-    // ---- phase 2b: multi-JVM execution proof (north_rule runs via
-    // spark-submit on multi-executor clusters): extraction through REAL
-    // forked executor processes, bit-identity asserted against the local
-    // scaling runs above (their timed jobs already carry the checksum)
-    val mjJson = if (scaleOnly) """{"skipped":true}""" else {
-      // the streaming/state path's local-mode reference (the extraction's
-      // reference is the checksummed scaling runs above)
-      val linkDocs = 1000L
-      val (linkRowsL, linkChkL) = graft.tools.ClusterProbe.linkChecksum(spark, linkDocs)
-      spark.stop()
-      val cl = SparkSessionFactory.cluster("local-cluster[2,8,4096]", "graft-bench-mj")
-      // warm executor JVMs (model singleton load + JIT) before timing
-      Extract.triples(Corpus.pages(cl, 200, seed = 5, noisyFrac = 0.0).toDF()).count()
-      val ((cc, ch), mjSec) = time(graft.tools.ClusterProbe.extractChecksum(cl, kgDocs))
-      val ((lc, lch), linkSec) = time(graft.tools.ClusterProbe.linkChecksum(cl, linkDocs))
-      cl.stop()
-      spark = session(cpus)
-      val (_, refTriples, refChecksum) = lastFull.get
-      f"""{"master":"local-cluster[2,8,4096]","docs":$kgDocs,"triples":$cc,""" +
-        f""""sec":$mjSec%.2f,"triples_per_sec":${cc / mjSec}%.1f,""" +
-        f""""checksum_match":${refTriples == cc && refChecksum == ch},""" +
-        f""""link":{"docs":$linkDocs,"rows":$lc,"sec":$linkSec%.2f,""" +
-        f""""checksum_match":${linkRowsL == lc && linkChkL == lch}}}"""
-    }
-
-    // ---- phase 2c: 10× (and 100×) growth factors for the heavy dedup/LSH
+    // ---- phase 2b: 10× (and 100×) growth factors for the heavy dedup/LSH
     // operators (same parameters as the registered queries) over WebDocs
     // corpora written to parquet — real scans, pushdown and all
     val (scaleJson, scale100Json) = {
@@ -384,88 +355,6 @@ object Bench {
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
 
-    // ---- phase 2d: offline bridge compaction at non-toy state size — the
-    // maintenance job an incremental-linking deployment schedules. Three
-    // micro-batches of [[graft.synth.LinkCorpus]] (v1, v2, then the bridging
-    // v0 — ~0.94 bridges/family by the generator's hash-deterministic
-    // geometry) build a ≥100k-surface state; compaction is timed, the
-    // migration-map size reported, and the post-snapshot pruned read is
-    // ASSERTED to open exactly the touched buckets' files before a
-    // fresh-checkpoint continuation batch (batchId 0 against the reserved
-    // batch=-1 snapshot) is timed on top.
-    val compactionJson = {
-      import org.apache.spark.sql.functions.{col, count, lit, when}
-      import graft.link.Compaction
-      import graft.streaming.StreamLink
-      import graft.synth.LinkCorpus
-      val fam = sys.env.getOrElse("SPARK_GRAFT_COMPACT_FAMILIES", "30000").toLong
-      val root = java.nio.file.Files.createTempDirectory("graft-bench-compact").toString
-      try {
-        val state = s"$root/state"; val out = s"$root/compacted"
-        val (_, buildSec) = time {
-          for ((v, bid) <- Seq((1, 0L), (2, 1L), (0, 2L)))
-            StreamLink.processBatch(
-              LinkCorpus.triples(spark, 0, fam, v), state, batchId = bid)
-        }
-        val surfaces = StreamLink.readSurfaces(spark, state).count()
-        val bridges = StreamLink.readBridges(spark, state).count()
-        val ((migRows, migChanged), compactSec) = time {
-          val r = Compaction.compact(spark, state, out)
-            .agg(count(lit(1)), count(when(col("changed"), 1))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        // post-snapshot pruned-read evidence at THIS scale: numFiles from
-        // the executed scan itself, required equal to the on-disk file count
-        // of the dirs the touched buckets map to at the snapshot's level (one
-        // file per dir by the snapshot's write discipline) and strictly
-        // below the full state
-        def bandFiles(sub: String): Int = {
-          val dir = java.nio.file.Paths.get(out, "bands", sub)
-          if (!java.nio.file.Files.isDirectory(dir)) 0
-          else {
-            val s = java.nio.file.Files.walk(dir)
-            try {
-              var n = 0
-              s.iterator().forEachRemaining(p =>
-                if (p.getFileName.toString.endsWith(".parquet")) n += 1)
-              n
-            } finally s.close()
-          }
-        }
-        val totalBandFiles = bandFiles("")
-        val touched = Seq(3L, 17L)
-        val nB = StreamLink.readMeta(spark, out).get.nStateBuckets
-        val expectedFiles = StreamLink.bucketDirs(touched, nB)
-          .map(d => bandFiles(s"batch=-1/pbucket=$d")).sum
-        require(expectedFiles > 0,
-          s"compaction fixture too small: $fam families (SPARK_GRAFT_COMPACT_FAMILIES) " +
-            s"left the dirs of band buckets ${touched.mkString(" and ")} of $nB empty " +
-            "in the snapshot")
-        val pruned = StreamLink.bandState(spark, out, batchId = 0, touched)
-        pruned.collect()
-        val resolved = pruned.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        val scanned = resolved.collectLeaves()
-          .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-          .map(_.metrics("numFiles").value).sum
-        require(scanned == expectedFiles && scanned < totalBandFiles,
-          s"post-snapshot read opened $scanned files, expected $expectedFiles of $totalBandFiles")
-        val (_, contSec) = time {
-          StreamLink.processBatch(
-            LinkCorpus.triples(spark, fam, fam + math.max(fam / 100, 10), 0),
-            out, batchId = 0)
-        }
-        f"""{"families":$fam,"surfaces":$surfaces,"bridges":$bridges,""" +
-          f""""build_sec":$buildSec%.2f,"compact_sec":$compactSec%.2f,""" +
-          f""""migration_rows":$migRows,"migrated":$migChanged,""" +
-          f""""band_files":$totalBandFiles,"pruned_read_files":$scanned,""" +
-          f""""pruned_read_expected":$expectedFiles,""" +
-          f""""continuation_batch_sec":$contSec%.2f}"""
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-
     // ---- phase 3: streaming extraction throughput (§2.9) — the SAME
     // operator graph under Trigger.AvailableNow with an exactly-once file
     // sink + checkpoint, PAIRED with its batch twin inside one host window:
@@ -475,7 +364,6 @@ object Bench {
     // load moves both lanes together (the r5 lesson: an unpaired streaming
     // number fell 26% while batch rose 27% in a different window)
     val streamJson = {
-      if (cpus != lastFull.map(_._1).getOrElse(cpus)) { spark.stop(); spark = session(cpus) }
       val streamDocs = math.max(kgDocs / 4, 500L)
       val root = java.nio.file.Files.createTempDirectory("graft-bench-stream").toString
       try {
@@ -501,8 +389,7 @@ object Bench {
 
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-        f""""kg_scaling":$kg,"multi_jvm":$mjJson,"scale10x":$scaleJson,""" +
-        f""""scale100x":$scale100Json,"compaction":$compactionJson,""" +
+        f""""kg_scaling":$kg,"scale10x":$scaleJson,"scale100x":$scale100Json,""" +
         f""""streaming":$streamJson,"battery_file":"${benchFile.replace("\\", "\\\\")}",""" +
         f""""sf":"$sfDir"}"""
     writeBenchFile(line)

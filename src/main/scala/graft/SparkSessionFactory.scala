@@ -84,6 +84,8 @@ object SparkSessionFactory {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
 
+  private val LocalClusterMaster = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*]""".r
+
   def local(cpus: Int, appName: String = "graft"): SparkSession =
     sys.env.get("SPARK_GRAFT_MASTER") match {
       // manual override (e.g. SPARK_GRAFT_MASTER=local-cluster[2,8,4096]
@@ -105,12 +107,19 @@ object SparkSessionFactory {
     * application classes are handed over via `spark.executor.extraClassPath`
     * (this JVM's own classpath — the forked sbt run JVM carries the full
     * app classpath) and the JDK-17 module opens via the launcher's own
-    * [[org.apache.spark.launcher.JavaModuleOptions]]. */
-  def cluster(master: String, appName: String = "graft-cluster",
-      executorMem: String = "3g"): SparkSession = {
+    * [[org.apache.spark.launcher.JavaModuleOptions]]. Each executor gets
+    * its worker's whole `memMB`: a worker can never grant an executor more
+    * than it has, and Spark refuses a `local-cluster` master whose executor
+    * memory exceeds it. */
+  def cluster(master: String, appName: String = "graft-cluster"): SparkSession = {
+    val workerMem = master match {
+      case LocalClusterMaster(mem) => mem
+      case _ => throw new IllegalArgumentException(
+        s"$master is not a local-cluster[workers,coresPerWorker,memMB] master")
+    }
     val appCp = sys.props.getOrElse("java.class.path", "")
     val s = builder(master, 32).appName(appName)
-      .config("spark.executor.memory", executorMem)
+      .config("spark.executor.memory", s"${workerMem}m")
       .config("spark.executor.extraClassPath", appCp)
       .config("spark.executor.extraJavaOptions",
         org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The byte-identical text contract (SURVEY.md §2.3, T1–T5).
   *
-  * Every function exists twice with identical semantics:
-  *  - a `Column => Column` built from native Catalyst expressions
-  *    (regexp_replace / translate — whole-stage-codegen'd, zero UDFs), and
-  *  - a plain `String => String` twin used inside mapPartitions kernels and
-  *    by the golden byte-identity tests.
+  * Every function is a `Column => Column` built from native Catalyst
+  * expressions (regexp_replace / translate — whole-stage-codegen'd, zero
+  * UDFs). Those that also run inside mapPartitions kernels or the golden
+  * byte-identity tests (T1–T4, text extraction) have a plain
+  * `String => String` twin with identical semantics.
   *
   * References (file:line in /root/reference):
   *  - cleanData:              data/data_utils.py:201-225
@@ -51,9 +51,6 @@ object TextNorm {
   // (data/data_utils.py:243-248): only the , ( ) substitutions.
   def normalizeSpoField(c: Column): Column =
     translate(c, ",()", "，（）")
-
-  def normalizeSpoFieldStr(s: String): String =
-    s.replace(',', '，').replace('(', '（').replace(')', '）')
 
   // ---------------------------------------------------------------- T2
   // 23-entry Chinese→ASCII punctuation map. Sequential single-char replaces
@@ -107,5 +104,4 @@ object TextNorm {
   // ------------------------------------------------------------ predict path
   // F3 newline strip (run_qa.py:428,436) — applied before the F2 filter.
   def stripNewlines(c: Column): Column = regexp_replace(c, "\n", "")
-  def stripNewlinesStr(s: String): String = s.replace("\n", "")
 }

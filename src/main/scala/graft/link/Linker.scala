@@ -30,6 +30,20 @@ import graft.schema.{CanonicalTriple, Triple}
   */
 object Linker {
 
+  /** The linking rule's parameters, one definition for the batch linker
+    * and [[graft.streaming.StreamLink]]: `MinhashLanes` minhash lanes over
+    * char `ShingleN`-gram shingles, folded into `Bands` LSH band keys; a
+    * candidate pair is an edge when its true Jaccard is at least
+    * `Threshold`. A band bucket of more than `BucketCap` members pairs by
+    * sorted neighborhood, `NeighborWindow` neighbors per member. A state
+    * dir pins `ShingleN` in its `_meta.json`. */
+  val MinhashLanes = 8
+  val Bands = 4
+  val ShingleN = 2
+  val Threshold = 0.6
+  val BucketCap = 1000
+  val NeighborWindow = 8
+
   final case class SurfaceKey(surface: String, norm: String, id: Long)
 
   /** Distinct mention surfaces with normalized form and stable 64-bit id. */
@@ -45,8 +59,8 @@ object Linker {
 
   /** LSH band keys of a normalized surface: `bands` keys, each a splitmix-
     * finalized fold over its k/bands minhash lanes. */
-  def bandKeysOf(norm: String, k: Int = 8, bands: Int = 4,
-      shingleN: Int = 2): Seq[Long] = {
+  def bandKeysOf(norm: String, k: Int = MinhashLanes, bands: Int = Bands,
+      shingleN: Int = ShingleN): Seq[Long] = {
     val mh = Hashing.minhash(Hashing.charShingles(norm, shingleN), k)
     val rows = k / bands
     (0 until bands).map { b =>
@@ -57,16 +71,16 @@ object Linker {
 
   /** The band fan-out of `df`: one row per band key of its `norm` column,
     * `bucket` first, then every column of `df`. */
-  private[graft] def bandRows(df: DataFrame, shingleN: Int, k: Int = 8,
-      bands: Int = 4): DataFrame = {
+  private[graft] def bandRows(df: DataFrame, shingleN: Int = ShingleN,
+      k: Int = MinhashLanes, bands: Int = Bands): DataFrame = {
     val keys = udf((norm: String) => bandKeysOf(norm, k, bands, shingleN))
     df.select(explode(keys(col("norm"))).as("bucket") +: df.columns.toSeq.map(col): _*)
   }
 
   /** Whether two normalized surfaces are the same entity: true Jaccard of
     * their char shingles at or above `threshold`. */
-  private[graft] def jaccardOk(na: String, nb: String, shingleN: Int,
-      threshold: Double): Boolean =
+  private[graft] def jaccardOk(na: String, nb: String, shingleN: Int = ShingleN,
+      threshold: Double = Threshold): Boolean =
     Hashing.jaccard(Hashing.charShingles(na, shingleN),
       Hashing.charShingles(nb, shingleN)) >= threshold
 
@@ -81,9 +95,9 @@ object Linker {
     * surfaces sort adjacently, so recall stays high while the pair count is
     * bounded to O(n·W).
     */
-  def candidateEdges(surf: Dataset[SurfaceKey], k: Int = 8, bands: Int = 4,
-      shingleN: Int = 2, threshold: Double = 0.6, bucketCap: Int = 1000,
-      neighborWindow: Int = 8): DataFrame = {
+  def candidateEdges(surf: Dataset[SurfaceKey], k: Int = MinhashLanes,
+      bands: Int = Bands, shingleN: Int = ShingleN, threshold: Double = Threshold,
+      bucketCap: Int = BucketCap, neighborWindow: Int = NeighborWindow): DataFrame = {
     // standalone contract: checkpoint materializes the edges so the caches
     // can be released before returning the (otherwise lazy) frame
     val (edges, release) = candidateEdgesLazy(surf, k, bands, shingleN, threshold,
@@ -149,8 +163,8 @@ object Linker {
   def resolution(surf: Dataset[SurfaceKey]): DataFrame = {
     // lazy edges: ConnectedComponents canonicalizes + checkpoints them as
     // its first step — the single materialization of the verify plan
-    val (edges, release) = candidateEdgesLazy(surf, k = 8, bands = 4, shingleN = 2,
-      threshold = 0.6, bucketCap = 1000, neighborWindow = 8)
+    val (edges, release) = candidateEdgesLazy(surf, MinhashLanes, Bands, ShingleN,
+      Threshold, BucketCap, NeighborWindow)
     val res = canonicalize(surf.toDF(), edges, "id")
     release()
     res.select("surface", "canonical_id", "canonical_surface")

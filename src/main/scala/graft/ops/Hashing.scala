@@ -48,13 +48,6 @@ object Hashing {
     else (0 to s.length - n).iterator.map(i => s.substring(i, i + n)).toSet
   }
 
-  /** Word n-gram shingles over whitespace tokens. */
-  def wordShingles(s: String, n: Int): Set[String] = {
-    val toks = s.split("\\s+").filter(_.nonEmpty)
-    if (toks.length < n) { if (toks.isEmpty) Set.empty else Set(toks.mkString(" ")) }
-    else toks.sliding(n).map(_.mkString(" ")).toSet
-  }
-
   /** 64-bit SimHash over weighted token hashes. */
   def simhash(tokens: Iterable[String]): Long = {
     val acc = new Array[Int](64)

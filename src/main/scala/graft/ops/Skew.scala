@@ -30,12 +30,6 @@ object Skew {
       .agg(sum("_c").as("cnt"), sum("_s").as("sum_value"))
   }
 
-  /** Salted distinct-count: exact, two-level — dedup on (key, value) first
-    * (spreading hot keys via the value itself), then count per key. */
-  def saltedDistinctCount(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    df.select(col(keyCol), col(valueCol)).distinct()
-      .groupBy(keyCol).agg(count(lit(1)).as("distinct_values"))
-
   /** Salted self-join guard for LSH-style bucket joins: cap rows per bucket
     * and report what was dropped (no silent truncation). Bucket sizes come
     * from a hash-aggregate (map-side partial combine) joined back — a

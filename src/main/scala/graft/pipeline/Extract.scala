@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Dataset, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.encode.Encoder
-import graft.functions.Spans
+import graft.functions.{Spans, TextNorm}
 import graft.model.{Gazetteer, Kernel, KernelConfig}
 import graft.schema._
 
@@ -53,7 +53,7 @@ object Extract {
   def prepare(pages: DataFrame, cfg: ExtractorConfig, keep: Seq[String] = Nil): DataFrame = {
     val base = cfg.langFilter.fold(pages)(l => pages.filter(col("lang") === lit(l)))
     base
-      .select(col("url") +: regexp_replace(col("text"), "\n", "").as("text") +:
+      .select(col("url") +: TextNorm.stripNewlines(col("text")).as("text") +:
         keep.map(col): _*)
       .filter(length(col("text")) > 0 &&
         !col("text").contains("肝") && !col("text").contains("胃") &&

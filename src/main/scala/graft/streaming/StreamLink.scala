@@ -141,12 +141,12 @@ object StreamLink {
     * write is create-overwrite with constant content, so a replayed batch 0
     * re-writing it is a no-op in effect. */
   private[streaming] def readOrInitMeta(spark: SparkSession, stateDir: String,
-      nStateBuckets: Int, shingleN: Int): StateMeta =
+      nStateBuckets: Int): StateMeta =
     readMeta(spark, stateDir) match {
       case Some(meta) =>
-        require(meta.shingleN == shingleN,
+        require(meta.shingleN == Linker.ShingleN,
           s"state dir $stateDir was built with shingleN=${meta.shingleN}; " +
-            s"linking it with shingleN=$shingleN would band the same surface " +
+            s"linking it with shingleN=${Linker.ShingleN} would band the same surface " +
             "under different keys and silently miss candidates")
         require(meta.layout == LevelLayout,
           s"state dir $stateDir was written by the flat bucket layout (bucket t in " +
@@ -166,7 +166,7 @@ object StreamLink {
             "not a state dir this layout wrote; refusing to adopt it " +
             "(relink from scratch, or compact the old state with the " +
             "version that wrote it)")
-        val meta = StateMeta(nStateBuckets, shingleN)
+        val meta = StateMeta(nStateBuckets, Linker.ShingleN)
         writeMeta(spark, stateDir, meta)
         meta
     }
@@ -243,14 +243,13 @@ object StreamLink {
   /** Link one micro-batch of triples against (and into) the state. Public
     * for direct testing; [[run]] wires it into foreachBatch. */
   def processBatch(batchDf: DataFrame, stateDir: String, batchId: Long,
-      shingleN: Int = 2, threshold: Double = 0.6,
       nStateBuckets: Int = 64): Unit =
     described(batchDf.sparkSession, jobLabel(batchId, "probe"))(
-      linkBatch(batchDf, stateDir, batchId, shingleN, threshold, nStateBuckets))
+      linkBatch(batchDf, stateDir, batchId, nStateBuckets))
 
   /** [[processBatch]]'s body; it relabels its jobs as each phase begins. */
   private def linkBatch(batchDf: DataFrame, stateDir: String, batchId: Long,
-      shingleN: Int, threshold: Double, nStateBuckets: Int): Unit = {
+      nStateBuckets: Int): Unit = {
     val spark = batchDf.sparkSession
     import spark.implicits._
     def phase(name: String): Unit = spark.sparkContext.setJobDescription(jobLabel(batchId, name))
@@ -263,7 +262,7 @@ object StreamLink {
       "subject", "relation", "objectType", "obj"))
     val triples = batchRows.localCheckpoint().as[Triple]
     if (Observed.observedCount(batchObs) == 0) return
-    val meta = readOrInitMeta(spark, stateDir, nStateBuckets, shingleN)
+    val meta = readOrInitMeta(spark, stateDir, nStateBuckets)
     val nB = meta.nStateBuckets
     val batchSurf = Linker.surfaces(triples).toDF()
       .localCheckpoint() // bucket probe + anti-join + provenance reuse it
@@ -273,7 +272,7 @@ object StreamLink {
     // surfaces' bands, so the pruned band read can only see MORE state than
     // the candidate join needs, never less
     val probes = batchSurf.select(bucketOf(col("surface"), nB).as("b"), lit("s").as("k"))
-      .unionByName(Linker.bandRows(batchSurf.select("norm"), shingleN)
+      .unionByName(Linker.bandRows(batchSurf.select("norm"))
         .select(bucketOf(col("bucket"), nB).as("b"), lit("p").as("k")))
       .distinct().as[(Long, String)].collect()
     val sBuckets = probes.collect { case (b, "s") => b }.toSeq
@@ -288,16 +287,15 @@ object StreamLink {
     // persisted (lazily — no dedicated job): the band fan-out is read by
     // the candidate semi-join and the tagged union, which would otherwise
     // re-minhash every new surface once per consumer
-    val newBands = Linker.bandRows(newSurf.select("id", "norm"), shingleN).persist()
+    val newBands = Linker.bandRows(newSurf.select("id", "norm")).persist()
     val exBands = bandState(spark, stateDir, batchId, pBuckets)
 
     // ---- candidate pairs under the hot-band guard ([[BucketPairs]]): the
     // (bucket-pruned) state side is semi-joined to the batch's exact band
     // values — candidates only — then band values whose combined new ∪
-    // candidate-existing membership exceeds `bucketCap` pair by bounded
-    // sorted neighborhood over the norm — one templated surface family in
-    // the state must not make every later micro-batch quadratic
-    val bucketCap = 1000
+    // candidate-existing membership exceeds [[Linker.BucketCap]] pair by
+    // bounded sorted neighborhood over the norm — one templated surface
+    // family in the state must not make every later micro-batch quadratic
     val exCand = exBands.join(newBands.select("bucket").distinct(), Seq("bucket"), "left_semi")
     // persisted: the hot-bucket size probe and the pairing both read it; the
     // probe's driver collect materializes it so pairing reuses the cache
@@ -317,7 +315,7 @@ object StreamLink {
     // ne's post-verify distinct
     val aNew = col("is_new_a")
     def pick(n: String, e: String) = when(aNew, col(n)).otherwise(col(e))
-    val cand = BucketPairs(tagged, Seq("bucket"), bucketCap, window = 8,
+    val cand = BucketPairs(tagged, Seq("bucket"), Linker.BucketCap, Linker.NeighborWindow,
         _.withColumn("sort", col("norm")), newCol = Some("is_new"))
       .select(pick("id_a", "id_b").as("nid"), pick("norm_a", "norm_b").as("na"),
         pick("id_b", "id_a").as("oid"), pick("norm_b", "norm_a").as("nb"),
@@ -331,7 +329,7 @@ object StreamLink {
       .select(col("nid").as("src"), col("oid").as("dst"), col("na"), col("nb"))
       .as[(Long, Long, String, String)]
       .flatMap { case (s, d, na, nb) =>
-        if (Linker.jaccardOk(na, nb, shingleN, threshold)) Some((s, d)) else None
+        if (Linker.jaccardOk(na, nb)) Some((s, d)) else None
       }.toDF("src", "dst")
 
     // verified attachments: new surface → existing canonical component (the
@@ -343,7 +341,7 @@ object StreamLink {
       .select(col("nid"), col("na"), col("nb"), col("ex_cid"), col("ex_rep"))
       .as[(Long, String, String, Long, String)]
       .flatMap { case (nid, na, nb, cid, rep) =>
-        if (Linker.jaccardOk(na, nb, shingleN, threshold)) Some((nid, cid, rep)) else None
+        if (Linker.jaccardOk(na, nb)) Some((nid, cid, rep)) else None
       }.toDF("nid", "ex_cid", "ex_rep").distinct().persist()
 
     // the new surfaces' own components, canonicalized by the batch rule

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Hashing
 
 /** Deterministic synthetic mention corpus for the incremental-linking /
-  * compaction SCALE benches ([[graft.Bench]] "compaction" phase,
+  * compaction SCALE measurements (perfbench's `kg_incremental`,
   * LinkCompactionSpec's scale-shaped pin). [[Corpus]] cannot serve here:
   * its subject/object vocabulary is the bounded [[Lexicon]], so distinct
   * surfaces saturate at a few hundred no matter how many documents are

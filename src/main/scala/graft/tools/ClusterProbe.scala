@@ -8,14 +8,18 @@ import graft.SparkSessionFactory
 import graft.pipeline.Extract
 import graft.synth.Corpus
 
-/** Multi-JVM execution probe: runs the flagship extraction once under
-  * single-process `local[8]` and once under `local-cluster[2,8,4096]` —
-  * real forked executor JVMs, so closure/broadcast serialization and the
-  * per-executor `ExtractorModel` singleton actually cross a process
-  * boundary — and asserts the triples are bit-identical (count + an
+/** The multi-JVM identity check: the flagship extraction and the
+  * incremental-linking drive, each run once under single-process
+  * `local[2]` and once under `local-cluster[2,1,1024]` — two forked
+  * executor JVMs, so closure/broadcast serialization, task-result transport
+  * and the per-executor `ExtractorModel` singleton actually cross a process
+  * boundary — must give bit-identical outputs (count + an
   * order-independent, multiset-sensitive checksum over every column).
+  * Prints one JSON line and exits non-zero on a mismatch.
   *
-  * `runMain graft.tools.ClusterProbe [docs]` (default 2000).
+  * `runMain graft.tools.ClusterProbe [docs]` (default 200). Tier-1 runs it
+  * in a child JVM (`MultiJvmIdentitySpec`): the suites' shared session
+  * leaves no room for a second SparkContext in the test JVM.
   */
 object ClusterProbe {
 
@@ -52,8 +56,8 @@ object ClusterProbe {
     * Unlike [[extractChecksum]] this exercises executor-fed STATE WRITES
     * (parquet state partitions produced by plans running on the executors)
     * plus the candidate join against state read back — the serialization
-    * surface of the streaming path, re-proven across a process boundary
-    * every bench round. */
+    * surface of the streaming path, checked across a process boundary by
+    * [[main]]. */
   def linkChecksum(spark: SparkSession, docs: Long): (Long, Long) = {
     val work = java.nio.file.Files.createTempDirectory("graft-probe-link").toString
     try {
@@ -71,14 +75,14 @@ object ClusterProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val docs = if (args.nonEmpty) args(0).toLong else 2000L
-    val local = SparkSessionFactory.local(8, "probe-local")
+    val docs = if (args.nonEmpty) args(0).toLong else 200L
+    val local = SparkSessionFactory.local(2, "probe-local")
     val (c1, h1) = extractChecksum(local, docs)
-    val (l1, lh1) = linkChecksum(local, math.min(docs, 500L))
+    val (l1, lh1) = linkChecksum(local, docs)
     local.stop()
-    val cl = SparkSessionFactory.cluster("local-cluster[2,8,4096]", "probe-cluster")
+    val cl = SparkSessionFactory.cluster("local-cluster[2,1,1024]", "probe-cluster")
     val (c2, h2) = extractChecksum(cl, docs)
-    val (l2, lh2) = linkChecksum(cl, math.min(docs, 500L))
+    val (l2, lh2) = linkChecksum(cl, docs)
     cl.stop()
     println(s"""{"docs":$docs,"local":{"triples":$c1,"checksum":$h1,"link_rows":$l1,"link_checksum":$lh1},""" +
       s""""cluster":{"triples":$c2,"checksum":$h2,"link_rows":$l2,"link_checksum":$lh2},""" +

@@ -10,46 +10,6 @@ import graft.schema.Ontology
   * isolates hardware/JVM scaling from Spark scheduling effects. */
 object KernelProbe {
 
-  /** The raw-JVM control lane as data (for the bench sidecar): rows/sec at
-    * 2/4/8/16/32 threads (batch 32) plus the 4→16 scaling efficiency — the
-    * number that attributes an in-Spark throughput dip to host contention
-    * (probe down too) vs a real regression (probe steady). `rows` trades
-    * runtime for stability; 2048 keeps the lane under ~2 min. */
-  def measure(rows: Int = 2048): Map[String, Double] = {
-    val kernel = new Kernel(KernelConfig(), CharVocab.size)
-    val gaz = Gazetteer.fromLexicon()
-    val text = "胸部CT检查所见：孤立性结节，左肺上叶，类圆形，约12×8mm，实性密度。余未见异常。"
-    val question = Ontology.subject2question("Mass")
-    def run(threads: Int, rowsPerThread: Int): Double = {
-      val done = new AtomicLong()
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map { _ =>
-        new Thread(() => {
-          var i = 0
-          while (i < rowsPerThread) {
-            val m = math.min(32, rowsPerThread - i)
-            val reqs = Array.fill(m) {
-              val row = Encoder.encode(text, question, 168)
-              val bias = gaz.subjectSpans(text, "Mass")
-              (row, bias, 2)
-            }
-            kernel.tagBatch(reqs).foreach(t => done.addAndGet(t.length))
-            i += m
-          }
-        })
-      }
-      ts.foreach(_.start())
-      ts.foreach(_.join())
-      threads * rowsPerThread / ((System.nanoTime() - t0) / 1e9)
-    }
-    run(4, 512) // warmup (JIT + singleton init)
-    val r4 = run(4, rows)
-    val r16 = run(16, rows)
-    val r32 = run(32, rows)
-    Map("rows_per_sec_4" -> r4, "rows_per_sec_16" -> r16,
-      "rows_per_sec_32" -> r32, "eff_4_to_16" -> (r16 / r4) / 4.0)
-  }
-
   def main(args: Array[String]): Unit = {
     val kernel = new Kernel(KernelConfig(), CharVocab.size)
     val gaz = Gazetteer.fromLexicon()

@@ -79,6 +79,28 @@ class TableIOSpec extends SparkSpec {
     assert(again.count() === 0)
   }
 
+  test("pendingInput past 1,000 committed buckets: the broadcast anti-join equals the IN-list") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val dir = tmpDir() + "/t-wide"
+    val nB = 2048
+    val done = (0 to 1000).toSet // one bucket past the IN-list branch
+    // a committed manifest alone: no data is needed to decide what is pending
+    TableIO.writeSnapshot(spark, dir, TableIO.Snapshot("s1", "", nB,
+      done.toSeq.sorted.map(TableIO.BucketManifest(_, 0L, 0L))))
+    val input = ((0 until 5000).map(i => (Option(s"url-$i"), i.toLong)) :+ ((None, -1L)))
+      .toDF("url", "v")
+    val pending = TableIO.pendingInput(input, "url", dir, "s1", nB)
+    val joins = pending.queryExecution.optimizedPlan.collect { case j: Join => j.joinType }
+    assert(joins === Seq(LeftAnti), pending.queryExecution.optimizedPlan.toString)
+    val inList = input.filter(col("url").isNotNull)
+      .filter(!TableIO.bucketCol("url", nB).isin(done.toSeq: _*))
+    val got = pending.as[(String, Long)].collect().sorted.toSeq
+    assert(got === inList.as[(String, Long)].collect().sorted.toSeq)
+    assert(got.nonEmpty && got.size < 5000, s"${got.size} of 5000 pending")
+  }
+
   test("audit detects tampered data") {
     val dir = tmpDir() + "/t3"
     import spark.implicits._
