@@ -68,14 +68,17 @@ object Metrics {
   def docExactPrecision(pred: Dataset[Triple], gold: Dataset[GoldTriple],
       docUrls: DataFrame): Double = {
     val p = pred.toDF().select(tripleKey.map(col): _*)
-    val g = gold.toDF().select(col("url"), col("subjectType"), col("subject"),
-      col("relation"), col("objectType"), col("obj"))
-    val misses = p.join(g, tripleKey, "left_anti").select("url").distinct()
-    // both counts in ONE action (1-row aggregates cross-joined); distinct()
-    // before count — not countDistinct — keeps the null-url row accounting
-    // byte-identical to the original two-action form
-    val r = misses.agg(count(lit(1)).as("missed"))
-      .crossJoin(docUrls.select("url").distinct().agg(count(lit(1)).as("total")))
+    val hits = gold.toDF().select(tripleKey.map(col): _*).withColumn("_hit", lit(true))
+    // ONE join marks each predicted triple hit or missed (a null key field
+    // matches nothing, so it is a miss), and ONE aggregation counts the
+    // distinct urls of the misses and of the docs. A url is counted as
+    // struct(url), which is never null, so a null url counts once on each
+    // side, as distinct() then count did
+    val r = p.join(hits, tripleKey, "left_outer")
+      .select(col("url"), col("_hit").isNull.as("_miss"), lit(false).as("_doc"))
+      .unionByName(docUrls.select(col("url"), lit(false).as("_miss"), lit(true).as("_doc")))
+      .agg(count_distinct(when(col("_miss"), struct(col("url")))).as("missed"),
+        count_distinct(when(col("_doc"), struct(col("url")))).as("total"))
       .head()
     val (missed, total) = (r.getLong(0).toDouble, r.getLong(1).toDouble)
     if (total > 0) (total - missed) / total else 0.0

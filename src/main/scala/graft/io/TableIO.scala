@@ -26,8 +26,11 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 object TableIO {
 
   final case class BucketManifest(bucket: Int, rowCount: Long, checksum: Long)
+  /** `schema`: the DDL of the written data columns (the `bucket` partition
+    * column excluded), empty in a manifest written before the field
+    * existed. */
   final case class Snapshot(stage: String, inputSnapshot: String, nBuckets: Int,
-      buckets: Seq[BucketManifest]) {
+      buckets: Seq[BucketManifest], schema: String = "") {
     def committed: Set[Int] = buckets.map(_.bucket).toSet
   }
 
@@ -84,7 +87,7 @@ object TableIO {
       s"""{"bucket":${b.bucket},"rowCount":${b.rowCount},"checksum":${b.checksum}}""")
       .mkString("[", ",", "]")
     s"""{"stage":"${esc(s.stage)}","inputSnapshot":"${esc(s.inputSnapshot)}",""" +
-      s""""nBuckets":${s.nBuckets},"buckets":$bs}"""
+      s""""nBuckets":${s.nBuckets},"buckets":$bs,"schema":"${esc(s.schema)}"}"""
   }
 
   def parseSnapshot(txt: String): Snapshot = {
@@ -100,7 +103,7 @@ object TableIO {
     val buckets = bucketRe.findAllMatchIn(txt).map { m =>
       BucketManifest(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong)
     }.toSeq
-    Snapshot(str("stage"), str("inputSnapshot"), num("nBuckets").toInt, buckets)
+    Snapshot(str("stage"), str("inputSnapshot"), num("nBuckets").toInt, buckets, str("schema"))
   }
 
   // -------------------------------------------------------------- stage write
@@ -131,6 +134,9 @@ object TableIO {
       nBuckets: Int, inputSnapshot: String = "",
       completeInput: Boolean = false): Int = {
     val spark = df.sparkSession
+    // the written data columns, recorded so that readStage needs no
+    // footer-inference job
+    val schema = StructType(df.schema.filterNot(_.name == "bucket")).toDDL
     val snapOpt = readSnapshot(spark, path)
     val prior = snapOpt
       .filter(s => s.stage == stage && s.nBuckets == nBuckets &&
@@ -161,7 +167,7 @@ object TableIO {
         // run finds a matching (stage, nBuckets, snapshot) claim with zero
         // committed buckets and resumes by adopting the written dirs —
         // without the claim it would trip the unmanaged-data guard above
-        writeSnapshot(spark, path, Snapshot(stage, inputSnapshot, nBuckets, Seq.empty))
+        writeSnapshot(spark, path, Snapshot(stage, inputSnapshot, nBuckets, Seq.empty, schema))
       case _ => ()
     }
     val done = prior.map(_.committed).getOrElse(Set.empty)
@@ -228,7 +234,7 @@ object TableIO {
         .map(b => BucketManifest(b, 0L, 0L)).toArray
     val merged = (prior.map(_.buckets).getOrElse(Seq.empty) ++ manifests ++ emptyManifests)
       .groupBy(_.bucket).map(_._2.last).toSeq
-    writeSnapshot(spark, path, Snapshot(stage, inputSnapshot, nBuckets, merged))
+    writeSnapshot(spark, path, Snapshot(stage, inputSnapshot, nBuckets, merged, schema))
     manifests.length + emptyManifests.length
   }
 
@@ -271,8 +277,17 @@ object TableIO {
     }
   }
 
+  /** The stage at `path`, its data columns then the int `bucket`
+    * partition column. A manifest that records the written schema
+    * ([[Snapshot]]) makes building the frame run no job; without one,
+    * Parquet infers it from the footers, which takes a job. */
   def readStage(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    readSnapshot(spark, path).map(_.schema).filter(_.nonEmpty) match {
+      case Some(ddl) => spark.read
+        .schema(StructType.fromDDL(ddl).add(StructField("bucket", IntegerType)))
+        .parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   /** Write `df` as a Spark BUCKETED catalog table: both sides of a join
     * bucketed by the same key and count scan pre-partitioned, so the join

@@ -88,11 +88,15 @@ object Compaction {
       // its observed row count sets the snapshot's bucket level
       val (surfaceRows, surfaceObs) = Observed.counted(recanonicalized(spark, stateDir))
       val surfaces = surfaceRows.localCheckpoint()
-      val mig = migrationOf(surfaces).localCheckpoint()
+      // its observed row count sizes the two joins below by Spark's
+      // broadcast rule ([[Linker.broadcastBySize]])
+      val (migRows, migObs) = Observed.counted(migrationOf(surfaces))
+      val mig = migRows.localCheckpoint()
+      val migJoin = Linker.broadcastBySize(mig, Observed.observedCount(migObs))
       val triples = StreamLink.readTripleProvenance(spark, stateDir)
-        .join(mig.select(col("old_id").as("subjectId"),
+        .join(migJoin.select(col("old_id").as("subjectId"),
           col("new_id").as("s_id"), col("new_surface").as("s_surf")), "subjectId")
-        .join(mig.select(col("old_id").as("objectId"),
+        .join(migJoin.select(col("old_id").as("objectId"),
           col("new_id").as("o_id"), col("new_surface").as("o_surf")), "objectId")
         .select(col("s_id").as("subjectId"), col("s_surf").as("subject"),
           col("subjectType"), col("relation"),

@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,13 +69,18 @@ object Linker {
     }
   }
 
+  /** The band keys of the normalized surface `norm`, as an array column of
+    * `bands` longs ([[bandKeysOf]]). */
+  private[graft] def bandKeys(norm: Column, shingleN: Int = ShingleN,
+      k: Int = MinhashLanes, bands: Int = Bands): Column =
+    udf((n: String) => bandKeysOf(n, k, bands, shingleN)).apply(norm)
+
   /** The band fan-out of `df`: one row per band key of its `norm` column,
     * `bucket` first, then every column of `df`. */
   private[graft] def bandRows(df: DataFrame, shingleN: Int = ShingleN,
-      k: Int = MinhashLanes, bands: Int = Bands): DataFrame = {
-    val keys = udf((norm: String) => bandKeysOf(norm, k, bands, shingleN))
-    df.select(explode(keys(col("norm"))).as("bucket") +: df.columns.toSeq.map(col): _*)
-  }
+      k: Int = MinhashLanes, bands: Int = Bands): DataFrame =
+    df.select(explode(bandKeys(col("norm"), shingleN, k, bands)).as("bucket") +:
+      df.columns.toSeq.map(col): _*)
 
   /** Whether two normalized surfaces are the same entity: true Jaccard of
     * their char shingles at or above `threshold`. */
@@ -141,10 +146,14 @@ object Linker {
     * `key` column (a key on no edge is its own component), each component
     * canonicalized: `canonical_id` = min member `id`, `canonical_surface` =
     * min (length, lexicographic) member `surface`. Returns every column of
-    * `surf` plus `component`, `canonical_id` and `canonical_surface`. Runs
+    * `surf` plus `component`, `canonical_id` and `canonical_surface`. A row
+    * with a null `surface` stands for its `key` alone: it joins that key's
+    * component and is never its representative. Runs
     * [[ConnectedComponents]] eagerly; the rest stays lazy. Window
     * aggregates, not a group-by joined back: a caller that reads only
-    * `id` and `component` pays no shuffle for the canonical columns. */
+    * `id` and `component` pays no shuffle for the canonical columns, and
+    * one that adds its own aggregates over the same `component` window
+    * shares this one's shuffle. */
   private[graft] def canonicalize(surf: DataFrame, edges: DataFrame,
       key: String): DataFrame = {
     val comp = ConnectedComponents.run(edges)
@@ -154,8 +163,9 @@ object Linker {
       .select(surf.columns.toSeq.map(col) :+
         coalesce(col("cc"), col(key)).as("component"): _*)
       .withColumn("canonical_id", min(col("id")).over(component))
-      .withColumn("canonical_surface", min(struct(length(col("surface")).as("l"),
-        col("surface").as("s"))).over(component).getField("s"))
+      .withColumn("canonical_surface", min(when(col("surface").isNotNull,
+        struct(length(col("surface")).as("l"), col("surface").as("s")))).over(component)
+        .getField("s"))
   }
 
   /** surface → (canonical id, canonical surface), by [[canonicalize]] over
@@ -169,6 +179,18 @@ object Linker {
     release()
     res.select("surface", "canonical_id", "canonical_surface")
   }
+
+  /** `df` marked for broadcast when its `rows` rows fit Spark's own
+    * threshold: rows × the schema's `defaultSize` ≤
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 turns it off, as for the
+    * planner). The planner applies that rule to its size ESTIMATE; a caller
+    * that has counted the rows (an [[graft.ops.Observed]] count on a
+    * checkpoint it ran) applies it to the count, before any shuffle is
+    * planned, which also fixes the join's build side. */
+  private[graft] def broadcastBySize(df: DataFrame, rows: Long): DataFrame =
+    if (rows * df.schema.defaultSize <=
+        df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) broadcast(df)
+    else df
 
   /** Url-grain canonical triples: each triple's subject and object mapped
     * through `res` (surface, canonical_id, canonical_surface). */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -23,6 +24,20 @@ import graft.schema.Triple
   * the buckets a batch actually lands in (a batch large enough to touch
   * every bucket reads the full state once — that is the floor any correct
   * candidate join has).
+  *
+  * A small batch costs its Spark jobs more than its rows, so each
+  * intermediate of a batch is planned and shuffled ONCE, into a checkpoint
+  * every later reader shares: the batch's triples; its distinct surfaces
+  * with their band keys (the touched-bucket probe is observed on that
+  * checkpoint, no job of its own); ONE left-outer join of those surfaces
+  * against the surface state, whose unmatched rows are the new surfaces
+  * and whose matched rows are the published part of the batch's
+  * resolution; every candidate pair verified once; and the assignment,
+  * whose one component window carries the adoption and the bridges. A
+  * join whose small side is bounded by the batch (the new band keys, the
+  * resolution) is broadcast when its observed rows fit Spark's own size
+  * rule ([[Linker.broadcastBySize]]), decided before any shuffle is
+  * planned, so the plan does not depend on which stage finishes first.
   *
   * **Bucket levels.** Each batch writes its bucketed tables at the level L
   * its own rows fill: the largest power of two L ≤ N with
@@ -83,8 +98,10 @@ object StreamLink {
     StructField("objectId", LongType), StructField("obj", StringType),
     StructField("objectType", StringType), StructField("url", StringType)))
 
+  /** An empty frame the optimizer knows is empty: joins against it fold
+    * away at planning time instead of running a job. */
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** Pinned per-state-dir parameters (see class doc). `layout` is
     * [[LevelLayout]] for every dir this code writes; [[FlatLayout]] marks a
@@ -264,30 +281,39 @@ object StreamLink {
     if (Observed.observedCount(batchObs) == 0) return
     val meta = readOrInitMeta(spark, stateDir, nStateBuckets)
     val nB = meta.nStateBuckets
-    val batchSurf = Linker.surfaces(triples).toDF()
-      .localCheckpoint() // bucket probe + anti-join + provenance reuse it
-    // ONE bounded probe job computes both touched-bucket sets (driver-side
-    // collect of at most 2·nB longs, independent of batch or state size).
-    // The band probe runs over ALL batch surfaces — a superset of the new
-    // surfaces' bands, so the pruned band read can only see MORE state than
-    // the candidate join needs, never less
-    val probes = batchSurf.select(bucketOf(col("surface"), nB).as("b"), lit("s").as("k"))
-      .unionByName(Linker.bandRows(batchSurf.select("norm"))
-        .select(bucketOf(col("bucket"), nB).as("b"), lit("p").as("k")))
-      .distinct().as[(Long, String)].collect()
-    val sBuckets = probes.collect { case (b, "s") => b }.toSeq
-    val pBuckets = probes.collect { case (b, "p") => b }.toSeq
+    // the batch's distinct surfaces with their band keys, minhashed once
+    // for the probe and the candidate fan-out.
+    // The touched-bucket probe rides the same checkpoint as observed sets:
+    // the surface buckets and, per band lane, the band-key buckets — each
+    // set at most nB longs in a task and on the driver, whatever the batch
+    // or state size. The band probe covers ALL batch surfaces, a superset
+    // of the new surfaces' bands, so the pruned band read can only see MORE
+    // state than the candidate join needs, never less
+    val keyed = Linker.surfaces(triples).toDF().withColumn("keys", Linker.bandKeys(col("norm")))
+    val (surfRows, probe) = Observed(keyed, count(lit(1)).as("rows") +:
+      collect_set(bucketOf(col("surface"), nB)).as("s") +:
+        (0 until Linker.Bands).map(i =>
+          collect_set(bucketOf(element_at(col("keys"), i + 1), nB)).as(s"p$i")): _*)
+    val batchSurf = surfRows.localCheckpoint()
+    val touched = probe.get
+    def buckets(names: Seq[String]): Seq[Long] = names.flatMap(n =>
+      touched.get(n).toSeq.flatMap(_.asInstanceOf[scala.collection.Seq[Long]])).distinct
+    val sBuckets = buckets(Seq("s"))
+    val pBuckets = buckets((0 until Linker.Bands).map(i => s"p$i"))
 
+    // ONE join against the surface state, left outer: its unmatched rows
+    // are the batch's NEW surfaces, its matched rows the published
+    // resolution of the rest, counted as the join runs
     phase("candidates")
     val exSurf = surfaceState(spark, stateDir, batchId, sBuckets)
-
-    val newSurf = batchSurf
-      .join(exSurf.select("surface"), Seq("surface"), "left_anti")
-      .localCheckpoint() // two band fan-outs + the assignment reuse it
-    // persisted (lazily — no dedicated job): the band fan-out is read by
-    // the candidate semi-join and the tagged union, which would otherwise
-    // re-minhash every new surface once per consumer
-    val newBands = Linker.bandRows(newSurf.select("id", "norm")).persist()
+      .select("surface", "canonical_id", "canonical_surface")
+    val (joinedRows, joinedObs) = Observed(batchSurf.join(exSurf, Seq("surface"), "left_outer"),
+      count(col("canonical_id")).as("published"))
+    val joined = joinedRows.localCheckpoint()
+    val isNew = col("canonical_id").isNull
+    val newSurf = joined.filter(isNew).select("surface", "norm", "id")
+    val newBands = joined.filter(isNew)
+      .select(explode(col("keys")).as("bucket"), col("id"), col("norm"))
     val exBands = bandState(spark, stateDir, batchId, pBuckets)
 
     // ---- candidate pairs under the hot-band guard ([[BucketPairs]]): the
@@ -296,9 +322,13 @@ object StreamLink {
     // candidate-existing membership exceeds [[Linker.BucketCap]] pair by
     // bounded sorted neighborhood over the norm — one templated surface
     // family in the state must not make every later micro-batch quadratic
-    val exCand = exBands.join(newBands.select("bucket").distinct(), Seq("bucket"), "left_semi")
+    val newRows = Observed.observedCount(probe) - Observed.observedCount(joinedObs, "published")
+    val exCand = exBands.join(
+      Linker.broadcastBySize(newBands.select("bucket"), Linker.Bands * newRows),
+      Seq("bucket"), "left_semi")
     // persisted: the hot-bucket size probe and the pairing both read it; the
-    // probe's driver collect materializes it so pairing reuses the cache
+    // probe's size aggregation reads every partition, so it materializes the
+    // cache before the pairing reads it
     val tagged = newBands
       .select(col("bucket"), col("id"), col("norm"), lit(true).as("is_new"),
         lit(null).cast("long").as("cid"), lit(null).cast("string").as("rep"))
@@ -308,88 +338,78 @@ object StreamLink {
       .persist()
     // the pair rule (BucketPairs' incremental mode): every pair anchors on
     // a NEW surface — existing–existing pairs are never emitted — and is
-    // oriented new side first here. ONE distinct over the result (a pair
-    // can meet in several bands): for other_new rows the extra columns are
-    // constant nulls; the ne side may keep same-norm same-canonical
-    // duplicates (different oid) — verified identically and collapsed by
-    // ne's post-verify distinct
+    // oriented new side first here. A pair met in several bands is
+    // verified and kept once per band: both consumers below are
+    // insensitive to repeats (ConnectedComponents canonicalizes its edges,
+    // the adoption takes a min and a set), so no shuffle dedups them
     val aNew = col("is_new_a")
     def pick(n: String, e: String) = when(aNew, col(n)).otherwise(col(e))
-    val cand = BucketPairs(tagged, Seq("bucket"), Linker.BucketCap, Linker.NeighborWindow,
+    val jaccardOk = udf((na: String, nb: String) => Linker.jaccardOk(na, nb))
+    // every candidate pair verified ONCE, into one checkpoint both the
+    // new–new edges and the new–existing attachments read
+    val verified = BucketPairs(tagged, Seq("bucket"), Linker.BucketCap, Linker.NeighborWindow,
         _.withColumn("sort", col("norm")), newCol = Some("is_new"))
-      .select(pick("id_a", "id_b").as("nid"), pick("norm_a", "norm_b").as("na"),
-        pick("id_b", "id_a").as("oid"), pick("norm_b", "norm_a").as("nb"),
+      .filter(jaccardOk(col("norm_a"), col("norm_b")))
+      .select(pick("id_a", "id_b").as("nid"), pick("id_b", "id_a").as("oid"),
         (aNew && col("is_new_b")).as("other_new"),
         pick("cid_b", "cid_a").as("ex_cid"), pick("rep_b", "rep_a").as("ex_rep"))
-      .distinct()
+      .localCheckpoint()
+    tagged.unpersist()
 
-    // Jaccard-verified edges among the batch's new surfaces (direction is
-    // irrelevant — ConnectedComponents canonicalizes edges)
-    val nn = cand.filter(col("other_new"))
-      .select(col("nid").as("src"), col("oid").as("dst"), col("na"), col("nb"))
-      .as[(Long, Long, String, String)]
-      .flatMap { case (s, d, na, nb) =>
-        if (Linker.jaccardOk(na, nb)) Some((s, d)) else None
-      }.toDF("src", "dst")
-
-    // verified attachments: new surface → existing canonical component (the
-    // incremental join this operator exists for)
-    // persisted: the assignment checkpoint AND the bridges write both read
-    // the adopt aggregation — without the cache the cand distinct + verify
-    // would re-run once per consumer
-    val ne = cand.filter(!col("other_new"))
-      .select(col("nid"), col("na"), col("nb"), col("ex_cid"), col("ex_rep"))
-      .as[(Long, String, String, Long, String)]
-      .flatMap { case (nid, na, nb, cid, rep) =>
-        if (Linker.jaccardOk(na, nb)) Some((nid, cid, rep)) else None
-      }.toDF("nid", "ex_cid", "ex_rep").distinct().persist()
-
-    // the new surfaces' own components, canonicalized by the batch rule
+    // the new surfaces' own components (verified edges among them; their
+    // direction is irrelevant), canonicalized by the batch rule. The
+    // verified attachments ride along as surface-less rows of their new
+    // surface, so each lands in that surface's component
     phase("components")
-    val fresh = Linker.canonicalize(newSurf, nn, "id")
+    val attachments = verified.filter(!col("other_new"))
+      .select(col("nid").as("id"), col("ex_cid"), col("ex_rep"))
+    val fresh = Linker.canonicalize(newSurf.unionByName(attachments, allowMissingColumns = true),
+      verified.filter(col("other_new")).select(col("nid").as("src"), col("oid").as("dst")), "id")
 
     // conflict rule: a component adopting ≥2 existing canonical ids takes
-    // the MINIMUM; the others are recorded as bridges, never rewritten
+    // the MINIMUM; the others are recorded as bridges, never rewritten.
+    // Both come from aggregates over the component window canonicalize
+    // already shuffled by: the adopted minimum and the component's distinct
+    // cid set (bounded by the number of existing components one
+    // batch-component bridges). The bridges ride the assignment checkpoint:
+    // the component's row whose surface is its batch-rule representative
+    // (one per component, batch surfaces being distinct) carries the cids
+    // it bridges to the kept one
     phase("assign")
-    val neComp = ne.join(fresh.select(col("id").as("nid"), col("component")), "nid")
-    // one aggregation carries BOTH the adopted minimum and the full distinct
-    // cid set per component (collect_set is bounded by the number of
-    // existing components one batch-component bridges), so the bridge
-    // ledger no longer needs its own distinct + join back onto adopt
-    val adoptAll = neComp.groupBy("component")
-      .agg(min(struct(col("ex_cid").as("c"), col("ex_rep").as("r"))).as("m"),
-        collect_set(col("ex_cid")).as("cids"))
-    val adopt = adoptAll
-      .select(col("component"), col("m.c").as("adopt_cid"), col("m.r").as("adopt_rep"))
-    val bridges = adoptAll
-      .select(col("m.c").as("kept_id"), explode(col("cids")).as("bridged_id"))
-      .filter(col("bridged_id") =!= col("kept_id"))
-      .distinct()
-
+    val component = Window.partitionBy("component")
+    val kept = col("adopt.c")
     val (assignedRows, assignedObs) = Observed.counted(fresh
-      .join(adopt, Seq("component"), "left")
+      .withColumn("adopt", min(when(col("ex_cid").isNotNull,
+        struct(col("ex_cid").as("c"), col("ex_rep").as("r")))).over(component))
+      .withColumn("cids", collect_set(col("ex_cid")).over(component))
+      .filter(col("surface").isNotNull)
       .select(col("surface"), col("norm"), col("id"),
-        coalesce(col("adopt_cid"), col("canonical_id")).as("canonical_id"),
-        coalesce(col("adopt_rep"), col("canonical_surface")).as("canonical_surface")))
+        coalesce(kept, col("canonical_id")).as("canonical_id"),
+        coalesce(col("adopt.r"), col("canonical_surface")).as("canonical_surface"),
+        when(col("surface") === col("canonical_surface"),
+          filter(col("cids"), _ =!= kept)).as("bridged")))
     // consumed by three writes + the batch resolution; its observed row
     // count sets the bucket level of this batch's state files
     val assigned = assignedRows.localCheckpoint()
+    val bridges = assigned
+      .select(col("canonical_id").as("kept_id"), explode(col("bridged")).as("bridged_id"))
 
     // this batch's canonical (triple, url) provenance rows under the batch's
-    // OWN resolution — the existing-state side is the bucket-pruned exSurf
-    // semi-joined to the batch's surfaces (every subject/obj of this batch
-    // IS a batchSurf surface, so nothing is lost and the join never scans
-    // full history). Url-grain, NOT pre-aggregated: summing per-batch counts
-    // would double-count a url re-delivered in a later batch (re-crawl
-    // appended to the drop dir, a non-file source), so the reader aggregates
+    // OWN resolution: the published rows of the state join (every
+    // subject/obj of this batch IS a batch surface, so nothing is lost and
+    // the join never scans full history) plus the new assignments — at most
+    // the batch's distinct surfaces, so broadcast by Spark's size rule.
+    // Url-grain, NOT pre-aggregated: summing per-batch counts would
+    // double-count a url re-delivered in a later batch (re-crawl appended
+    // to the drop dir, a non-file source), so the reader aggregates
     // [[Linker.support]] over the provenance instead
-    val res = exSurf
-      .join(batchSurf.select("surface"), Seq("surface"), "left_semi")
-      .select("surface", "canonical_id", "canonical_surface")
+    val res = joined.filter(!isNew).select("surface", "canonical_id", "canonical_surface")
       .unionByName(assigned.select("surface", "canonical_id", "canonical_surface"))
-    writeState(stateDir, batchId, assigned, Observed.observedCount(assignedObs), bridges,
-      Linker.resolveTriples(triples.toDF(), res), meta, jobLabel(batchId, _))
-    tagged.unpersist(); newBands.unpersist(); ne.unpersist()
+    val assignedCount = Observed.observedCount(assignedObs)
+    val resRows = Observed.observedCount(joinedObs, "published") + assignedCount
+    writeState(stateDir, batchId, assigned.drop("bridged"), assignedCount,
+      bridges, Linker.resolveTriples(triples.toDF(), Linker.broadcastBySize(res, resRows)),
+      meta, jobLabel(batchId, _))
   }
 
   /** The ONE writer of the state layout: the four tables of batch
@@ -401,17 +421,23 @@ object StreamLink {
     *  - `bands/`: the [[Linker.bandRows]] fan-out of `surfaces` — (bucket,
     *    id, norm, canonical_id, canonical_surface), 4 rows per surface —
     *    sub-partitioned by `pbucket`, the bucket dir of `bucket`;
-    *  - `bridges/`: (kept_id, bridged_id);
+    *  - `bridges/`: (kept_id, bridged_id), a pair possibly repeated —
+    *    within a batch as across batches; [[readBridges]] reads the set;
     *  - `triples/`: the distinct url-grain provenance rows of `triples`.
     * Each bucketed table is written at the level its own rows fill (class
     * doc): L = N = `meta.nStateBuckets` for a batch big enough, one dir
-    * for a batch below the session's `spark.sql.files.openCostInBytes`. It
-    * is repartitioned BY its bucket column first, so every bucket's rows
-    * land in one task and each dir holds ONE file instead of (shuffle
-    * partitions × buckets) fragments: the state stays one file per (batch,
-    * bucket dir) at any size, and a pruned read opens of each batch at
-    * most min(touched buckets, L) files. `surfaces` should be materialized
-    * — the surface write and the band fan-out both read it.
+    * for a batch below the session's `spark.sql.files.openCostInBytes`.
+    * At L > 1 it is repartitioned BY its bucket column first, so every
+    * bucket's rows land in one task and each dir holds ONE file instead of
+    * (shuffle partitions × buckets) fragments; at L = 1 the level rule
+    * puts the whole table under 2 × openCost, so `coalesce(1)` writes its
+    * one file in the write's own job, with no shuffle. The state stays one
+    * file per (batch, bucket dir) at any size, and a pruned read opens of
+    * each batch at most min(touched buckets, L) files. `surfaces`,
+    * `bridges` and `triples` are each evaluated once, by their own write:
+    * `surfaces` should be materialized — the surface write and the band
+    * fan-out both read it — and a join inside `triples` whose small side
+    * was counted should come broadcast ([[Linker.broadcastBySize]]).
     *
     * The four writes are mutually independent, so they run
     * [[concurrently]]: one write's straggler tail back-fills with the next
@@ -423,20 +449,23 @@ object StreamLink {
     val openCost = surfaces.sparkSession.sessionState.conf.filesOpenCostInBytes
     def level(rows: Long, schema: StructType) =
       bucketLevel(rows, schema, openCost, meta.nStateBuckets)
-    def overwrite(df: DataFrame, table: String, bucket: Option[(String, Column)] = None): Unit =
+    // a bucketed table as (partition column, key, level)
+    def overwrite(df: DataFrame, table: String,
+        bucket: Option[(String, String, Int)] = None): Unit =
       described(df.sparkSession, label(s"write $table"))(bucket match {
-        case Some((name, c)) => df.withColumn(name, c)
-          .repartition(col(name)).write.mode("overwrite")
-          .partitionBy(name).parquet(s"$dir/$table/batch=$batchId")
+        case Some((name, key, l)) =>
+          val byDir = df.withColumn(name, bucketDir(col(key), l))
+          (if (l == 1) byDir.coalesce(1) else byDir.repartition(col(name)))
+            .write.mode("overwrite").partitionBy(name).parquet(s"$dir/$table/batch=$batchId")
         case None =>
           df.write.mode("overwrite").parquet(s"$dir/$table/batch=$batchId")
       })
     concurrently(
       () => overwrite(surfaces, "surfaces",
-        Some(("sbucket", bucketDir(col("surface"), level(surfaceRows, surfSchema))))),
+        Some(("sbucket", "surface", level(surfaceRows, surfSchema)))),
       () => overwrite(Linker.bandRows(
           surfaces.select("id", "norm", "canonical_id", "canonical_surface"), meta.shingleN),
-        "bands", Some(("pbucket", bucketDir(col("bucket"), level(4 * surfaceRows, bandSchema))))),
+        "bands", Some(("pbucket", "bucket", level(Linker.Bands * surfaceRows, bandSchema)))),
       () => overwrite(bridges, "bridges"),
       () => overwrite(triples.distinct(), "triples"))
   }

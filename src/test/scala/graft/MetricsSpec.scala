@@ -155,4 +155,33 @@ class MetricsSpec extends SparkSpec {
     assert(r === wantR)
     assert(f1 === 2 * wantP * wantR / (wantP + wantR))
   }
+
+  test("doc-exact precision with a null url, a doc with no predictions and a doc with one miss equals a driver-side count") {
+    import spark.implicits._
+    import graft.schema.{GoldTriple, Span, Triple}
+    val t1 = Triple("u1", "Size", "mass", "rel", "Val", "3 cm")
+    val t2 = Triple("u1", "Size", "mass", "rel2", "Val", "4 cm") // u1's one miss
+    val t3 = Triple("u2", "Loc", "a", "rel", "Val", "b")
+    val t4 = Triple(null, "Size", "x", "rel", "Val", "y")        // null url: a miss
+    val t5 = Triple("u5", "Loc", "c", "rel", "Val", "d")         // not a listed doc
+    def gold(t: Triple) = GoldTriple(t.url, t.subjectType, t.subject, t.relation,
+      t.objectType, t.obj, Span(0, 1), Span(2, 3))
+    val predRows = Seq(t1, t1, t2, t3, t4, t5)
+    val goldRows = Seq(t1, t3, t4, t5, t5)
+    // u3 has no prediction; the null url is listed as a doc too
+    val docs = Seq("u1", "u2", "u3", "u3", null)
+
+    // driver side (cal_triple_res): the distinct urls of the predicted
+    // triples missing from gold, a key holding a null matching nothing
+    // (SQL equality) — the null url counts once on each side
+    val gSet = goldRows.toSet
+    def keyed(t: Triple) = t.productIterator.forall(_ != null)
+    val missed = predRows.filterNot(t => keyed(t) && gSet.contains(t)).map(_.url).distinct
+    val total = docs.distinct.size
+    assert((missed.toSet, total) === ((Set("u1", null), 4)), "fixture shape")
+
+    val got = Metrics.docExactPrecision(spark.createDataset(predRows),
+      spark.createDataset(goldRows.map(gold)), docs.toDF("url"))
+    assert(got === (total - missed.size).toDouble / total)
+  }
 }

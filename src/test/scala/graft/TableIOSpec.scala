@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.TableIO
 import graft.pipeline.{Extract, Pipeline}
@@ -252,5 +253,52 @@ class TableIOSpec extends SparkSpec {
     assert(canon.metrics("link_triples_in") === run.metrics("extract_triples_out"))
     assert(canon.metrics("link_canonical_out") ===
       TableIO.readStage(spark, Pipeline.canonicalDir(cfg)).count())
+  }
+
+  test("readStage of a manifest with the written schema runs no job while its frame is built") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = tmpDir() + "/schema"
+    val df = (0 until 300).map(i => (s"url-$i", i.toLong, Seq(s"a$i", s"b$i"), (i % 7, s"n$i")))
+      .toDF("url", "v", "tags", "pair")
+    TableIO.writeStage(df, dir, "s1", "url", 8)
+    assert(StructType.fromDDL(TableIO.readSnapshot(spark, dir).get.schema) ===
+      StructType.fromDDL(df.schema.toDDL))
+
+    val building = new java.util.concurrent.atomic.AtomicInteger()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "build" => building.incrementAndGet()
+          case "end" => closed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val read = try {
+      sc.setJobGroup("build", null)
+      val r = TableIO.readStage(spark, dir)
+      sc.setJobGroup("end", null)
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reported")
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(building.get === 0, s"${building.get} jobs ran while the frame was built")
+
+    // the inferred read's columns and rows; a manifest without the field
+    // (written before it existed) keeps inferring
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val inferred = spark.read.parquet(dir)
+    assert(read.schema === inferred.schema)
+    assert(rows(read) === rows(inferred) && rows(read).size === 300)
+    val snap = TableIO.readSnapshot(spark, dir).get
+    TableIO.writeSnapshot(spark, dir, snap.copy(schema = ""))
+    assert(rows(TableIO.readStage(spark, dir)) === rows(inferred))
   }
 }

@@ -487,6 +487,54 @@ class StreamLinkSpec extends SparkSpec {
     // exact job counts (labels add none): a count that moves means the plan
     // moved. The emptiness test reads the input checkpoint's observed count
     // rather than running a job of its own
-    assert((first.size, second.size) === ((35, 41)))
+    def perPhase(call: Seq[(String, String)]) =
+      call.groupBy(_._2).map { case (l, js) => s"${l.split(": ").last}=${js.size}" }.toSeq.sorted
+    assert((first.size, second.size) === ((18, 20)),
+      s"batch 0: ${perPhase(first).mkString(", ")}; batch 1: ${perPhase(second).mkString(", ")}")
+  }
+
+  test("both sides of the broadcast rule link alike: two batches and a compaction") {
+    import spark.implicits._
+    val gold = graft.synth.Corpus.gold(spark, 60, seed = 7).toDF()
+      .select("url", "subjectType", "subject", "relation", "objectType", "obj")
+    val batches = Seq(
+      LinkCorpus.triples(spark, 0, 150, 1).unionByName(LinkCorpus.triples(spark, 0, 150, 2))
+        .unionByName(gold.filter(pmod(xxhash64(col("url")), lit(2)) === 0)),
+      LinkCorpus.triples(spark, 0, 150, 0)
+        .unionByName(gold.filter(pmod(xxhash64(col("url")), lit(2)) === 1)))
+      .map(_.localCheckpoint())
+    def link(root: String): Unit = {
+      batches.zipWithIndex.foreach { case (df, bid) =>
+        StreamLink.processBatch(df, s"$root/state", bid.toLong)
+      }
+      graft.link.Compaction.compact(spark, s"$root/state", s"$root/compacted").count()
+    }
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val (sized, off) = (Files.createTempDirectory("graft-streamlink-bcast").toString,
+      Files.createTempDirectory("graft-streamlink-nobcast").toString)
+    link(sized)
+    withConf(threshold, "-1")(link(off))
+
+    // the rule itself: the batch's resolution is hinted at the default
+    // threshold and left to the planner at -1
+    val res = Seq(("s", 1L, "s")).toDF("surface", "canonical_id", "canonical_surface")
+    def hinted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.exists {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h.hints.strategy.nonEmpty
+      case _ => false
+    }
+    assert(hinted(Linker.broadcastBySize(res, 1)))
+    assert(!withConf(threshold, "-1")(hinted(Linker.broadcastBySize(res, 1))))
+
+    // every state table, row for row (batch and bucket dirs included), and
+    // the compacted canonical triples
+    val tables = Seq("surfaces", "bands", "bridges", "triples")
+    for (dir <- Seq("state", "compacted"); table <- tables) {
+      val want = rows(spark.read.parquet(s"$sized/$dir/$table"))
+      assert(rows(spark.read.parquet(s"$off/$dir/$table")) === want, s"$dir/$table")
+      assert(table == "bridges" && dir == "compacted" || want.nonEmpty, s"$dir/$table is empty")
+    }
+    assert(StreamLink.readBridges(spark, s"$sized/state").count() > 0, "the fixture must bridge")
+    assert(rows(StreamLink.readCanonicalTriples(spark, s"$off/compacted")) ===
+      rows(StreamLink.readCanonicalTriples(spark, s"$sized/compacted")))
   }
 }
