@@ -80,6 +80,7 @@ object Compaction {
       val meta = StreamLink.readMeta(spark, stateDir).getOrElse(
         throw new IllegalStateException(
           s"$stateDir has no _meta.json — not a StreamLink state dir"))
+      StreamLink.requireShingleN(stateDir, meta)
       val held = StreamLink.stateArtifact(spark, outDir)
       require(held.isEmpty,
         s"compaction target $outDir already holds ${held.getOrElse("")} — writing " +

@@ -1,16 +1,17 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.TextNorm
-import graft.ops.{BucketPairs, Hashing}
+import graft.ops.{BucketPairs, Hashing, Observed}
 import graft.schema.{CanonicalTriple, Triple}
 
 /** Entity linking + canonicalization (J8, SURVEY.md §2.4): resolve mention
   * surfaces to canonical ids via minhash/LSH blocking over normalized
-  * surfaces, candidate-edge verification, and connected components — then
+  * surfaces, candidate-pair verification, and connected components — then
   * materialize deduplicated canonical triples.
   *
   * This object owns the linking rules; the incremental linker
@@ -19,7 +20,7 @@ import graft.schema.{CanonicalTriple, Triple}
   *  - surface key: width-normalized surface (processSent) and its 64-bit
   *    hash as id — trivial variants collapse BEFORE hashing, so LSH pairing
   *    only carries genuinely distinct surfaces ([[surfaces]]);
-  *  - band keys and the band fan-out, `bands` rows per surface — shuffle
+  *  - band keys and the band fan-out, `Bands` rows per surface — shuffle
   *    O(surfaces × bands) ([[bandKeysOf]], [[bandRows]]);
   *  - pair verification: true Jaccard of char shingles ([[jaccardOk]]);
   *  - canonical id = min member id of a connected component, canonical
@@ -27,6 +28,13 @@ import graft.schema.{CanonicalTriple, Triple}
   *    partitioning ([[canonicalize]]);
   *  - triple resolution and support = distinct urls ([[resolveTriples]],
   *    [[support]]).
+  *
+  * ONE linking core, [[link]], runs those rules as one plan — band, pair,
+  * verify once, canonicalize, adopt — for two callers: `StreamLink` links
+  * a micro-batch's new surfaces against the bucket-pruned band rows of the
+  * published state, and the batch linker ([[canonicalTriples]],
+  * [[resolution]], [[candidateEdges]]) links every surface against no
+  * state at all.
   */
 object Linker {
 
@@ -46,6 +54,19 @@ object Linker {
 
   final case class SurfaceKey(surface: String, norm: String, id: Long)
 
+  /** Band rows of published surfaces — one per band key `bucket` of each:
+    * the state's band table, and the existing side [[link]] pairs new
+    * surfaces against. */
+  private[graft] val BandSchema = StructType(Seq(
+    StructField("bucket", LongType), StructField("id", LongType),
+    StructField("norm", StringType), StructField("canonical_id", LongType),
+    StructField("canonical_surface", StringType)))
+
+  /** An empty frame the optimizer knows is empty: joins and unions with it
+    * fold away at planning time instead of running a job. */
+  private[graft] def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
   /** Distinct mention surfaces with normalized form and stable 64-bit id. */
   def surfaces(triples: Dataset[Triple]): Dataset[SurfaceKey] = {
     val spark = triples.sparkSession
@@ -57,90 +78,134 @@ object Linker {
       }
   }
 
-  /** LSH band keys of a normalized surface: `bands` keys, each a splitmix-
-    * finalized fold over its k/bands minhash lanes. */
-  def bandKeysOf(norm: String, k: Int = MinhashLanes, bands: Int = Bands,
-      shingleN: Int = ShingleN): Seq[Long] = {
-    val mh = Hashing.minhash(Hashing.charShingles(norm, shingleN), k)
-    val rows = k / bands
-    (0 until bands).map { b =>
+  /** LSH band keys of a normalized surface: `Bands` keys, each a splitmix-
+    * finalized fold over its MinhashLanes/Bands minhash lanes. */
+  def bandKeysOf(norm: String): Seq[Long] = {
+    val mh = Hashing.minhash(Hashing.charShingles(norm, ShingleN), MinhashLanes)
+    val rows = MinhashLanes / Bands
+    (0 until Bands).map { b =>
       Hashing.splitmix64(
         (b * rows until (b + 1) * rows).foldLeft(b.toLong)((acc, j) => acc * 31 + mh(j)))
     }
   }
 
   /** The band keys of the normalized surface `norm`, as an array column of
-    * `bands` longs ([[bandKeysOf]]). */
-  private[graft] def bandKeys(norm: Column, shingleN: Int = ShingleN,
-      k: Int = MinhashLanes, bands: Int = Bands): Column =
-    udf((n: String) => bandKeysOf(n, k, bands, shingleN)).apply(norm)
+    * `Bands` longs ([[bandKeysOf]]). */
+  private def bandKeys(norm: Column): Column = udf(bandKeysOf _).apply(norm)
 
   /** The band fan-out of `df`: one row per band key of its `norm` column,
     * `bucket` first, then every column of `df`. */
-  private[graft] def bandRows(df: DataFrame, shingleN: Int = ShingleN,
-      k: Int = MinhashLanes, bands: Int = Bands): DataFrame =
-    df.select(explode(bandKeys(col("norm"), shingleN, k, bands)).as("bucket") +:
-      df.columns.toSeq.map(col): _*)
+  private[graft] def bandRows(df: DataFrame): DataFrame =
+    df.select(explode(bandKeys(col("norm"))).as("bucket") +: df.columns.toSeq.map(col): _*)
 
   /** Whether two normalized surfaces are the same entity: true Jaccard of
     * their char shingles at or above `threshold`. */
-  private[graft] def jaccardOk(na: String, nb: String, shingleN: Int = ShingleN,
-      threshold: Double = Threshold): Boolean =
-    Hashing.jaccard(Hashing.charShingles(na, shingleN),
-      Hashing.charShingles(nb, shingleN)) >= threshold
+  private[graft] def jaccardOk(na: String, nb: String, threshold: Double = Threshold): Boolean =
+    Hashing.jaccard(Hashing.charShingles(na, ShingleN),
+      Hashing.charShingles(nb, ShingleN)) >= threshold
 
-  /** Candidate same-entity edges via minhash/LSH over char 2-gram shingles
-    * of the normalized surface, verified by true Jaccard >= threshold.
+  /** Every candidate pair of the `fresh` surfaces among themselves and
+    * against the `existing` band rows (see [[link]]), verified ONCE, into
+    * one checkpoint: `nid` the new side, `oid` the other, `other_new`
+    * whether it is new too, and for an existing other its `ex_cid` /
+    * `ex_rep`. The pair rule is [[graft.ops.BucketPairs]]' incremental
+    * mode: every pair anchors on a new surface, and a band bucket of more
+    * than `bucketCap` members pairs by SORTED NEIGHBORHOOD over the norm,
+    * each member with its next `neighborWindow` neighbors — near-identical
+    * surfaces still meet and one templated surface family cannot make the
+    * linker quadratic. A pair met in several bands is kept once per band:
+    * ConnectedComponents canonicalizes its edges and the adoption takes a
+    * min and a set, so no shuffle dedups them. */
+  private def verifiedPairs(fresh: DataFrame, existing: DataFrame, threshold: Double,
+      bucketCap: Int, neighborWindow: Int): DataFrame = {
+    // persisted: the hot-bucket size probe and the pairing both read it; the
+    // probe's size aggregation reads every partition, so it materializes the
+    // cache before the pairing reads it
+    val tagged = fresh
+      .select(explode(col("keys")).as("bucket"), col("id"), col("norm"), lit(true).as("is_new"),
+        lit(null).cast("long").as("cid"), lit(null).cast("string").as("rep"))
+      .unionByName(existing.select(col("bucket"), col("id"), col("norm"),
+        lit(false).as("is_new"), col("canonical_id").as("cid"),
+        col("canonical_surface").as("rep")))
+      .persist()
+    // oriented new side first
+    val aNew = col("is_new_a")
+    def pick(n: String, e: String) = when(aNew, col(n)).otherwise(col(e))
+    val verify = udf((na: String, nb: String) => jaccardOk(na, nb, threshold))
+    val verified = BucketPairs(tagged, Seq("bucket"), bucketCap, neighborWindow,
+        _.withColumn("sort", col("norm")), newCol = Some("is_new"))
+      .filter(verify(col("norm_a"), col("norm_b")))
+      .select(pick("id_a", "id_b").as("nid"), pick("id_b", "id_a").as("oid"),
+        (aNew && col("is_new_b")).as("other_new"),
+        pick("cid_b", "cid_a").as("ex_cid"), pick("rep_b", "rep_a").as("ex_rep"))
+      .localCheckpoint()
+    tagged.unpersist()
+    verified
+  }
+
+  /** The linking core (object doc): the `fresh` surfaces ((surface, norm,
+    * id) with their band keys as `keys`) linked among themselves and
+    * against the `existing` band rows of published surfaces
+    * ([[BandSchema]]; the batch linker passes an [[emptyFrame]]).
+    * Candidate pairs are verified once ([[verifiedPairs]]); the fresh
+    * surfaces form components over their verified edges among themselves
+    * ([[canonicalize]], the batch rule), and each verified attachment to an
+    * existing surface rides along as a surface-less row of its fresh
+    * surface, so it lands in that surface's component.
     *
-    * Hot-key handling (north_rule): pairs come from
-    * [[graft.ops.BucketPairs]] — all pairs inside buckets of at most
-    * `bucketCap` members; larger buckets are not dropped but switch to
-    * SORTED-NEIGHBORHOOD pairing ordered by normalized surface, each member
-    * pairing only with its next `neighborWindow` neighbors — near-identical
-    * surfaces sort adjacently, so recall stays high while the pair count is
-    * bounded to O(n·W).
-    */
-  def candidateEdges(surf: Dataset[SurfaceKey], k: Int = MinhashLanes,
-      bands: Int = Bands, shingleN: Int = ShingleN, threshold: Double = Threshold,
-      bucketCap: Int = BucketCap, neighborWindow: Int = NeighborWindow): DataFrame = {
-    // standalone contract: checkpoint materializes the edges so the caches
-    // can be released before returning the (otherwise lazy) frame
-    val (edges, release) = candidateEdgesLazy(surf, k, bands, shingleN, threshold,
+    * Conflict rule: a component attaching to existing canonical ids ADOPTS
+    * the minimum of them and its representative; the others are its
+    * `bridged` ids, carried by the component's row whose surface is its
+    * batch-rule representative (one per component, fresh surfaces being
+    * distinct), never rewritten. Both come from aggregates over the
+    * component window canonicalize already shuffled by: the adopted
+    * minimum and the component's distinct cid set (bounded by the number of
+    * existing components one fresh component bridges).
+    *
+    * Returns the assignment as a checkpoint — (surface, norm, id,
+    * canonical_id, canonical_surface, bridged), one row per fresh surface —
+    * and its row count, observed as the checkpoint runs. `phase` is called
+    * with "components" and "assign" as those steps begin, so a caller can
+    * label their jobs. */
+  private[graft] def link(fresh: DataFrame, existing: DataFrame,
+      phase: String => Unit): (DataFrame, Long) = {
+    val verified = verifiedPairs(fresh, existing, Threshold, BucketCap, NeighborWindow)
+    phase("components")
+    val attachments = verified.filter(!col("other_new"))
+      .select(col("nid").as("id"), col("ex_cid"), col("ex_rep"))
+    val comps = canonicalize(fresh.select("surface", "norm", "id")
+        .unionByName(attachments, allowMissingColumns = true),
+      verified.filter(col("other_new")).select(col("nid").as("src"), col("oid").as("dst")), "id")
+    phase("assign")
+    val component = Window.partitionBy("component")
+    val kept = col("adopt.c")
+    val (assigned, seen) = Observed.counted(comps
+      .withColumn("adopt", min(when(col("ex_cid").isNotNull,
+        struct(col("ex_cid").as("c"), col("ex_rep").as("r")))).over(component))
+      .withColumn("cids", collect_set(col("ex_cid")).over(component))
+      .filter(col("surface").isNotNull)
+      .select(col("surface"), col("norm"), col("id"),
+        coalesce(kept, col("canonical_id")).as("canonical_id"),
+        coalesce(col("adopt.r"), col("canonical_surface")).as("canonical_surface"),
+        when(col("surface") === col("canonical_surface"),
+          filter(col("cids"), _ =!= kept)).as("bridged")))
+    val out = assigned.localCheckpoint()
+    (out, Observed.observedCount(seen))
+  }
+
+  /** `surf` with its band keys as `keys`: the fresh side of [[link]]. */
+  private[graft] def keyed(surf: Dataset[SurfaceKey]): DataFrame =
+    surf.toDF().withColumn("keys", bandKeys(col("norm")))
+
+  /** Candidate same-entity edges (src, dst): the distinct verified pairs
+    * of [[link]]'s first step over `surf` against no state, at `threshold`
+    * and with the hot-bucket guard at `bucketCap` / `neighborWindow` (see
+    * [[verifiedPairs]]), over the checkpoint that step writes. */
+  def candidateEdges(surf: Dataset[SurfaceKey], threshold: Double = Threshold,
+      bucketCap: Int = BucketCap, neighborWindow: Int = NeighborWindow): DataFrame =
+    verifiedPairs(keyed(surf), emptyFrame(surf.sparkSession, BandSchema), threshold,
       bucketCap, neighborWindow)
-    val out = edges.localCheckpoint()
-    release()
-    out
-  }
-
-  /** [[candidateEdges]] without the final materialization: the caller owns
-    * calling `release` AFTER an action has consumed `edges` — the shape
-    * [[resolution]] uses so ConnectedComponents' own checkpoint is the ONLY
-    * materialization of the edge set (a second caller-side checkpoint would
-    * store it twice). */
-  private def candidateEdgesLazy(surf: Dataset[SurfaceKey], k: Int, bands: Int,
-      shingleN: Int, threshold: Double, bucketCap: Int,
-      neighborWindow: Int): (DataFrame, () => Unit) = {
-    val spark = surf.sparkSession
-    import spark.implicits._
-    require(bands >= 1 && k % bands == 0,
-      s"minhash lanes k=$k must be a positive multiple of bands=$bands " +
-        "(otherwise band keys degenerate or lanes are silently ignored)")
-    // persisted: the bucket-size probe and the pairing both read the
-    // fan-out, which would otherwise re-shingle + re-minhash every surface
-    // per consumer (the same fix as the Dedup LSH signature tables)
-    val banded = bandRows(surf.toDF().select("id", "norm"), shingleN, k, bands).persist()
-
-    // hot buckets rank by normalized surface
-    val edges = BucketPairs(banded, Seq("bucket"), bucketCap, neighborWindow,
-        _.withColumn("sort", col("norm")))
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("norm_a"), col("norm_b"))
-      .distinct()
-      .as[(Long, Long, String, String)]
-      .flatMap { case (src, dst, na, nb) =>
-        if (jaccardOk(na, nb, shingleN, threshold)) Some((src, dst)) else None
-      }.toDF("src", "dst")
-    (edges, () => { banded.unpersist(): Unit })
-  }
+      .select(col("nid").as("src"), col("oid").as("dst")).distinct()
 
   /** Surfaces grouped into the connected components of `edges` over their
     * `key` column (a key on no edge is its own component), each component
@@ -168,17 +233,14 @@ object Linker {
         .getField("s"))
   }
 
-  /** surface → (canonical id, canonical surface), by [[canonicalize]] over
-    * the verified candidate edges. */
-  def resolution(surf: Dataset[SurfaceKey]): DataFrame = {
-    // lazy edges: ConnectedComponents canonicalizes + checkpoints them as
-    // its first step — the single materialization of the verify plan
-    val (edges, release) = candidateEdgesLazy(surf, MinhashLanes, Bands, ShingleN,
-      Threshold, BucketCap, NeighborWindow)
-    val res = canonicalize(surf.toDF(), edges, "id")
-    release()
-    res.select("surface", "canonical_id", "canonical_surface")
+  /** surface → (canonical id, canonical surface): [[link]] over `surf`
+    * against no state, and its row count. */
+  private def resolved(surf: Dataset[SurfaceKey]): (DataFrame, Long) = {
+    val (assigned, rows) = link(keyed(surf), emptyFrame(surf.sparkSession, BandSchema), _ => ())
+    (assigned.select("surface", "canonical_id", "canonical_surface"), rows)
   }
+
+  def resolution(surf: Dataset[SurfaceKey]): DataFrame = resolved(surf)._1
 
   /** `df` marked for broadcast when its `rows` rows fit Spark's own
     * threshold: rows × the schema's `defaultSize` ≤
@@ -212,11 +274,14 @@ object Linker {
         "objectId", "obj", "objectType")
       .agg(countDistinct("url").as("urls"))
 
-  /** Deduplicated canonical triples with support counts. */
+  /** Deduplicated canonical triples with support counts. Each triple
+    * resolves through the resolution whose rows its checkpoint counted, by
+    * Spark's broadcast rule ([[broadcastBySize]]), so the join plan does
+    * not depend on which stage finishes first. */
   def canonicalTriples(triples: Dataset[Triple]): Dataset[CanonicalTriple] = {
     val spark = triples.sparkSession
     import spark.implicits._
-    support(resolveTriples(triples.toDF(), resolution(surfaces(triples))))
-      .as[CanonicalTriple]
+    val (res, rows) = resolved(surfaces(triples))
+    support(resolveTriples(triples.toDF(), broadcastBySize(res, rows))).as[CanonicalTriple]
   }
 }

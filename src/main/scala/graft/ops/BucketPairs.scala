@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * Input: one row per (bucket, member) — the bucket columns, a LONG `id`, and
   * any payload columns the caller needs on both sides of a pair. Output:
   * `id_a, id_b` plus every payload column `c` as `c_a`/`c_b`, one row per
-  * candidate pair per bucket that emits it (callers apply their own pair
-  * rule and `distinct()` — a pair can meet in several bands). Members with
-  * equal ids never pair with each other on either path.
+  * candidate pair per bucket that emits it: a pair can meet in several
+  * bands, so a caller that needs each pair once `distinct()`s it, and one
+  * whose consumer ignores repeats (the linking core, whose edges go to
+  * ConnectedComponents) does not. Members with equal ids never pair with
+  * each other on either path.
   *
   * Incremental mode (`newCol`, the streaming linker): a boolean column marks
   * the batch's NEW members; only pairs with at least one new member are

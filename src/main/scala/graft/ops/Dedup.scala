@@ -292,6 +292,7 @@ object Dedup {
           concat_ws(",", col("sig").cast("array<string>")).as("sort")), "id"))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .distinct())
+    // persisted: three readers in CC's first job, as in embeddingCosinePairsLsh
     val cand = candSeen.persist()
 
     // verify candidates with true jaccard (re-shingle both sides); restrict
@@ -555,7 +556,12 @@ object Dedup {
     // signature's bit string in band order (the Hamming-local order the
     // fallback needs), with no per-row string materialization — ~3× fewer
     // bytes through the rank exchange than a rebuilt binary string.
-    // Persisted: candIds' union reads cand twice and the verify join once
+    // Persisted: candIds' union reads cand twice and the verify join once,
+    // all in the final checkpoint's job. Their tasks may ask for a block of
+    // cand at once; BlockManager locks a block before computing it, so one
+    // task computes it and the others wait and read it (Spark logs `Block
+    // rdd_… already exists`): nothing is computed twice, and an eager action
+    // would only add a job
     val (candSeen, candObs) = Observed.counted(
       BucketPairs(banded, Seq("band", "key"), bucketCap, neighborWindow,
           _.join(sigs.select(col("id"), col("keys").as("sort")), "id"))

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.link.Linker
-import graft.ops.{BucketPairs, Observed}
+import graft.ops.Observed
 import graft.schema.Triple
 
 /** Incremental entity linking: [[Linker]]'s rules (surface keys, band
@@ -32,12 +31,13 @@ import graft.schema.Triple
   * checkpoint, no job of its own); ONE left-outer join of those surfaces
   * against the surface state, whose unmatched rows are the new surfaces
   * and whose matched rows are the published part of the batch's
-  * resolution; every candidate pair verified once; and the assignment,
-  * whose one component window carries the adoption and the bridges. A
-  * join whose small side is bounded by the batch (the new band keys, the
-  * resolution) is broadcast when its observed rows fit Spark's own size
-  * rule ([[Linker.broadcastBySize]]), decided before any shuffle is
-  * planned, so the plan does not depend on which stage finishes first.
+  * resolution; then [[Linker.link]], the linking core the batch linker
+  * runs against no state: every candidate pair verified once, and the
+  * assignment, whose one component window carries the adoption and the
+  * bridges. A join whose small side is bounded by the batch (the new band
+  * keys, the resolution) is broadcast when its observed rows fit Spark's
+  * own size rule ([[Linker.broadcastBySize]]), decided before any shuffle
+  * is planned, so the plan does not depend on which stage finishes first.
   *
   * **Bucket levels.** Each batch writes its bucketed tables at the level L
   * its own rows fill: the largest power of two L ≤ N with
@@ -74,8 +74,9 @@ import graft.schema.Triple
   * The bucket count N (a power of two), the shingle width and the bucket
   * layout are pinned in `_meta.json` on the first batch and ADOPTED by every
   * later one (the nStateBuckets param is ignored once pinned; a shingleN
-  * mismatch fails loudly) — a silently changed N would prune reads against
-  * partitions written under the old N and silently lose candidates. A dir
+  * mismatch fails loudly, here and in compaction) — a silently changed N
+  * would prune reads against partitions written under the old N and
+  * silently lose candidates. A dir
   * written by the earlier flat layout (bucket t in dir t, no layout field)
   * is refused for the same reason; [[graft.link.Compaction]] reads it whole
   * and writes the level layout, which migrates it.
@@ -86,10 +87,6 @@ object StreamLink {
     StructField("surface", StringType), StructField("norm", StringType),
     StructField("id", LongType), StructField("canonical_id", LongType),
     StructField("canonical_surface", StringType)))
-  private val bandSchema = StructType(Seq(
-    StructField("bucket", LongType), StructField("id", LongType),
-    StructField("norm", StringType), StructField("canonical_id", LongType),
-    StructField("canonical_surface", StringType)))
   private val bridgeSchema = StructType(Seq(
     StructField("kept_id", LongType), StructField("bridged_id", LongType)))
   private val provenanceSchema = StructType(Seq(
@@ -97,11 +94,6 @@ object StreamLink {
     StructField("subjectType", StringType), StructField("relation", StringType),
     StructField("objectId", LongType), StructField("obj", StringType),
     StructField("objectType", StringType), StructField("url", StringType)))
-
-  /** An empty frame the optimizer knows is empty: joins against it fold
-    * away at planning time instead of running a job. */
-  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** Pinned per-state-dir parameters (see class doc). `layout` is
     * [[LevelLayout]] for every dir this code writes; [[FlatLayout]] marks a
@@ -154,6 +146,14 @@ object StreamLink {
       .find(t => hfs.exists(new org.apache.hadoop.fs.Path(root, t)))
   }
 
+  /** Refuse a state dir whose pinned shingle width is not [[Linker.ShingleN]]:
+    * its band table keys every surface differently. */
+  private[graft] def requireShingleN(stateDir: String, meta: StateMeta): Unit =
+    require(meta.shingleN == Linker.ShingleN,
+      s"state dir $stateDir was built with shingleN=${meta.shingleN}; " +
+        s"linking it with shingleN=${Linker.ShingleN} would band the same surface " +
+        "under different keys and silently miss candidates")
+
   /** Read `_meta.json`, or write it from the params on first contact. The
     * write is create-overwrite with constant content, so a replayed batch 0
     * re-writing it is a no-op in effect. */
@@ -161,10 +161,7 @@ object StreamLink {
       nStateBuckets: Int): StateMeta =
     readMeta(spark, stateDir) match {
       case Some(meta) =>
-        require(meta.shingleN == Linker.ShingleN,
-          s"state dir $stateDir was built with shingleN=${meta.shingleN}; " +
-            s"linking it with shingleN=${Linker.ShingleN} would band the same surface " +
-            "under different keys and silently miss candidates")
+        requireShingleN(stateDir, meta)
         require(meta.layout == LevelLayout,
           s"state dir $stateDir was written by the flat bucket layout (bucket t in " +
             "dir t); pruned reads under the bucket-level numbering would miss its " +
@@ -213,7 +210,7 @@ object StreamLink {
       touched: Seq[Long]): DataFrame = {
     val path = s"$stateDir/$table"
     val (hfs, p) = fs(spark, path)
-    if (!hfs.exists(p)) emptyFrame(spark, schema)
+    if (!hfs.exists(p)) Linker.emptyFrame(spark, schema)
     else {
       val n = readMeta(spark, stateDir).fold(1)(_.nStateBuckets)
       spark.read.schema(stored(schema, Some(bucket))).parquet(path)
@@ -251,7 +248,7 @@ object StreamLink {
     * PlanDump can publish the partition-filter evidence. */
   private[graft] def bandState(spark: SparkSession, stateDir: String,
       batchId: Long, touched: Seq[Long]): DataFrame =
-    readState(spark, stateDir, "bands", bandSchema, "pbucket", "bucket", batchId, touched)
+    readState(spark, stateDir, "bands", Linker.BandSchema, "pbucket", "bucket", batchId, touched)
 
   private[graft] def surfaceState(spark: SparkSession, stateDir: String,
       batchId: Long, touched: Seq[Long]): DataFrame =
@@ -289,7 +286,7 @@ object StreamLink {
     // or state size. The band probe covers ALL batch surfaces, a superset
     // of the new surfaces' bands, so the pruned band read can only see MORE
     // state than the candidate join needs, never less
-    val keyed = Linker.surfaces(triples).toDF().withColumn("keys", Linker.bandKeys(col("norm")))
+    val keyed = Linker.keyed(Linker.surfaces(triples))
     val (surfRows, probe) = Observed(keyed, count(lit(1)).as("rows") +:
       collect_set(bucketOf(col("surface"), nB)).as("s") +:
         (0 until Linker.Bands).map(i =>
@@ -311,86 +308,20 @@ object StreamLink {
       count(col("canonical_id")).as("published"))
     val joined = joinedRows.localCheckpoint()
     val isNew = col("canonical_id").isNull
-    val newSurf = joined.filter(isNew).select("surface", "norm", "id")
-    val newBands = joined.filter(isNew)
-      .select(explode(col("keys")).as("bucket"), col("id"), col("norm"))
+    val fresh = joined.filter(isNew)
     val exBands = bandState(spark, stateDir, batchId, pBuckets)
 
-    // ---- candidate pairs under the hot-band guard ([[BucketPairs]]): the
-    // (bucket-pruned) state side is semi-joined to the batch's exact band
-    // values — candidates only — then band values whose combined new ∪
-    // candidate-existing membership exceeds [[Linker.BucketCap]] pair by
-    // bounded sorted neighborhood over the norm — one templated surface
-    // family in the state must not make every later micro-batch quadratic
-    val newRows = Observed.observedCount(probe) - Observed.observedCount(joinedObs, "published")
-    val exCand = exBands.join(
-      Linker.broadcastBySize(newBands.select("bucket"), Linker.Bands * newRows),
-      Seq("bucket"), "left_semi")
-    // persisted: the hot-bucket size probe and the pairing both read it; the
-    // probe's size aggregation reads every partition, so it materializes the
-    // cache before the pairing reads it
-    val tagged = newBands
-      .select(col("bucket"), col("id"), col("norm"), lit(true).as("is_new"),
-        lit(null).cast("long").as("cid"), lit(null).cast("string").as("rep"))
-      .unionByName(exCand.select(col("bucket"), col("id"), col("norm"),
-        lit(false).as("is_new"), col("canonical_id").as("cid"),
-        col("canonical_surface").as("rep")))
-      .persist()
-    // the pair rule (BucketPairs' incremental mode): every pair anchors on
-    // a NEW surface — existing–existing pairs are never emitted — and is
-    // oriented new side first here. A pair met in several bands is
-    // verified and kept once per band: both consumers below are
-    // insensitive to repeats (ConnectedComponents canonicalizes its edges,
-    // the adoption takes a min and a set), so no shuffle dedups them
-    val aNew = col("is_new_a")
-    def pick(n: String, e: String) = when(aNew, col(n)).otherwise(col(e))
-    val jaccardOk = udf((na: String, nb: String) => Linker.jaccardOk(na, nb))
-    // every candidate pair verified ONCE, into one checkpoint both the
-    // new–new edges and the new–existing attachments read
-    val verified = BucketPairs(tagged, Seq("bucket"), Linker.BucketCap, Linker.NeighborWindow,
-        _.withColumn("sort", col("norm")), newCol = Some("is_new"))
-      .filter(jaccardOk(col("norm_a"), col("norm_b")))
-      .select(pick("id_a", "id_b").as("nid"), pick("id_b", "id_a").as("oid"),
-        (aNew && col("is_new_b")).as("other_new"),
-        pick("cid_b", "cid_a").as("ex_cid"), pick("rep_b", "rep_a").as("ex_rep"))
-      .localCheckpoint()
-    tagged.unpersist()
-
-    // the new surfaces' own components (verified edges among them; their
-    // direction is irrelevant), canonicalized by the batch rule. The
-    // verified attachments ride along as surface-less rows of their new
-    // surface, so each lands in that surface's component
-    phase("components")
-    val attachments = verified.filter(!col("other_new"))
-      .select(col("nid").as("id"), col("ex_cid"), col("ex_rep"))
-    val fresh = Linker.canonicalize(newSurf.unionByName(attachments, allowMissingColumns = true),
-      verified.filter(col("other_new")).select(col("nid").as("src"), col("oid").as("dst")), "id")
-
-    // conflict rule: a component adopting ≥2 existing canonical ids takes
-    // the MINIMUM; the others are recorded as bridges, never rewritten.
-    // Both come from aggregates over the component window canonicalize
-    // already shuffled by: the adopted minimum and the component's distinct
-    // cid set (bounded by the number of existing components one
-    // batch-component bridges). The bridges ride the assignment checkpoint:
-    // the component's row whose surface is its batch-rule representative
-    // (one per component, batch surfaces being distinct) carries the cids
-    // it bridges to the kept one
-    phase("assign")
-    val component = Window.partitionBy("component")
-    val kept = col("adopt.c")
-    val (assignedRows, assignedObs) = Observed.counted(fresh
-      .withColumn("adopt", min(when(col("ex_cid").isNotNull,
-        struct(col("ex_cid").as("c"), col("ex_rep").as("r")))).over(component))
-      .withColumn("cids", collect_set(col("ex_cid")).over(component))
-      .filter(col("surface").isNotNull)
-      .select(col("surface"), col("norm"), col("id"),
-        coalesce(kept, col("canonical_id")).as("canonical_id"),
-        coalesce(col("adopt.r"), col("canonical_surface")).as("canonical_surface"),
-        when(col("surface") === col("canonical_surface"),
-          filter(col("cids"), _ =!= kept)).as("bridged")))
+    // the state side of the candidate join: the (bucket-pruned) band rows
+    // semi-joined to the batch's exact band values — candidates only — and
+    // linked with the new surfaces by [[Linker.link]], whose assignment is
     // consumed by three writes + the batch resolution; its observed row
     // count sets the bucket level of this batch's state files
-    val assigned = assignedRows.localCheckpoint()
+    val newRows = Observed.observedCount(probe) - Observed.observedCount(joinedObs, "published")
+    val exCand = exBands.join(
+      Linker.broadcastBySize(fresh.select(explode(col("keys")).as("bucket")),
+        Linker.Bands * newRows),
+      Seq("bucket"), "left_semi")
+    val (assigned, assignedCount) = Linker.link(fresh, exCand, phase)
     val bridges = assigned
       .select(col("canonical_id").as("kept_id"), explode(col("bridged")).as("bridged_id"))
 
@@ -405,7 +336,6 @@ object StreamLink {
     // [[Linker.support]] over the provenance instead
     val res = joined.filter(!isNew).select("surface", "canonical_id", "canonical_surface")
       .unionByName(assigned.select("surface", "canonical_id", "canonical_surface"))
-    val assignedCount = Observed.observedCount(assignedObs)
     val resRows = Observed.observedCount(joinedObs, "published") + assignedCount
     writeState(stateDir, batchId, assigned.drop("bridged"), assignedCount,
       bridges, Linker.resolveTriples(triples.toDF(), Linker.broadcastBySize(res, resRows)),
@@ -464,8 +394,8 @@ object StreamLink {
       () => overwrite(surfaces, "surfaces",
         Some(("sbucket", "surface", level(surfaceRows, surfSchema)))),
       () => overwrite(Linker.bandRows(
-          surfaces.select("id", "norm", "canonical_id", "canonical_surface"), meta.shingleN),
-        "bands", Some(("pbucket", "bucket", level(Linker.Bands * surfaceRows, bandSchema)))),
+          surfaces.select("id", "norm", "canonical_id", "canonical_surface")),
+        "bands", Some(("pbucket", "bucket", level(Linker.Bands * surfaceRows, Linker.BandSchema)))),
       () => overwrite(bridges, "bridges"),
       () => overwrite(triples.distinct(), "triples"))
   }
@@ -567,7 +497,7 @@ object StreamLink {
       label: String => String): Unit = {
     val snapshot = meta.copy(layout = LevelLayout)
     writeMeta(spark, outDir, snapshot)
-    writeState(outDir, -1, surfacesDf, surfaceRows, emptyFrame(spark, bridgeSchema),
+    writeState(outDir, -1, surfacesDf, surfaceRows, Linker.emptyFrame(spark, bridgeSchema),
       triplesDf, snapshot, label)
   }
 }

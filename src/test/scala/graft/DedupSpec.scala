@@ -413,6 +413,51 @@ class DedupSpec extends SparkSpec {
     assert(f === dd, "float-width payload changed the emitted pairs/cosines")
   }
 
+  test("embedding LSH verify: the shuffled join past broadcastVerifyBytes emits the broadcast's pairs") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledJoin}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val emb = WebDocs.embeddings(spark, 600, seed = 12).localCheckpoint()
+    // the pairs, and the plans of every query the call ran: the verify
+    // runs inside the operator's final checkpoint, so the returned frame's
+    // own plan does not hold it. A marker query closes the capture, as in
+    // jobsOf: the listener bus delivers in order
+    def run(broadcastVerifyBytes: Long): (Set[(Long, Long, Double)], Seq[SparkPlan]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val closed = new CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "verify_capture_end")) closed.countDown()
+          else plans.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val pairs = Dedup.embeddingCosinePairsLsh(emb, "vec_id", "embedding", threshold = 0.45,
+          broadcastVerifyBytes = broadcastVerifyBytes).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        spark.range(1).select(lit(1).as("verify_capture_end")).collect()
+        assert(closed.await(60, TimeUnit.SECONDS), "marker query never reported")
+        import scala.jdk.CollectionConverters._
+        (pairs, plans.asScala.toSeq)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    // the verify joins attach the vectors `va` / `vb` to the candidate pairs
+    def verify(plans: Seq[SparkPlan]) = plans.flatMap(p => Plans.collect(p) {
+      case j: BroadcastHashJoinExec if j.output.exists(a => a.name == "va" || a.name == "vb") =>
+        "broadcast"
+      case j: ShuffledJoin if j.output.exists(a => a.name == "va" || a.name == "vb") => "shuffled"
+    })
+    val (want, sized) = run(256L << 20)
+    assert(want.nonEmpty && verify(sized) === Seq("broadcast", "broadcast"))
+    // with Spark's own broadcast rule off as well, the unhinted joins shuffle
+    val (got, off) = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run(0L))
+    assert(verify(off) === Seq("shuffled", "shuffled"))
+    assert(got === want)
+  }
+
   test("adaptive LSH geometry: total candidate volume stays linear, recall design point holds") {
     for (n <- Seq(100L, 1000L, 5000L, 20000L, 50000L, 65000L, 200000L,
         500000L, 1000000L, 2000000L)) {

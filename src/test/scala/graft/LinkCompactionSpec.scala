@@ -331,4 +331,23 @@ class LinkCompactionSpec extends SparkSpec {
     // a fresh dir is accepted
     assert(Compaction.compact(spark, state, s"$root/fresh").count() > 0)
   }
+
+  test("compaction refuses a state dir pinned to another shingle width") {
+    import graft.synth.LinkCorpus
+    val root = Files.createTempDirectory("graft-compact-shingle").toString
+    val state = s"$root/state"; val out = s"$root/out"
+    StreamLink.processBatch(LinkCorpus.triples(spark, 0, 20, 1), state, batchId = 0)
+    // the checksum file of the _meta.json rewritten below
+    Files.delete(java.nio.file.Paths.get(state, "._meta.json.crc"))
+    Files.writeString(java.nio.file.Paths.get(state, "_meta.json"),
+      """{"nStateBuckets": 64, "shingleN": 3, "layout": 2}""")
+
+    // the message processBatch gives for the same dir
+    val byBatch = intercept[IllegalArgumentException](
+      StreamLink.processBatch(LinkCorpus.triples(spark, 20, 40, 1), state, batchId = 1))
+    val e = intercept[IllegalArgumentException](Compaction.compact(spark, state, out))
+    assert(e.getMessage.contains("shingleN=3") && e.getMessage === byBatch.getMessage,
+      e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(out)), "a refused compaction must write nothing")
+  }
 }

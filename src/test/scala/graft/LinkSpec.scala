@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.link.{ConnectedComponents, Linker}
-import graft.schema.Triple
+import graft.schema.{CanonicalTriple, Triple}
 import graft.synth.Lexicon
 
 /** Connected components vs union-find ground truth + entity linking. */
@@ -137,5 +137,33 @@ class LinkerSpec extends SparkSpec {
     val canon = Linker.canonicalTriples(triples).collect()
     assert(canon.length === 1)
     assert(canon.head.urls === 2)
+  }
+
+  test("canonical triples resolve through broadcast joins sized by the counted resolution") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledJoin}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import spark.implicits._
+    val triples = graft.synth.LinkCorpus.triples(spark, 0, 200, 0)
+      .unionByName(graft.synth.LinkCorpus.triples(spark, 0, 200, 1)).as[Triple]
+    object Plans extends AdaptiveSparkPlanHelper
+    // the final adaptive plan of the collected frame, stages included, and
+    // its rows
+    def run(): (SparkPlan, Map[CanonicalTriple, Int]) = {
+      val df = Linker.canonicalTriples(triples)
+      val rows = df.collect().toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+      (df.queryExecution.executedPlan, rows)
+    }
+    val resolvedSide = Set("subjectId", "objectId")
+    val (sized, sizedRows) = run()
+    val bhj = Plans.collect(sized) { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size === 2 && bhj.forall(_.buildSide == BuildRight), sized.toString)
+    assert(bhj.map(_.right.output.map(_.name).toSet.intersect(resolvedSide)).toSet ===
+      resolvedSide.map(Set(_)), "each join builds the resolution side")
+    val (off, offRows) = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    assert(Plans.collect(off) { case j: BroadcastHashJoinExec => j }.isEmpty, off.toString)
+    assert(Plans.collect(off) { case j: ShuffledJoin => j }.size === 2, off.toString)
+    assert(offRows === sizedRows && sizedRows.nonEmpty)
   }
 }

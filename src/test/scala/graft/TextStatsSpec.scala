@@ -57,6 +57,31 @@ class TextStatsSpec extends SparkSpec {
     assert(got.length === 8)
   }
 
+  test("tfidfTopK without the vocabulary broadcast returns the default's rows") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledJoin}
+    object Plans extends AdaptiveSparkPlanHelper
+    val docs = graft.synth.WebDocs.documents(spark, 300, seed = 5).localCheckpoint()
+    def run(broadcastVocab: Boolean) = {
+      val df = TextStats.tfidfTopK(docs, "doc_id", "text", k = 3, broadcastVocab = broadcastVocab)
+      val rows = df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+      // the joins on `term`: the vocabulary join (the corpus count is a
+      // key-less cross join)
+      val plan = df.queryExecution.executedPlan
+      def onTerm(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "term"))
+      (rows, Plans.collect(plan) { case j: BroadcastHashJoinExec if onTerm(j.leftKeys) => j },
+        Plans.collect(plan) { case j: ShuffledJoin if onTerm(j.leftKeys) => j })
+    }
+    val (want, bcast, _) = run(broadcastVocab = true)
+    assert(want.nonEmpty && bcast.size === 1, "the default broadcasts the vocabulary")
+    // with Spark's own broadcast rule off, the unhinted vocabulary join shuffles
+    val (got, noBcast, shuffled) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run(broadcastVocab = false))
+    assert(noBcast.isEmpty && shuffled.size === 1)
+    assert(got === want)
+  }
+
   test("DataFrame face is deterministic and shuffle-free per row") {
     import spark.implicits._
     val df = Seq(
