@@ -78,16 +78,10 @@ object Linker {
       }
   }
 
-  /** LSH band keys of a normalized surface: `Bands` keys, each a splitmix-
-    * finalized fold over its MinhashLanes/Bands minhash lanes. */
-  def bandKeysOf(norm: String): Seq[Long] = {
-    val mh = Hashing.minhash(Hashing.charShingles(norm, ShingleN), MinhashLanes)
-    val rows = MinhashLanes / Bands
-    (0 until Bands).map { b =>
-      Hashing.splitmix64(
-        (b * rows until (b + 1) * rows).foldLeft(b.toLong)((acc, j) => acc * 31 + mh(j)))
-    }
-  }
+  /** LSH band keys of a normalized surface: the `Bands`
+    * [[Hashing.minhashBandKeys]] of its `MinhashLanes`-lane minhash. */
+  def bandKeysOf(norm: String): Seq[Long] = Hashing.minhashBandKeys(
+    Hashing.minhash(Hashing.charShingles(norm, ShingleN), MinhashLanes), Bands).toSeq
 
   /** The band keys of the normalized surface `norm`, as an array column of
     * `Bands` longs ([[bandKeysOf]]). */

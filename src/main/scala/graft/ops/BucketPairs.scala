@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Candidate pairs from a banded fan-out — the ONE pairing primitive behind
@@ -14,14 +14,15 @@ import org.apache.spark.sql.functions._
   * candidate pair per bucket that emits it: a pair can meet in several
   * bands, so a caller that needs each pair once `distinct()`s it, and one
   * whose consumer ignores repeats (the linking core, whose edges go to
-  * ConnectedComponents) does not. Members with equal ids never pair with
-  * each other on either path.
+  * ConnectedComponents) does not. Both paths keep a pair by one rule
+  * ([[keep]]): members with equal ids never pair with each other.
   *
   * Incremental mode (`newCol`, the streaming linker): a boolean column marks
   * the batch's NEW members; only pairs with at least one new member are
   * emitted, so existing–existing pairs never leave the emitter. A new member
   * is a different record from an existing one even at an equal id (two
-  * surfaces of one norm), so in small buckets that pair is emitted too.
+  * surfaces of one norm), so that pair is emitted too, in small and hot
+  * buckets alike.
   *
   * Design (100 TB posture):
   *  - the fan-out is never re-shuffled to learn its own bucket sizes: one
@@ -96,7 +97,18 @@ private[graft] object BucketPairs {
               col("sort") +: payload.map(col)): _*), window)
         .select((col("src").as("id_a") +: col("dst").as("id_b") +:
           Seq("_a", "_b").flatMap(sfx => payload.map(c => col(c + sfx)))): _*)
-      small.unionByName(newCol.fold(hot)(c => hot.filter(col(c + "_a") || col(c + "_b"))))
+      small.unionByName(hot.filter(keep((f, ab) => col(s"${f}_$ab"), newCol)))
+    }
+  }
+
+  /** The one pair rule of both paths: `field(f, side)` is member field `f`
+    * of pair side "a" or "b". Ids differ, or in incremental mode: at least
+    * one side is new, and the sides differ in newness or in id. */
+  private def keep(field: (String, String) => Column, newCol: Option[String]): Column = {
+    val idsDiffer = field("id", "a") =!= field("id", "b")
+    newCol.fold(idsDiffer) { c =>
+      val (na, nb) = (field(c, "a"), field(c, "b"))
+      (na || nb) && (na =!= nb || idsDiffer)
     }
   }
 
@@ -110,17 +122,12 @@ private[graft] object BucketPairs {
       newCol: Option[String] = None): DataFrame = {
     val fields = carried(members, buckets)
     def side(m: String, sfx: String) = fields.map(f => col(s"$m.$f").as(f + sfx))
-    val idsDiffer = col("a.id") =!= col("b.id")
-    val rule = newCol.fold(idsDiffer) { c =>
-      val (na, nb) = (col(s"a.$c"), col(s"b.$c"))
-      (na || nb) && (na =!= nb || idsDiffer)
-    }
     // struct order is id first, so the sorted list is the id-sorted members
     members.groupBy(buckets.map(col): _*)
       .agg(sort_array(collect_list(struct(fields.map(col): _*))).as("ms"))
       .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
       .select(col("a"), explode(slice(col("ms"), col("i") + 2, size(col("ms")))).as("b"))
-      .filter(rule)
+      .filter(keep((f, ab) => col(s"$ab.$f"), newCol))
       .select(side("a", "_a") ++ side("b", "_b"): _*)
   }
 

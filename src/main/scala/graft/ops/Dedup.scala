@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +19,12 @@ import graft.ops.Observed.observedCount
   *  - duplicate CLUSTERS (not just pairs) are resolved with the same
   *    large-star/small-star connected-components used by entity linking, so
   *    keeper selection is transitive-closure-correct.
+  *
+  * Signatures are computed by the one definition each of them has:
+  * minhash band keys and simhash table keys in [[Hashing]], sign-bit keys
+  * and cosine in [[Similarity]] — the same keys and scores entity linking,
+  * streaming near-dup and the ANN operators use. Every cache an operator
+  * persists is released when it returns or throws ([[withCaches]]).
   *
   * Stats (`onStats`): every field of a near-dup operator's stats record is a
   * value the driver already holds (solved geometry, the hot-list collect,
@@ -50,14 +56,27 @@ object Dedup {
     1.0 - math.pow(1.0 - math.pow(p, bandBits), bands)
   }
 
-  /** Exact float→double upcast (IEEE lossless) — the ONE conversion the
-    * signature and verify loops share, so float-stored inputs run the same
-    * double-precision arithmetic paths bit-for-bit. */
+  /** Exact float→double upcast (IEEE lossless): float-stored inputs reach
+    * [[Similarity.signKeys]] and [[Similarity.cosine]] as the doubles a
+    * double-stored copy would give them. */
   private def upcast(v: Array[Float]): Array[Double] = {
     val d = new Array[Double](v.length)
     var i = 0
     while (i < v.length) { d(i) = v(i).toDouble; i += 1 }
     d
+  }
+
+  /** Persists datasets for one operator call: [[withCaches]] unpersists
+    * every dataset `apply` persisted, whether the call returns or throws. */
+  private final class Caches {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def apply[T](ds: Dataset[T]): Dataset[T] = { held += ds; ds.persist() }
+    def release(): Unit = held.foreach(_.unpersist())
+  }
+
+  private def withCaches[A](body: Caches => A): A = {
+    val caches = new Caches
+    try body(caches) finally caches.release()
   }
 
   /** Jensen dispersion inflation of RANDOM band collisions at finite
@@ -253,11 +272,10 @@ object Dedup {
       shingleN: Int = 5, k: Int = 16, bands: Int = 4,
       threshold: Double = 0.7, bucketCap: Int = 1000,
       neighborWindow: Int = 8,
-      onStats: Option[MinhashStats => Unit] = None): DataFrame = {
+      onStats: Option[MinhashStats => Unit] = None): DataFrame = withCaches { cache =>
     val spark = df.sparkSession
     import spark.implicits._
     require(k % bands == 0)
-    val rowsPerBand = k / bands
 
     // poison-pill guard: null id/text rows are excluded from clustering
     // (the final left join still emits every non-null-id doc, keeper = self)
@@ -265,25 +283,22 @@ object Dedup {
       df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
         .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
         .as[(Long, String)])
-    val docs = docsSeen.persist()
-    // minhash signature per doc — computed in one pass, no shuffle.
-    // Persisted: the bucket-size aggregation and the small/hot split joins
-    // all read the band fan-out, which would otherwise re-shingle +
-    // re-minhash every document per consumer; the signature row is k longs.
-    val sigs = docs.map { case (id, text) =>
-      val sh = Hashing.charShingles(text.toLowerCase, shingleN)
-      (id, Hashing.minhash(sh, k))
-    }.toDF("doc_id", "sig").persist()
+    val docs = cache(docsSeen)
+    // minhash signature and its band keys per doc — computed in one pass,
+    // no shuffle. Persisted: the bucket-size aggregation and the small/hot
+    // split joins all read the band fan-out, which would otherwise
+    // re-shingle + re-minhash every document per consumer; the row is
+    // k + bands longs.
+    val sigs = cache(docs.map { case (id, text) =>
+      val sig = Hashing.minhash(Hashing.charShingles(text.toLowerCase, shingleN), k)
+      (id, sig, Hashing.minhashBandKeys(sig, bands))
+    }.toDF("doc_id", "sig", "keys"))
 
-    // band keys (hash of each signature slice); the full-signature sort key
-    // for hot-bucket sorted-neighborhood is joined back from the persisted
-    // sigs for the (usually empty) oversized subset only — it would
-    // otherwise be the dominating column on every fan-out row through the
-    // size aggregation and pairing exchanges
-    val banded = sigs.select(col("doc_id"),
-        posexplode(array(
-          (0 until bands).map(b => xxhash64(concat(lit(s"band$b"),
-            slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")))): _*)))
+    // the full-signature sort key for hot-bucket sorted-neighborhood is
+    // joined back from the persisted sigs for the (usually empty) oversized
+    // subset only — it would otherwise be the dominating column on every
+    // fan-out row through the size aggregation and pairing exchanges
+    val banded = sigs.select(col("doc_id"), posexplode(col("keys")))
       .toDF("id", "band", "bucket")
 
     val split = BucketPairs.split(banded, Seq("band", "bucket"), bucketCap)
@@ -293,7 +308,7 @@ object Dedup {
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .distinct())
     // persisted: three readers in CC's first job, as in embeddingCosinePairsLsh
-    val cand = candSeen.persist()
+    val cand = cache(candSeen)
 
     // verify candidates with true jaccard (re-shingle both sides); restrict
     // the text table to candidate members first so the full corpus text is
@@ -315,13 +330,12 @@ object Dedup {
     // no checkpoint here: ConnectedComponents.run canonicalizes + checkpoints
     // its input as its FIRST step, so the verify plan (and the cand cache
     // under it) is evaluated exactly once inside it — a caller-side
-    // checkpoint would store the edges twice. Unpersist after: CC.run
-    // returns only once the edges are materialized.
+    // checkpoint would store the edges twice. The caches are released
+    // after: CC.run returns only once the edges are materialized.
     val (edges, edgesObs) = Observed.counted(verified)
     val comp = ConnectedComponents.run(edges)
     onStats.foreach(f => f(MinhashStats(observedCount(docsObs), split.bucketCount,
       split.hotBuckets, split.hotRows, observedCount(candObs), observedCount(edgesObs))))
-    cand.unpersist(); sigs.unpersist(); docs.unpersist()
     df.filter(col(idCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -331,10 +345,9 @@ object Dedup {
   /** Embedding-cosine near-dup pairs — exact O(n²) baseline for BOUNDED
     * inputs (callers must cap rows; [[embeddingNearDup]] size-switches to
     * [[embeddingCosinePairsLsh]] above its localThreshold). The smaller side
-    * is broadcast and the dot products run as tight primitive loops inside
-    * mapPartitions: higher-order-function cosine is interpreted per element
-    * and ~50× slower at 10^5+ pairs. Double-precision, ascending-index
-    * accumulation (matches the SQL oracle's summation order). */
+    * is broadcast and every pair is scored by [[Similarity.cosine]] inside
+    * mapPartitions (double precision, ascending-index accumulation — the
+    * SQL oracle's summation order). */
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val spark = df.sparkSession
@@ -344,33 +357,15 @@ object Dedup {
       .as[(Long, Array[Double])]
     val all = vecs.collect().sortBy(_._1)
     // mixed dimensions would silently mis-dot (or AIOOBE) — fail fast
-    all.headOption.map(_._2.length).foreach { d =>
-      all.find(_._2.length != d).foreach { case (id, v) =>
-        throw new IllegalArgumentException(
-          s"mixed embedding dimensions: id=$id has ${v.length}, expected $d")
-      }
-    }
-    val norms = all.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
+    all.headOption.foreach { case (_, v0) =>
+      all.foreach { case (id, v) => Similarity.requireDim(id, v.length, v0.length) }
     }
     val bcVecs = spark.sparkContext.broadcast(all)
-    val bcNorms = spark.sparkContext.broadcast(norms)
     vecs.mapPartitions { it =>
       val ref = bcVecs.value
-      val nrm = bcNorms.value
       it.flatMap { case (idA, va) =>
-        var sa = 0.0
-        var i = 0
-        while (i < va.length) { sa += va(i) * va(i); i += 1 }
-        val na = math.sqrt(sa)
-        ref.iterator.zipWithIndex.collect { case ((idB, vb), j) if idB > idA =>
-          var dot = 0.0
-          var k = 0
-          while (k < va.length) { dot += va(k) * vb(k); k += 1 }
-          val c = if (na == 0 || nrm(j) == 0) 0.0 else dot / (na * nrm(j))
-          (idA, idB, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        ref.iterator.collect { case (idB, vb) if idB > idA =>
+          (idA, idB, Similarity.cosine(va, vb))
         }.filter(_._3 >= threshold)
       }
     }.toDF("id_a", "id_b", "cosine")
@@ -441,7 +436,7 @@ object Dedup {
       bucketCap: Int = 2000, neighborWindow: Int = 8,
       maxBits: Int = 24, maxBands: Int = 256,
       broadcastVerifyBytes: Long = 256L << 20,
-      onStats: Option[LshStats => Unit] = None): DataFrame = {
+      onStats: Option[LshStats => Unit] = None): DataFrame = withCaches { cache =>
     val spark = df.sparkSession
     import spark.implicits._
 
@@ -459,10 +454,9 @@ object Dedup {
         org.apache.spark.sql.types.FloatType, _) => true
       case _ => false
     }
-    val vecs = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+    val vecs = cache(df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .select(col(idCol).cast("long"),
-        col(vecCol).cast(if (floatInput) "array<float>" else "array<double>"))
-      .persist()
+        col(vecCol).cast(if (floatInput) "array<float>" else "array<double>")))
     // dimension contract: the hyperplane matrix is sized once, so a row with
     // a DIFFERENT vector length must fail fast (same discipline as
     // bruteForceTopK's id-type check) — a lazily-sized matrix would AIOOBE
@@ -502,52 +496,30 @@ object Dedup {
             "together, or hash-shard the corpus and run per-shard.")
     }
     val totalBits = bandBits * nBands
-    // shared signature loop over exact double upcasts; one instance per
-    // partition (mapPartitions calls it once), so the hyperplane matrix is
-    // still built once per task. NO per-row sort-key string: the full
-    // signature bit string (2·totalBits bytes of java chars — 11.7 KB/row
-    // at the cap geometry, the row-dominating cost this path used to build
-    // and persist for EVERY vector) is needed only by the usually-empty
-    // hot-bucket fallback, and it is exactly the band keys' bits
-    // concatenated in band order — derivable from `keys` with native
-    // string functions for the hot subset alone.
+    // sign-bit keys over exact double upcasts ([[Similarity.signKeys]]);
+    // the hyperplane matrix is fetched once per task
     def hashPartition(it: Iterator[(Long, Array[Double])])
         : Iterator[(Long, Array[Long])] = {
-      var planes: Array[Array[Double]] = null // built once per task
+      lazy val planes = Similarity.sharedHyperplanes(expectedDim, totalBits)
       it.map { case (id, v) =>
-        if (v.length != expectedDim)
-          throw new IllegalArgumentException(
-            s"mixed embedding dimensions: id=$id has ${v.length}, expected $expectedDim")
-        if (planes == null) planes = Similarity.sharedHyperplanes(expectedDim, totalBits)
-        val keys = new Array[Long](nBands)
-        var b = 0
-        while (b < totalBits) {
-          val hb = planes(b)
-          var dot = 0.0
-          var i = 0
-          while (i < expectedDim) { dot += v(i) * hb(i); i += 1 }
-          keys(b / bandBits) = (keys(b / bandBits) << 1) | (if (dot >= 0) 1L else 0L)
-          b += 1
-        }
-        (id, keys)
+        Similarity.requireDim(id, v.length, expectedDim)
+        (id, Similarity.signKeys(v, planes, bandBits))
       }
     }
-    val sigs = (if (floatInput)
+    // persisted: the bucket-size aggregation and the small/hot split joins
+    // all read the banded fan-out, which would otherwise evaluate the
+    // hyperplane hashing once per consumer — at scale the signatures are
+    // bands×bandBits dot products each, the single biggest map-side cost.
+    // The persisted row is compact: id + bands longs.
+    val sigs = cache((if (floatInput)
         vecs.as[(Long, Array[Float])].mapPartitions(it =>
           hashPartition(it.map { case (id, v) => (id, upcast(v)) }))
       else vecs.as[(Long, Array[Double])].mapPartitions(hashPartition(_)))
-      .toDF("id", "keys")
-      // persisted: the bucket-size aggregation and the small/hot split
-      // joins all read the banded fan-out, which would otherwise evaluate
-      // the hyperplane hashing once per consumer — at scale the signatures are
-      // bands×bandBits dot products each, the single biggest map-side cost.
-      // Persisting the COMPACT per-vector row (id + bands longs, no sort
-      // string) keeps storage O(n·bands·8B).
-      .persist()
+      .toDF("id", "keys"))
     // the fan-out carries ONLY (id, band, key): the hot-bucket fallback's
-    // full-signature sort string is derived from the persisted `keys` for
-    // that (usually empty) subset instead of riding every banded row
-    // through the size aggregation and pairing exchanges
+    // sort key is joined from the persisted `keys` for that (usually empty)
+    // subset instead of riding every banded row through the size
+    // aggregation and pairing exchanges
     val banded = sigs.select(col("id"), posexplode(col("keys")))
       .toDF("id", "band", "key")
 
@@ -566,10 +538,10 @@ object Dedup {
       BucketPairs(banded, Seq("band", "key"), bucketCap, neighborWindow,
           _.join(sigs.select(col("id"), col("keys").as("sort")), "id"))
         .distinct())
-    val cand = candSeen.persist()
+    val cand = cache(candSeen)
 
-    // exact-cosine verification of candidates only (primitive loops,
-    // ascending-index accumulation like the exact path)
+    // exact-cosine verification of candidates only ([[Similarity.cosine]],
+    // as on the exact path)
     val candIds = cand.select(col("id_a").as("v_id"))
       .union(cand.select(col("id_b").as("v_id"))).distinct()
     // the stage decomposition priced the verify join at ~41 s of an ~80 s
@@ -589,23 +561,13 @@ object Dedup {
     val joinedCand = cand
       .join(vecById.withColumnRenamed("v_id", "id_a").withColumnRenamed("v_vec", "va"), "id_a")
       .join(vecById.withColumnRenamed("v_id", "id_b").withColumnRenamed("v_vec", "vb"), "id_b")
-    // ONE verify loop for both widths (a second hand-maintained copy could
-    // silently desynchronize and break the float/double bit-identity the
-    // spec pins): the float branch upcasts per element BEFORE the shared
-    // loop — exact, so accumulation is identical — while the SHUFFLED pair
-    // payload (the join output above, two vectors per candidate pair) stays
-    // at the source's 4-byte width
+    // one verify for both widths: the float branch upcasts per element
+    // before scoring — exact, so the cosines are bit-identical — while the
+    // SHUFFLED pair payload (the join output above, two vectors per
+    // candidate pair) stays at the source's 4-byte width
     def verifyPartition(it: Iterator[(Long, Long, Array[Double], Array[Double])])
         : Iterator[(Long, Long, Double)] = it.flatMap { case (idB, idA, va, vb) =>
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < va.length) {
-        dot += va(i) * vb(i); na += va(i) * va(i); nb += vb(i) * vb(i); i += 1
-      }
-      val c =
-        if (na == 0 || nb == 0) 0.0
-        else BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val c = Similarity.cosine(va, vb)
       if (c >= threshold) Some((idA, idB, c)) else None
     }
     val (verifiedSeen, verifiedObs) = Observed.counted((if (floatInput)
@@ -622,7 +584,6 @@ object Dedup {
     val verified = verifiedSeen.localCheckpoint()
     onStats.foreach(f => f(LshStats(n, bandBits, nBands, observedCount(candObs),
       observedCount(verifiedObs), designRecall(bandBits, nBands))))
-    cand.unpersist(); sigs.unpersist(); vecs.unpersist()
     verified.select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
 
@@ -712,7 +673,7 @@ object Dedup {
   def winnowedOverlapPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 2,
       maxDocFreq: Int = 1000, pairBudgetPerDoc: Int = 0,
-      onStats: Option[WinnowStats => Unit] = None): DataFrame = {
+      onStats: Option[WinnowStats => Unit] = None): DataFrame = withCaches { cache =>
     val spark = df.sparkSession
     import spark.implicits._
     // persisted: the frequency filter and the pairing reuse one
@@ -726,7 +687,7 @@ object Dedup {
         .map { case (id, t) => (id, TextStats.winnowFingerprints(t, k, w)) }
         .toDF("doc_id", "fps"),
       count(when(size(col("fps")) > 0, lit(1))).as("rows"))
-    val fps = fpLists.select(col("doc_id"), explode(col("fps")).as("fp")).persist()
+    val fps = cache(fpLists.select(col("doc_id"), explode(col("fps")).as("fp")))
     val freq = fps.groupBy("fp").agg(count(lit(1)).as("df_"))
     val cap: Long =
       if (pairBudgetPerDoc <= 0) maxDocFreq.toLong
@@ -770,7 +731,6 @@ object Dedup {
     onStats.foreach(f => f(WinnowStats(observedCount(docsObs),
       observedCount(freqObs, "fps"), cap, observedCount(freqObs, "dropped_fps"),
       observedCount(freqObs, "dropped_rows"), observedCount(outObs))))
-    fps.unpersist()
     out
   }
 
@@ -854,7 +814,7 @@ object Dedup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bucketCap: Int = 1000, neighborWindow: Int = 8,
       blocks: Int = -1, candBudgetPerDoc: Int = 16,
-      onStats: Option[SimhashStats => Unit] = None): DataFrame = {
+      onStats: Option[SimhashStats => Unit] = None): DataFrame = withCaches { cache =>
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 63]")
     require(blocks < 0 || (blocks > maxHamming && blocks <= 64),
       "blocks must exceed maxHamming (pigeonhole) and fit 64 bits")
@@ -875,31 +835,17 @@ object Dedup {
           if (f.isEmpty) None else Some((id, Hashing.simhash(f)))
         }
         .toDF("doc_id", "sim"))
-    val sigs = sigsSeen.persist()
+    val sigs = cache(sigsSeen)
     // solved (or pinned) block geometry; the solver's n is one cached pass
     // over the persisted signatures
     val m = if (blocks > 0) blocks
       else solveSimhashBlocks(sigs.count(), maxHamming, candBudgetPerDoc)
-    // blocks of near-equal width covering all 64 bits (first `rem` blocks
-    // get the extra bit); one table per (m − maxHamming)-subset, keyed on
-    // xxhash64(tableId, blockValues…) — hashing normalizes variable subset
-    // widths into one 64-bit join key
-    val base = 64 / m
-    val rem = 64 % m
-    val widths = Array.tabulate(m)(b => if (b < rem) base + 1 else base)
-    val offsets = widths.scanLeft(0)(_ + _)
-    def blockCol(b: Int): Column =
-      if (widths(b) == 64) col("sim")
-      else shiftrightunsigned(col("sim"), offsets(b))
-        .bitwiseAND(lit((1L << widths(b)) - 1))
-    // deterministic table order: Scala's combinations enumerate in
-    // lexicographic index order
-    val subsets = (0 until m).combinations(m - maxHamming).toArray
-    val keyCols = subsets.zipWithIndex.map { case (s, i) =>
-      xxhash64((lit(i) +: s.map(blockCol)): _*)
-    }
+    // one table per (m − maxHamming)-subset of blocks, keyed on its bits
+    // ([[Hashing.simhashTables]]) as native columns
+    val tables = Hashing.simhashTables(m, maxHamming)
     val banded = sigs.select(col("doc_id").as("id"), col("sim"),
-        posexplode(array(keyCols.toIndexedSeq: _*)))
+        posexplode(array(tables.toIndexedSeq.map { case (mask, shift) =>
+          shiftrightunsigned(col("sim").bitwiseAND(lit(mask)), shift) }: _*)))
       .toDF("id", "sim", "band", "key")
     val split = BucketPairs.split(banded, Seq("band", "key"), bucketCap)
     // hot buckets rank by the full signature as a binary string (bin() of a
@@ -915,9 +861,8 @@ object Dedup {
       .distinct())
     val out = outSeen.localCheckpoint() // eager: lets the caches release deterministically
     onStats.foreach(f => f(SimhashStats(observedCount(sigsObs), m,
-      subsets.length.toLong, split.bucketCount, split.hotBuckets, split.hotRows,
+      tables.length.toLong, split.bucketCount, split.hotBuckets, split.hotRows,
       observedCount(candObs), observedCount(outObs))))
-    sigs.unpersist()
     out
   }
 }

@@ -4,6 +4,12 @@ package graft.ops
   * engine-independent: the same value on every executor, every Spark
   * version, and in tests — unlike relying on an engine builtin for
   * minhash/LSH semantics. Used for minhash lanes and entity ids.
+  *
+  * It owns the text signatures' keys, each defined once for every caller:
+  * minhash band keys ([[minhashBandKeys]]: entity linking and minhash
+  * near-dup) and simhash table keys ([[simhashTables]]: batch and
+  * streaming simhash near-dup). The embedding signatures (sign-bit keys,
+  * cosine) live in [[Similarity]].
   */
 object Hashing {
 
@@ -73,8 +79,11 @@ object Hashing {
   def normalizedText(text: String): String =
     if (text == null) "" else text.toLowerCase.replaceAll("\\s+", " ").trim
 
-  /** Exact content fingerprint over the normalized text — the Scala-side
-    * twin of [[graft.ops.TextStats.fingerprint]]'s Column form. */
+  /** Exact content fingerprint over the normalized text ([[hash64]] of
+    * [[normalizedText]]): the key blank documents fall back to in the
+    * streaming simhash paths. Not interchangeable with
+    * [[graft.ops.TextStats.fingerprint]], the exact-dedup Column key, which
+    * hashes differently and does not trim. */
   def normalizedFingerprint(text: String): Long = hash64(normalizedText(text))
 
   /** SimHash feature set for a document: lowercased, whitespace-run-collapsed
@@ -98,26 +107,44 @@ object Hashing {
     if (f.isEmpty) 0L else simhash(f)
   }
 
-  /** The `maxHamming+1` near-equal-width band keys of a 64-bit simhash —
-    * the same pigeonhole banding [[graft.ops.Dedup.simhashPairs]] builds as
-    * Column expressions (first `64 % bands` bands get the extra bit): any
-    * pair within Hamming distance `bands-1` shares at least one whole band.
-    * Returned keys are band-local values (band index is the array index). */
-  def simhashBandKeys(sim: Long, bands: Int): Array[Long] = {
-    require(bands >= 1 && bands <= 64)
-    val base = 64 / bands
-    val rem = 64 % bands
-    val out = new Array[Long](bands)
-    var b = 0
-    var offset = 0
-    while (b < bands) {
-      val width = if (b < rem) base + 1 else base
-      out(b) = if (width == 64) sim else (sim >>> offset) & ((1L << width) - 1)
-      offset += width
-      b += 1
+  /** LSH band keys of a minhash signature: `bands` keys, each a splitmix-
+    * finalized fold over its `sig.length / bands` lanes, seeded with the
+    * band index. The one band fold of [[graft.link.Linker]] (whose state
+    * dirs persist these keys) and [[graft.ops.Dedup.minhashLsh]]. */
+  def minhashBandKeys(sig: Array[Long], bands: Int): Array[Long] = {
+    val rows = sig.length / bands
+    Array.tabulate(bands) { b =>
+      var acc = b.toLong
+      var j = b * rows
+      while (j < (b + 1) * rows) { acc = acc * 31 + sig(j); j += 1 }
+      splitmix64(acc)
     }
-    out
   }
+
+  /** The table geometry of a 64-bit simhash split into `m` near-equal
+    * blocks (the first `64 % m` one bit wider, block 0 lowest): one table
+    * per (m − r)-subset of blocks, in lexicographic subset order, as the
+    * (mask, shift) of its key `(sim & mask) >>> shift` — the subset's bits,
+    * shifted down to its lowest block. The key is injective per table, so
+    * two signatures share a table key iff they agree on every bit of its
+    * blocks; any pair within Hamming distance r leaves some subset intact
+    * (pigeonhole, Manku et al. WWW'07). At m = r + 1 each table is one
+    * block and its key is that block's value. One definition for
+    * [[graft.ops.Dedup.simhashPairs]] and
+    * [[graft.streaming.StreamDedup.nearDupVerdicts]]. */
+  def simhashTables(m: Int, r: Int): Array[(Long, Int)] = {
+    require(r >= 0 && m > r && m <= 64, s"need 0 <= r < m <= 64: m=$m r=$r")
+    val widths = Array.tabulate(m)(b => 64 / m + (if (b < 64 % m) 1 else 0))
+    val offsets = widths.scanLeft(0)(_ + _)
+    def blockMask(b: Int) = if (widths(b) == 64) -1L else ((1L << widths(b)) - 1) << offsets(b)
+    (0 until m).combinations(m - r)
+      .map(s => (s.map(blockMask).reduce(_ | _), offsets(s.head))).toArray
+  }
+
+  /** The keys of `sim` under [[simhashTables]] geometry `tables`, in table
+    * order. */
+  def simhashTableKeys(sim: Long, tables: Array[(Long, Int)]): Array[Long] =
+    tables.map { case (mask, shift) => (sim & mask) >>> shift }
 
   def jaccard(a: Set[String], b: Set[String]): Double = {
     if (a.isEmpty && b.isEmpty) 1.0

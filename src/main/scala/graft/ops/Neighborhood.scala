@@ -73,9 +73,11 @@ object Neighborhood {
     *            orderable, payload…) — typically only the oversized buckets
     * @param window each row pairs with its next `window` rows in
     *               (sort, id) order within its bucket
-    * @return (src, dst) with src < dst (ids normalized), plus every column
+    * @return (src, dst) with src <= dst (ids normalized), plus every column
     *         `c` of `big` but bucket and id as `c_a` (src's row) and `c_b`
-    *         (dst's row); each qualifying pair appears exactly once
+    *         (dst's row); each qualifying pair appears exactly once. Rows of
+    *         equal id pair too: which pairs to keep is the caller's rule
+    *         ([[BucketPairs]])
     */
   def sortedNeighborhoodPairs(big: DataFrame, window: Int): DataFrame = {
     require(window >= 1, "neighbor window must be >= 1")
@@ -101,6 +103,5 @@ object Neighborhood {
       .select((pick("id_a", "id_b").as("src") +: pick("id_b", "id_a").as("dst") +:
         carried.flatMap(c => Seq(pick(c + "_a", c + "_b").as(c + "_a"),
           pick(c + "_b", c + "_a").as(c + "_b")))): _*)
-      .filter(col("src") =!= col("dst"))
   }
 }

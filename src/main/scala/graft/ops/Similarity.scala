@@ -1,27 +1,59 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
-/** Similarity search over an embedding column (array<float>).
+/** Similarity search over an embedding column (array<float|double>), and
+  * the embedding signatures every embedding operator shares.
   *
   * Scale path: brute-force cosine top-k is the exact baseline (broadcast the
   * small query side — O(corpus) scan, no corpus shuffle). The LSH-bucketed
   * variant (random-hyperplane signs) prunes the corpus side to matching
   * buckets, turning the crossJoin into an equi-join keyed by signature
   * prefix — the IVF-style route at 10^9+ vectors.
+  *
+  * Signatures, each defined once here: [[cosine]] scores every pair of
+  * [[bruteForceTopK]], [[ivfTopK]], [[lshTopK]] and the embedding near-dup
+  * operators of [[Dedup]]; [[signKeys]] over [[sharedHyperplanes]] is the
+  * sign-bit LSH key of [[lshTopK]] and [[Dedup.embeddingCosinePairsLsh]].
+  * Both run on doubles; float vectors reach them through an exact upcast.
   */
 object Similarity {
 
-  /** Cosine similarity between two array<float|double> columns, computed in
-    * double precision via native higher-order functions (no UDF). */
-  def cosine(a: Column, b: Column): Column = {
-    def d(c: Column) = transform(c, v => v.cast("double"))
-    val dot = aggregate(zip_with(d(a), d(b), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(d(a), lit(0.0), (acc, x) => acc + x * x))
-    val nb = sqrt(aggregate(d(b), lit(0.0), (acc, x) => acc + x * x))
-    when(na === 0 || nb === 0, lit(0.0)).otherwise(dot / (na * nb))
+  /** Cosine of two equal-length vectors: dot product and norms summed in
+    * double precision in ascending index order, 0 when either norm is 0,
+    * rounded to 6 decimals HALF_UP (NaN and infinities pass unrounded, as
+    * SQL `round` leaves them). */
+  def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    val c = if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+    if (c.isNaN || c.isInfinite) c
+    else BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
+  /** Fails on a vector whose length differs from the operator's dimension:
+    * a cosine or a hyperplane dot over unequal lengths would mis-score. */
+  private[graft] def requireDim(id: Any, len: Int, dim: Int): Unit =
+    if (len != dim) throw new IllegalArgumentException(
+      s"mixed embedding dimensions: id=$id has $len, expected $dim")
+
+  /** `pairs` (`query_id`, `corpus_id` of any type, vectors `qv`, `cv`) as
+    * (`query_id`, `corpus_id`, `score`), scored by [[cosine]]. */
+  private def scored(pairs: DataFrame): DataFrame = {
+    val in = pairs.select(col("query_id"), col("corpus_id"),
+      col("qv").cast("array<double>"), col("cv").cast("array<double>"))
+    val out = StructType(in.schema.fields.take(2) :+ StructField("score", DoubleType))
+    in.map { r =>
+      val (qv, cv) = (r.getSeq[Double](2).toArray, r.getSeq[Double](3).toArray)
+      requireDim(r.get(1), cv.length, qv.length)
+      Row(r.get(0), r.get(1), cosine(qv, cv))
+    }(Encoders.row(out))
   }
 
   /** Exact brute-force top-k: for every query vector, the k nearest corpus
@@ -53,14 +85,12 @@ object Similarity {
       .select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
     val q = queries.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), 6))
+    val pairs = scored(c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("corpus_id")))
       .select(col("query_id").cast("long"), col("corpus_id").cast("long"), col("score"))
       .as[(Long, Long, Double)]
     // per-partition bounded top-k: worst element first, so `head` is the
     // eviction candidate; ordering mirrors the final (score desc, id asc)
-    val partial = scored.mapPartitions { it =>
+    val partial = pairs.mapPartitions { it =>
       val heaps = scala.collection.mutable.HashMap
         .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
       // PriorityQueue.head is the MAX per ordering; make "worse" the max:
@@ -85,27 +115,11 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"), col("score"), col("rank"))
   }
 
-  /** Random-hyperplane sign signature (LSH for cosine): `bits` sign bits
-    * from deterministic pseudo-random hyperplanes derived from the element
-    * index — native expressions only. */
-  def signBits(vec: Column, bits: Int): Column = {
-    // hyperplane h_b[i] = sin(splitmix-ish(i, b)) in [-1, 1], folded inline:
-    // deterministic, engine-independent, codegen'd
-    val sigs = (0 until bits).map { b =>
-      val dot = aggregate(
-        zip_with(transform(vec, v => v.cast("double")),
-          sequence(lit(0), size(vec) - 1),
-          (x, i) => x * sin((i.cast("double") + lit(1.0)) * lit((b + 1) * 12.9898) + lit(78.233))),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    sigs.reduce(_.bitwiseOR(_))
-  }
-
-  /** The deterministic hyperplane matrix used by [[signBits]] /
-    * [[signBitsLocal]]: h(b)(i) = sin((i+1)·(b+1)·12.9898 + 78.233). The
-    * matrix is a constant per (dim, bits) — hoist it out of per-row loops
-    * (the sin() calls dominate otherwise: bits × dim transcendentals/row). */
+  /** The deterministic hyperplane matrix of [[signKeys]]:
+    * h(b)(i) = sin((i+1)·(b+1)·12.9898 + 78.233), so plane (b, i) depends
+    * only on (b, i). The matrix is a constant per (dim, bits) — hoist it out
+    * of per-row loops (the sin() calls dominate otherwise: bits × dim
+    * transcendentals/row). */
   def hyperplanes(dim: Int, bits: Int): Array[Array[Double]] =
     Array.tabulate(bits)(b =>
       Array.tabulate(dim)(i => math.sin((i + 1.0) * ((b + 1) * 12.9898) + 78.233)))
@@ -140,24 +154,24 @@ object Similarity {
     }
   }
 
-  /** Plain-Scala twin of [[signBits]] (identical hyperplanes and bit layout)
-    * for hot mapPartitions paths where per-row primitive loops beat the
-    * interpreted higher-order-function expression. Pass a precomputed
-    * [[hyperplanes]] matrix when calling per row. */
-  def signBitsLocal(v: Array[Double], bits: Int,
-      planes: Array[Array[Double]] = null): Long = {
-    val h = if (planes != null) planes else hyperplanes(v.length, bits)
-    var sig = 0L
+  /** Random-hyperplane sign-bit keys of `v` (LSH for cosine): one key per
+    * `bandBits` consecutive rows of `planes` ([[sharedHyperplanes]]), bit j
+    * of key b — most significant first — set when
+    * v · planes(b·bandBits + j) ≥ 0, the dot summed in ascending index
+    * order. Fixed-length keys filled MSB first compare element-wise like
+    * the signature's bit string in band order. */
+  def signKeys(v: Array[Double], planes: Array[Array[Double]], bandBits: Int): Array[Long] = {
+    val keys = new Array[Long](planes.length / bandBits)
     var b = 0
-    while (b < bits) {
-      val hb = h(b)
+    while (b < planes.length) {
+      val hb = planes(b)
       var dot = 0.0
       var i = 0
       while (i < v.length) { dot += v(i) * hb(i); i += 1 }
-      if (dot >= 0) sig |= (1L << b)
+      keys(b / bandBits) = (keys(b / bandBits) << 1) | (if (dot >= 0) 1L else 0L)
       b += 1
     }
-    sig
+    keys
   }
 
   /** One centroid-update step shared by both trainers: divide accumulated
@@ -202,9 +216,7 @@ object Similarity {
           val sums = Array.fill(cs.length)(new Array[Double](dim))
           val counts = new Array[Long](cs.length)
           it.foreach { case (id, v) =>
-            if (v.length != dim)
-              throw new IllegalArgumentException(
-                s"mixed embedding dimensions: id=$id has ${v.length}, expected $dim")
+            requireDim(id, v.length, dim)
             val c = nearestCentroid(v, cs)
             counts(c) += 1
             var i = 0
@@ -251,9 +263,11 @@ object Similarity {
       if (distributedTrain) trainIvfCentroids(vecs, nCells, lloydIters)
       else {
         // deterministic training sample: smallest ids (stable under partitioning)
-        val sample = vecs.orderBy(col(idCol)).limit(trainSample).collect().map(_._2)
-        require(sample.nonEmpty, "cannot train a quantizer on an empty corpus")
-        val dim = sample.head.length
+        val ided = vecs.orderBy(col(idCol)).limit(trainSample).collect()
+        require(ided.nonEmpty, "cannot train a quantizer on an empty corpus")
+        val dim = ided.head._2.length
+        ided.foreach { case (id, v) => requireDim(id, v.length, dim) }
+        val sample = ided.map(_._2)
         var cs = Array.tabulate(math.min(nCells, sample.length))(i =>
           sample(((i.toLong * 2654435761L) % sample.length).toInt.abs).clone())
         (0 until lloydIters).foreach { _ =>
@@ -270,8 +284,10 @@ object Similarity {
         cs
       }
     val bcCentroids = spark.sparkContext.broadcast(centroids)
+    val dim = centroids.head.length
 
     val assigned = vecs.map { case (id, v) =>
+      requireDim(id, v.length, dim)
       (nearestCentroid(v, bcCentroids.value), id, v)
     }.toDF("cell", "corpus_id", "cv")
 
@@ -279,6 +295,7 @@ object Similarity {
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
       .flatMap { case (id, v) =>
+        requireDim(id, v.length, dim)
         nearestCentroids(v, bcCentroids.value, nProbe).map(c => (c, id, v))
       }.toDF("cell", "query_id", "qv")
 
@@ -290,10 +307,8 @@ object Similarity {
     // same payload disease the near-dup verify join had. Each corpus
     // vector lives in exactly ONE cell, so a pair meets at most once and
     // the distinct is a cheap safety net over narrow rows, not a dedup.
-    val cand = assigned.join(broadcast(probed), "cell")
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), 6))
-      .select("query_id", "corpus_id", "score").distinct()
+    val cand = scored(assigned.join(broadcast(probed), "cell")
+      .filter(col("query_id") =!= col("corpus_id"))).distinct()
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id").asc)
     cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -312,20 +327,20 @@ object Similarity {
     }.sortBy(x => (x._2, x._1)).take(n).map(_._1)
 
   /** LSH-bucketed approximate top-k: candidates must share one of `bands`
-    * signature bands with the query, then exact cosine re-rank. */
+    * [[signKeys]] bands with the query, then exact cosine re-rank. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, bits: Int = 16, bands: Int = 4): DataFrame = {
     require(bits % bands == 0)
     val bandBits = bits / bands
-    val mask = (1L << bandBits) - 1
-    def withBands(df: DataFrame, id: String, vec: String, out: String) =
-      df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-        .select(col(idCol).as(id), col(vecCol).as(vec),
-          signBits(col(vecCol), bits).as("sig"))
-        .select(col(id), col(vec), posexplode(array(
-          (0 until bands).map(b =>
-            shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask))): _*)))
-        .toDF(id, vec, "band", out)
+    def withBands(df: DataFrame, id: String, vec: String, out: String) = {
+      val in = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+        .select(col(idCol).as(id), col(vecCol).cast("array<double>").as(vec))
+      val enc = Encoders.row(in.schema.add("keys", ArrayType(LongType, containsNull = false)))
+      in.map { r =>
+        val v = r.getSeq[Double](1).toArray
+        Row(r.get(0), r.get(1), signKeys(v, sharedHyperplanes(v.length, bits), bandBits))
+      }(enc).select(col(id), col(vec), posexplode(col("keys"))).toDF(id, vec, "band", out)
+    }
     val c = withBands(corpus, "corpus_id", "cv", "ckey")
     val q = withBands(queries, "query_id", "qv", "qkey")
     // score map-side before the dedup: a pair colliding in several bands
@@ -334,11 +349,9 @@ object Similarity {
     // carries only (query_id, corpus_id, score) — re-scoring ≤ bands-1
     // extra times costs ~dim multiplies each, far cheaper than shuffling
     // two full vectors per candidate row
-    val cand = c.join(broadcast(q),
+    val cand = scored(c.join(broadcast(q),
         col("ckey") === col("qkey") && c("band") === q("band") &&
-          col("query_id") =!= col("corpus_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), 6))
-      .select("query_id", "corpus_id", "score").distinct()
+          col("query_id") =!= col("corpus_id"))).distinct()
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id").asc)
     cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

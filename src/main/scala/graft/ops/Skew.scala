@@ -29,16 +29,4 @@ object Skew {
     partial.groupBy(keyCol)
       .agg(sum("_c").as("cnt"), sum("_s").as("sum_value"))
   }
-
-  /** Salted self-join guard for LSH-style bucket joins: cap rows per bucket
-    * and report what was dropped (no silent truncation). Bucket sizes come
-    * from a hash-aggregate (map-side partial combine) joined back — a
-    * per-bucket window would funnel every row of the hot bucket (the very
-    * thing being guarded against) into ONE task to count it. */
-  def cappedBuckets(df: DataFrame, bucketCol: String, cap: Int): (DataFrame, DataFrame) = {
-    val sizes = df.groupBy(bucketCol).agg(count(lit(1)).as("_n"))
-    val counted = df.join(sizes, bucketCol)
-    (counted.filter(col("_n") <= cap).drop("_n"),
-      sizes.filter(col("_n") > cap).select(col(bucketCol)))
-  }
 }

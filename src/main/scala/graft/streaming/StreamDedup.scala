@@ -142,28 +142,6 @@ object StreamDedup {
     out.result().iterator
   }
 
-  /** Plain-Scala twin of the batch combinatorial blocking
-    * ([[graft.ops.Dedup.simhashPairs]]): the (m − r)-subset keys of a
-    * 64-bit simhash under the SAME near-equal block widths. One key per
-    * table, table order = lexicographic subset order — a pure function of
-    * (sim, m, r), so keyed state lines up across restarts. Key values fold
-    * through splitmix64 (the [[graft.link.Linker.bandKeysOf]] discipline);
-    * they need not equal the batch join keys — only the GEOMETRY (which
-    * block subsets key a table) is shared, and that is what sets the
-    * collision volume. */
-  private[graft] def subsetKeys(sim: Long, m: Int, r: Int): Array[Long] = {
-    val base = 64 / m
-    val rem = 64 % m
-    val widths = Array.tabulate(m)(b => if (b < rem) base + 1 else base)
-    val offsets = widths.scanLeft(0)(_ + _)
-    def block(b: Int): Long =
-      if (widths(b) == 64) sim
-      else (sim >>> offsets(b)) & ((1L << widths(b)) - 1)
-    (0 until m).combinations(m - r).zipWithIndex.map { case (s, i) =>
-      Hashing.splitmix64(s.foldLeft(i.toLong)((acc, b) => acc * 31 + block(b)))
-    }.toArray
-  }
-
   /** In-stream near-dup suppression at Hamming radius ≥ 1 — the streaming
     * twin of [[graft.ops.Dedup.simhashPairs]]' pigeonhole blocking. Each doc
     * explodes to its band keys; per-band keyed state holds the first
@@ -179,9 +157,14 @@ object StreamDedup {
     * simhashPairs pass is the completeness backstop — complete at the
     * radius except inside its own `bucketCap`-capped hot buckets).
     *
-    * Band geometry (`blocks`): the default −1 keeps the minimal
-    * maxHamming+1 single-block layout ([[Hashing.simhashBandKeys]] —
-    * restart-compatible with existing checkpoints). A deployment whose
+    * Band geometry (`blocks`): the tables and keys are the batch pass's own,
+    * [[Hashing.simhashTables]] — one definition, so a doc keys the same
+    * tables in the stream and in the batch. The default −1 keeps the
+    * minimal maxHamming+1 single-block layout, whose keys are the block
+    * values themselves: checkpoints written with it by earlier versions
+    * restart unchanged. Checkpoints written at `blocks` > maxHamming+1 by
+    * versions that folded subset keys through splitmix64 are re-keyed:
+    * start them fresh. A deployment whose
     * in-horizon doc count drives ⌊64/(r+1)⌋-bit band values hot (random
     * collisions grow as n²/2^width, saturating SigCap and degrading recall
     * to best-effort) passes the SOLVED m from
@@ -212,8 +195,7 @@ object StreamDedup {
       "blocks must exceed maxHamming (pigeonhole) and fit 64 bits")
     val spark = docs.sparkSession
     import spark.implicits._
-    val bands = maxHamming + 1
-    val m = blocks
+    val tables = Hashing.simhashTables(if (blocks < 0) maxHamming + 1 else blocks, maxHamming)
     docs
       .select(col(idCol).cast("long").as("docId"), col(tsCol).cast("timestamp").as("ts"),
         col(textCol).as("text"))
@@ -227,10 +209,7 @@ object StreamDedup {
           Iterator.single(BandRow(docId, ts, fp, -1, fp))
         } else {
           val sim = Hashing.simhash(features)
-          val keys =
-            if (m <= bands) Hashing.simhashBandKeys(sim, bands)
-            else subsetKeys(sim, m, maxHamming)
-          keys.iterator.zipWithIndex.map {
+          Hashing.simhashTableKeys(sim, tables).iterator.zipWithIndex.map {
             case (key, b) => BandRow(docId, ts, sim, b, key)
           }
         }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{BucketPairs, Dedup, Hashing}
+import graft.ops.{BucketPairs, Dedup, Hashing, Similarity}
 import graft.synth.WebDocs
 
 /** Dedup operator suite over crafted corpora with known duplicates. */
@@ -205,6 +205,29 @@ class DedupSpec extends SparkSpec {
     val msgs = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
       .take(8).map(t => Option(t.getMessage).getOrElse("")).mkString("|")
     assert(msgs.contains("mixed embedding dimensions"), msgs)
+  }
+
+  test("a near-dup operator that throws releases its caches; ANN ops fail on mixed dimensions too") {
+    import spark.implicits._
+    val df = Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0.9f, 0.1f, 0f, 0f)),
+      (3L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    def failsOnDims(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .take(8).map(t => Option(t.getMessage).getOrElse("")).mkString("|")
+      assert(msgs.contains("mixed embedding dimensions"), msgs)
+    }
+    // by id, not by count: the context cleaner may release an earlier
+    // test's checkpoint meanwhile
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    failsOnDims(Dedup.embeddingCosinePairsLsh(df, "vec_id", "embedding", 0.5).collect())
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the LSH path left a cache persisted after it threw")
+    // vector 3 is vector 1 truncated: they share every sign-bit key, so the
+    // LSH op scores the pair too
+    failsOnDims(Similarity.bruteForceTopK(df, df, "vec_id", "embedding", 2).collect())
+    failsOnDims(Similarity.lshTopK(df, df, "vec_id", "embedding", 2).collect())
+    failsOnDims(Similarity.ivfTopK(df, df, "vec_id", "embedding", 2).collect())
   }
 
   test("embedding near-dup LSH path (no driver collect) clusters like exact") {

@@ -9,7 +9,7 @@ import graft.ops.Hashing
 import graft.schema.Span
 
 /** Pure-JVM property tests (ScalaCheck runs them under sbt's test task):
-  * algebraic invariants of the span codec, the simhash banding, the
+  * algebraic invariants of the span codec, the simhash table keys, the
   * content-normalized fingerprint, and the encoder's truncation contract —
   * the randomized complement to the example-driven ParitySpec. */
 object GraftProperties extends Properties("graft") {
@@ -37,33 +37,39 @@ object GraftProperties extends Properties("graft") {
       Spans.indexNumber(bio) == (if (inBounds.isEmpty) 0 else bId)
     }
 
-  // ----- simhash banding: keys partition the 64 bits; pigeonhole recall
+  // ----- simhash table keys: pigeonhole recall at every block count; at
+  // m = r+1 the keys are the block values and reassemble the signature
 
-  property("simhashBandKeys reassemble to the original signature") =
+  property("simhash table keys at m = r+1 are the signature blocks") =
     forAll(Gen.long, Gen.choose(1, 64)) { (sim, bands) =>
-      val keys = Hashing.simhashBandKeys(sim, bands)
+      val keys = Hashing.simhashTableKeys(sim, Hashing.simhashTables(bands, bands - 1))
       val base = 64 / bands
       val rem = 64 % bands
       var rebuilt = 0L
       var offset = 0
-      keys.zipWithIndex.foreach { case (k, b) =>
+      val blockValues = keys.zipWithIndex.map { case (k, b) =>
         val width = if (b < rem) base + 1 else base
+        val block = if (width == 64) sim else (sim >>> offset) & ((1L << width) - 1)
         rebuilt |= k << offset
         offset += width
+        block
       }
-      keys.length == bands && rebuilt == sim
+      keys.length == bands && rebuilt == sim && keys.sameElements(blockValues)
     }
 
-  property("pigeonhole: hamming <= bands-1 implies a shared whole band") =
-    forAll(Gen.long, Gen.choose(2, 16), Gen.choose(0, 63)) { (sim, bands, seed0) =>
-      // flip at most bands-1 distinct bits
-      val nFlips = seed0 % bands // 0..bands-1
-      val bits = Iterator.iterate(Hashing.splitmix64(seed0))(Hashing.splitmix64)
-        .map(b => (b & 63L).toInt).distinct.take(nFlips).toList
-      val other = bits.foldLeft(sim)((s, b) => s ^ (1L << b))
-      val ka = Hashing.simhashBandKeys(sim, bands)
-      val kb = Hashing.simhashBandKeys(other, bands)
-      ka.zip(kb).exists { case (a, b) => a == b }
+  property("pigeonhole: hamming <= r implies a shared table key for m in r+1..r+3") =
+    forAll(Gen.long, Gen.choose(1, 15), Gen.choose(1, 3), Gen.choose(0, 63)) {
+      (sim, r, extra, seed0) =>
+        val m = r + extra
+        // flip at most r distinct bits
+        val nFlips = seed0 % (r + 1) // 0..r
+        val bits = Iterator.iterate(Hashing.splitmix64(seed0))(Hashing.splitmix64)
+          .map(b => (b & 63L).toInt).distinct.take(nFlips).toList
+        val other = bits.foldLeft(sim)((s, b) => s ^ (1L << b))
+        val tables = Hashing.simhashTables(m, r)
+        val ka = Hashing.simhashTableKeys(sim, tables)
+        val kb = Hashing.simhashTableKeys(other, tables)
+        ka.zip(kb).exists { case (a, b) => a == b }
     }
 
   // ----- normalized fingerprint: formatting-invariant, content-sensitive

@@ -130,4 +130,23 @@ class SimilaritySpec extends SparkSpec {
       }
     }
   }
+
+  test("float and double copies of the same vectors give identical top-k rows on every ANN op") {
+    // the one cosine kernel and the one sign-bit key both run on doubles
+    // and take float vectors through an exact upcast, so the stored width
+    // cannot move a score, a bucket or a rank
+    val dbl = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val qd = dbl.filter(col("vec_id") < 10)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[Long], r(3).asInstanceOf[Int]))
+    for ((name, op) <- Seq[(String, (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)](
+        "bruteForceTopK" -> (Similarity.bruteForceTopK(_, _, "vec_id", "embedding", 5)),
+        "ivfTopK" -> (Similarity.ivfTopK(_, _, "vec_id", "embedding", 5)),
+        "lshTopK" -> (Similarity.lshTopK(_, _, "vec_id", "embedding", 5)))) {
+      val f = rows(op(emb, queries))
+      assert(f.nonEmpty, name)
+      assert(f === rows(op(dbl, qd)), s"$name: float and double rows differ")
+    }
+  }
 }

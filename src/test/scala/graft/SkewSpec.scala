@@ -72,13 +72,4 @@ class SkewSpec extends SparkSpec {
       case (k, None) => spark.conf.unset(k)
     }
   }
-
-  test("cappedBuckets drops oversized buckets and reports them") {
-    import spark.implicits._
-    val df = (0 until 100).map(i => (if (i < 80) "big" else s"b$i", i)).toDF("bucket", "v")
-    val (kept, dropped) = Skew.cappedBuckets(df, "bucket", cap = 50)
-    assert(kept.filter(col("bucket") === "big").count() === 0)
-    assert(kept.count() === 20)
-    assert(dropped.as[String].collect().toSeq === Seq("big"))
-  }
 }

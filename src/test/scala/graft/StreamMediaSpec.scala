@@ -227,8 +227,9 @@ class StreamNearDupSpec extends SparkSpec {
 
     // geometry sanity: a radius-3 pair must share >= 1 of the 10 subset keys
     // (pigeonhole over 5 blocks), and the fan-out is exactly C(5,2)
-    val k1 = StreamDedup.subsetKeys(simBase, blocks, maxHamming)
-    val k2 = StreamDedup.subsetKeys(Hashing.simhashText(nearDup.get), blocks, maxHamming)
+    val tables = Hashing.simhashTables(blocks, maxHamming)
+    val k1 = Hashing.simhashTableKeys(simBase, tables)
+    val k2 = Hashing.simhashTableKeys(Hashing.simhashText(nearDup.get), tables)
     assert(k1.length === 10 && k2.length === 10)
     assert(k1.zip(k2).exists { case (a, b) => a == b },
       "an in-radius pair must collide in at least one solved-geometry table")

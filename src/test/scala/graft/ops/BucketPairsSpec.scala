@@ -128,4 +128,23 @@ class BucketPairsSpec extends SparkSpec {
     } yield ((100 + r).toLong, (100 + r + d).toLong)).sorted
     assert(hot === want)
   }
+
+  test("incremental mode: an equal-id new/existing pair is kept on the hot path as on the small path") {
+    import spark.implicits._
+    // one bucket: existing 5, 6, 7 and new 5, 8 — a window of 4 covers the
+    // whole bucket, so the hot path must emit the small path's pairs
+    val members = Seq((1L, 5L, false), (1L, 6L, false), (1L, 7L, false),
+        (1L, 5L, true), (1L, 8L, true)).toDF("bucket", "id", "is_new")
+    def pairsAt(cap: Int) = BucketPairs(members, Seq("bucket"), bucketCap = cap, window = 4,
+        _.withColumn("sort", col("id")), newCol = Some("is_new"))
+      .select("id_a", "is_new_a", "id_b", "is_new_b")
+      .as[(Long, Boolean, Long, Boolean)].collect().toSeq
+      .map { case (a, na, b, nb) =>
+        val Seq(x, y) = Seq((a, na), (b, nb)).sorted
+        (x, y)
+      }.sorted
+    val small = pairsAt(1000)
+    assert(small.contains(((5L, false), (5L, true))))
+    assert(pairsAt(2) === small)
+  }
 }
